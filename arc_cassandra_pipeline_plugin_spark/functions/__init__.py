@@ -124,6 +124,13 @@ def hash_bucket_wide(col: Column, buckets: int) -> Column:
     ).cast("int")
 
 
+#: driver-side iterate safety cap: graph operators replay their rounds on
+#: the driver only while the (rolled-up or symmetrized) edge list actually
+#: holds at most this many rows — past it the distributed path runs, so a
+#: web-scale graph degrades to correct, never to a driver blowup
+_DRIVER_EDGE_CAP = 65536
+
+
 def small_df(spark, rows, schema) -> DataFrame:
     """Driver-built control-plane DataFrame (LUTs, offsets, centroids,
     query-term lists) materialized in ONE partition.

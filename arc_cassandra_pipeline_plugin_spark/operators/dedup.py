@@ -24,8 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.functions import (
+    _DRIVER_EDGE_CAP,
     checkpoint_sized,
     ensure_parallelism,
     hex_hash64,
@@ -360,6 +362,55 @@ def simhash64(
     )
 
 
+def _driver_edges(edges: DataFrame, n: int) -> list | None:
+    """The checkpointed edge list as driver tuples when the driver replay
+    applies, else ``None``: at most ``_DRIVER_EDGE_CAP`` rows (the count
+    the checkpoint already observed, so the check is free) and a key type
+    whose Python ordering is Spark's (integers, dates, decimals, binary-
+    collation strings — doubles are excluded for NaN/-0.0 semantics). One
+    collect over the cached checkpoint blocks; past the cap the caller's
+    distributed rounds continue from the same checkpoint, so the fallback
+    never recomputes the upstream pair pipeline."""
+    key_type = edges.schema[0].dataType
+    if n > _DRIVER_EDGE_CAP or not (
+        isinstance(key_type, (T.IntegralType, T.DateType, T.DecimalType))
+        or key_type == T.StringType()
+    ):
+        return None
+    return [(r[0], r[1]) for r in edges.collect()]
+
+
+def _labels_df(spark, labels: dict, key_type: T.DataType) -> DataFrame:
+    """(doc_id, cluster_id) frame of a driver-replayed labeling, keyed by
+    the input id type."""
+    schema = T.StructType(
+        [T.StructField("doc_id", key_type), T.StructField("cluster_id", key_type)]
+    )
+    ordered = sorted(labels, key=lambda v: (v is None, v))
+    return small_df(spark, [(v, labels[v]) for v in ordered], schema)
+
+
+def _min_label_replay(rows: list, max_iter: int) -> tuple[dict, bool]:
+    """Driver replay of :func:`connected_components`'s synchronous rounds
+    over its collected edge list: every node takes the minimum label over
+    itself and its neighbors, with the distributed path's equi-join NULL
+    semantics (a NULL never propagates and keeps a NULL label), the same
+    ``max_iter`` and the same any-label-changed convergence test.
+    Returns (node -> label, converged)."""
+    adj: dict = {}
+    for s, d in rows:
+        nbrs = adj.setdefault(s, [])
+        if s is not None and d is not None:
+            nbrs.append(d)
+    label = {v: v for v in adj}
+    for _ in range(max_iter):
+        new = {v: min([label[v]] + [label[d] for d in nbrs]) for v, nbrs in adj.items()}
+        if new == label:
+            return label, True
+        label = new
+    return label, False
+
+
 def connected_components(
     pairs: DataFrame,
     col_a: str = "doc_a",
@@ -370,63 +421,73 @@ def connected_components(
     ``(doc_id, cluster_id)`` where ``cluster_id`` is the minimum doc id in
     the connected component. Singletons (docs in no pair) are not emitted.
 
-    Implementation: iterative min-label propagation — each round joins the
-    current labels across the (symmetrized) edge list and keeps the
-    per-node minimum, converging in O(diameter) rounds. Each round is one
-    broadcast-free equi-join + groupBy (two shuffles on the node id); the
-    loop breaks as soon as a round changes nothing. For web-scale graphs
-    the same loop structure hosts the large-star/small-star optimization
-    (Kiveris et al.) — dedup-cluster graphs are near-clique bundles with
-    tiny diameters, so plain propagation converges in a few rounds.
+    Implementation: synchronous min-label propagation — each round every
+    node takes the minimum label over itself and its (symmetrized)
+    neighbors, converging in O(diameter) rounds; the loop stops at the
+    first round that changes nothing. The symmetrized, distinct edge list
+    is materialized once (eager ``localCheckpoint``, whose Observation
+    also counts it). Within ``_DRIVER_EDGE_CAP`` edges the rounds replay
+    on the driver over one collect of that checkpoint — same rounds, same
+    ``max_iter``, same convergence test and warning, so even an
+    unconverged run returns the distributed path's labels. Past the cap
+    each round is one Spark job: an equi-join + groupBy on the node id,
+    with the change count riding the round's ``localCheckpoint`` (which
+    also cuts the iterative lineage). For web-scale, long-diameter graphs
+    prefer :func:`connected_components_star`.
 
-    Intermediate lineage is cut with ``localCheckpoint`` every round: an
-    iterative plan otherwise grows exponentially in Catalyst.
-
-    (r12 note: folding 2 propagation steps per materialized job was
-    A/B'd — without an intermediate pin the step-1 subtree duplicates and
-    recomputes (~2× slower); with a lazy localCheckpoint pin the
-    checkpoint-finalization jobs ate the saved scheduler floors (flat).
-    The one-step-per-job shape stands; the star variant keeps its lazy
-    mid-round pin, which DID win because it replaced an eager job.)
+    NULL ids follow the equi-join semantics: a NULL never propagates a
+    label, and a NULL id is emitted as one ``(NULL, NULL)`` row.
     """
+    from pyspark.sql import Observation
+
+    obs = Observation()
     edges = (
         pairs.select(F.col(col_a).alias("src"), F.col(col_b).alias("dst"))
         .union(pairs.select(F.col(col_b).alias("src"), F.col(col_a).alias("dst")))
         .distinct()
-        # materialize once: every iteration runs 2 actions over the edge
-        # list; without this the upstream pair pipeline (e.g. the whole
-        # MinHash+LSH chain) would be recomputed 2× per round
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        # materialize once: the driver replay collects it, and past the
+        # cap every round runs 2 actions over it; without this the
+        # upstream pair pipeline (e.g. the whole MinHash+LSH chain) would
+        # be recomputed 2x per round
         .localCheckpoint(eager=True)
     )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    )
-    from pyspark.sql import Observation
-
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
+    rows = _driver_edges(edges, obs.get["n"])
+    if rows is not None:
+        label, converged = _min_label_replay(rows, max_iter)
+        out = _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
+    else:
+        labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
+            "label", F.col("id")
         )
-        candidate = labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
-            "id",
-            F.col("label").alias("old_label"),
-            F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                "label"
-            ),
-        )
-        # convergence check rides the materialization action — one Spark
-        # job per round, not two
-        obs = Observation()
-        candidate = candidate.observe(
-            obs, F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("n_changed")
-        )
-        labels = candidate.drop("old_label").localCheckpoint(eager=True)
-        if (obs.get["n_changed"] or 0) == 0:
-            converged = True
-            break
+        converged = False
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            candidate = labels.join(
+                neighbor_min, labels.id == neighbor_min.src, "left"
+            ).select(
+                "id",
+                F.col("label").alias("old_label"),
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                ).alias("label"),
+            )
+            # convergence check rides the materialization action — one
+            # Spark job per round, not two
+            obs = Observation()
+            candidate = candidate.observe(
+                obs,
+                F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("n_changed"),
+            )
+            labels = candidate.drop("old_label").localCheckpoint(eager=True)
+            if (obs.get["n_changed"] or 0) == 0:
+                converged = True
+                break
+        out = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
     if not converged:
         import warnings
 
@@ -438,7 +499,7 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return out
 
 
 def incremental_dedup(
@@ -469,6 +530,39 @@ def incremental_dedup(
     )
 
 
+def _star_replay(rows: list, max_iter: int) -> tuple[dict, bool]:
+    """Driver replay of :func:`connected_components_star`'s rounds over its
+    collected edge list (symmetric, no self-loops, no NULLs): the same
+    large-star then small-star re-links and the same ``max_iter``; the
+    fixed point is tested on the exact edge set, which the distributed
+    path detects through its (count, bit_xor) checksum of that set.
+    Returns (node -> component label, converged)."""
+
+    def sym(es) -> set:
+        return {(u, v) for u, v in es if u != v} | {(v, u) for u, v in es if u != v}
+
+    e = set(rows)
+    converged = False
+    for _ in range(max_iter):
+        m: dict = {}
+        for u, v in e:
+            m[u] = min(m.get(u, u), v)
+        e1 = sym({(v, m[u]) for u, v in e if v > u})
+        ms: dict = {}
+        for u, v in e1:
+            if v < u:
+                ms[u] = min(ms[u], v) if u in ms else v
+        new = sym({(v, ms[u]) for u, v in e1 if v < u} | set(ms.items()))
+        if new == e:
+            converged = True
+            break
+        e = new
+    label: dict = {}
+    for u, v in e:
+        label[u] = min(label.get(u, u), v)
+    return label, converged
+
+
 def connected_components_star(
     pairs: DataFrame,
     col_a: str = "doc_a",
@@ -480,7 +574,7 @@ def connected_components_star(
     converges in O(log n) rounds on ANY graph, vs O(diameter) for the
     plain min-label propagation in :func:`connected_components`. Same
     output contract: (doc_id, cluster_id = component-min id), singletons
-    not emitted.
+    not emitted; self-loops and pairs with a NULL id are dropped.
 
     Per round, each op is one groupBy(min) + one join on the node id:
 
@@ -489,11 +583,17 @@ def connected_components_star(
       m = min({v in N(u): v <= u} ∪ {u})
 
     Both preserve connectivity and monotonically contract the graph onto
-    component-min stars. Lineage is cut per round (localCheckpoint);
-    convergence = edge multiset fixed point, detected with a count +
-    order-insensitive bit_xor checksum that RIDES the round's
-    materialization via Observation (no extra job per round; xor cannot
-    overflow, unlike sum under ANSI mode).
+    component-min stars; convergence = edge set fixed point.
+
+    The symmetrized edge list is materialized once (eager
+    ``localCheckpoint``) with its count observed. Within
+    ``_DRIVER_EDGE_CAP`` edges the rounds replay on the driver over one
+    collect of that checkpoint (same ``max_iter``, same fixed-point test,
+    same warning). Past the cap each round is one Spark job continuing
+    from the same checkpoint: lineage is cut per round (localCheckpoint)
+    and the fixed point is detected with a count + order-insensitive
+    bit_xor checksum that RIDES the round's materialization via
+    Observation (xor cannot overflow, unlike sum under ANSI mode).
     """
     from pyspark.sql import Observation
 
@@ -521,39 +621,50 @@ def connected_components_star(
         .distinct()
     )
 
-    converged = False
-    for _ in range(max_iter):
-        # large-star: m(u) over the FULL neighborhood; re-link big neighbors
-        m_large = edges.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            edges.filter(F.col("v") > F.col("u"))
-            .join(m_large, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # LAZY mid-round checkpoint (r12): the large-star output feeds the
-        # small-star half of the SAME job (one scheduler floor per round,
-        # not two — the old eager checkpoint here was its own job), while
-        # the lazy pin keeps one RDD identity for the three small-star
-        # references so the large-star subtree is not recomputed per
-        # reference
-        edges = _symmetrize(large).localCheckpoint(eager=False)
+    rows = _driver_edges(edges, sig[0])
+    if rows is not None:
+        label, converged = _star_replay(rows, max_iter)
+        out = _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
+    else:
+        converged = False
+        for _ in range(max_iter):
+            # large-star: m(u) over the FULL neighborhood; re-link big neighbors
+            m_large = edges.groupBy("u").agg(
+                F.least(F.min("v"), F.first("u")).alias("m")
+            )
+            large = (
+                edges.filter(F.col("v") > F.col("u"))
+                .join(m_large, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            )
+            # LAZY mid-round checkpoint: the large-star output feeds the
+            # small-star half of the SAME job (one scheduler floor per
+            # round, not two), while the lazy pin keeps one RDD identity
+            # for the three small-star references so the large-star
+            # subtree is not recomputed per reference
+            edges = _symmetrize(large).localCheckpoint(eager=False)
 
-        # small-star: m over the small-side neighborhood (v <= u) plus u
-        small_side = edges.filter(F.col("v") < F.col("u"))
-        m_small = small_side.groupBy("u").agg(F.min("v").alias("m"))
-        relink = (
-            small_side.join(m_small, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(m_small.select(F.col("u"), F.col("m").alias("v")))
-        )
-        edges, new_sig = _checkpoint_signed(_symmetrize(relink))
+            # small-star: m over the small-side neighborhood (v <= u) plus u
+            small_side = edges.filter(F.col("v") < F.col("u"))
+            m_small = small_side.groupBy("u").agg(F.min("v").alias("m"))
+            relink = (
+                small_side.join(m_small, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(m_small.select(F.col("u"), F.col("m").alias("v")))
+            )
+            edges, new_sig = _checkpoint_signed(_symmetrize(relink))
 
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
+            if new_sig == sig:
+                converged = True
+                break
+            sig = new_sig
+        # fixed point is a star forest: every node's min neighbor IS the
+        # component min; emit center nodes too (they neighbor their satellites)
+        labels = edges.groupBy("u").agg(F.min("v").alias("m"))
+        out = labels.select(
+            F.col("u").alias("doc_id"),
+            F.least(F.col("u"), F.col("m")).alias("cluster_id"),
+        )
     if not converged:
         import warnings
 
@@ -563,13 +674,7 @@ def connected_components_star(
             RuntimeWarning,
             stacklevel=2,
         )
-    # fixed point is a star forest: every node's min neighbor IS the
-    # component min; emit center nodes too (they neighbor their satellites)
-    labels = edges.groupBy("u").agg(F.min("v").alias("m"))
-    return labels.select(
-        F.col("u").alias("doc_id"),
-        F.least(F.col("u"), F.col("m")).alias("cluster_id"),
-    )
+    return out
 
 
 #: all-pairs bitmask verification is gated on the vocabulary fitting a

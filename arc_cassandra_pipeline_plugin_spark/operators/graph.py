@@ -20,13 +20,10 @@ import decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import _DRIVER_EDGE_CAP
+
 #: fixed-point scale for per-round rank values and edge contributions
 _SCALE = 12
-
-#: driver-iterate safety cap: a caller that declares its graph
-#: dimension-bounded gets the driver-side iterate only while the rolled-up
-#: edge list actually is bounded — past this the distributed path runs
-_DRIVER_EDGE_CAP = 65536
 
 _Q12 = decimal.Decimal(1).scaleb(-_SCALE)
 

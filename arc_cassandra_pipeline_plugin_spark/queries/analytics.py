@@ -4589,7 +4589,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded collect; past the cap the distributed hop/anti-join census
     # below runs unchanged). Was 26 jobs of hop joins + anti-joins for a
     # <=600-row edge set.
-    from arc_cassandra_pipeline_plugin_spark.operators.graph import _DRIVER_EDGE_CAP
+    from arc_cassandra_pipeline_plugin_spark.functions import _DRIVER_EDGE_CAP
 
     head = u.limit(_DRIVER_EDGE_CAP + 1).collect()
     if len(head) <= _DRIVER_EDGE_CAP:
@@ -4821,7 +4821,10 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds on ANY diameter, so the certified labels are the true
     transitive closure even on a long chain of adjacent core cells
     (plain min-label propagation hit max_iter on this grid's
-    path-shaped cell graph). Point data is scanned exactly once.
+    path-shaped cell graph). The core-cell edge set is bounded by the
+    grid, so the operator replays its rounds on the driver over one
+    collect of the checkpointed edges instead of one Spark job per
+    round. Point data is scanned exactly once.
 
     Determinism: floor(value/10) is an exactly-rounded IEEE op; all
     thresholds and labels are integers."""

@@ -52,6 +52,9 @@ def get_spark(app_name: str = "arc-cassandra-pipeline-plugin-spark") -> SparkSes
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
         .config("spark.ui.enabled", "false")
+        # no \r progress-bar redraws on stderr: they interleave with line-
+        # oriented tool output (e.g. selfcheck's per-query ``ok`` lines)
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
 

@@ -190,13 +190,16 @@ _REFERENCE_ARC_JSON = "/root/reference/src/it/resources/arc.json"
 
 
 def test_reference_arc_json_parses_verbatim(monkeypatch):
-    """The reference's own integration fixture parses byte-for-byte,
-    including its ${PWD} substitution (arc.json:10)."""
-    import os
-
+    """The reference's own integration fixture (committed as
+    ``tests/arc.json``) parses byte-for-byte, including its ${PWD}
+    substitution (arc.json:10). Where the reference checkout is present,
+    the committed copy must still match it, whitespace aside."""
     monkeypatch.setenv("PWD", "/jobs")
-    with open(_REFERENCE_ARC_JSON) as fh:
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "arc.json")) as fh:
         text = fh.read()
+    if os.path.exists(_REFERENCE_ARC_JSON):
+        with open(_REFERENCE_ARC_JSON) as fh:
+            assert fh.read().split() == text.split()
     p = parse_config(text)
     assert [s.stage_type for s in p.stages] == ["DelimitedExtract", "CassandraLoad"]
     assert p.stages[0].input_uri == "/jobs/input_data/customer/*.csv"
@@ -392,10 +395,13 @@ def test_graph_example_pipeline_runs(spark, monkeypatch):
 def test_dedup_example_pipeline_runs(spark, monkeypatch):
     """The shipped examples/dedup.conf: MinHash → LSH → connected
     components → canonical corpus, all from config; the config-driven
-    dedup equals the direct operator-call chain, and the gate holds."""
+    dedup equals the direct operator-call chain, and the gate holds —
+    on the driver-side components path and on the distributed one
+    (forced by a negative edge cap)."""
     import os
 
     from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
+    from arc_cassandra_pipeline_plugin_spark.operators import dedup
     from arc_cassandra_pipeline_plugin_spark.operators.dedup import (
         connected_components,
         lsh_candidate_pairs,
@@ -407,22 +413,25 @@ def test_dedup_example_pipeline_runs(spark, monkeypatch):
                         "examples", "dedup.conf")
     with open(path) as f:
         text = f.read()
-    ctx = PipelineContext(environment="test")
-    p = parse_config(text, ctx)
-    assert [s.stage_type for s in p.stages] == (
-        ["ParquetExtract"] + ["OperatorTransform"] * 3
-        + ["SQLTransform", "SQLValidate"]
-    )
-    p.run(spark, ctx)
+    for cc_path in ("driver", "distributed"):
+        if cc_path == "distributed":
+            monkeypatch.setattr(dedup, "_DRIVER_EDGE_CAP", -1)
+        ctx = PipelineContext(environment="test")
+        p = parse_config(text, ctx)
+        assert [s.stage_type for s in p.stages] == (
+            ["ParquetExtract"] + ["OperatorTransform"] * 3
+            + ["SQLTransform", "SQLValidate"]
+        )
+        p.run(spark, ctx)
 
-    docs = spark.table("documents")
-    sig = minhash_signature(docs, num_perm=16, shingle_k=5)
-    pairs = lsh_candidate_pairs(sig, num_perm=16, bands=4)
-    clusters = connected_components(pairs)
-    non_canon = {r["doc_id"] for r in clusters.filter("doc_id <> cluster_id").collect()}
-    got = {r["doc_id"] for r in spark.table("deduped_docs").collect()}
-    want = {r["doc_id"] for r in docs.collect()} - non_canon
-    assert got == want and len(got) > 0
+        docs = spark.table("documents")
+        sig = minhash_signature(docs, num_perm=16, shingle_k=5)
+        pairs = lsh_candidate_pairs(sig, num_perm=16, bands=4)
+        clusters = connected_components(pairs)
+        non_canon = {r["doc_id"] for r in clusters.filter("doc_id <> cluster_id").collect()}
+        got = {r["doc_id"] for r in spark.table("deduped_docs").collect()}
+        want = {r["doc_id"] for r in docs.collect()} - non_canon
+        assert got == want and len(got) > 0, cc_path
 
 
 def test_linkage_example_pipeline_runs(spark, monkeypatch):

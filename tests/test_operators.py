@@ -372,22 +372,39 @@ def test_tfidf_ranks_distinctive_terms_first(spark):
     assert top == {1: "alpha", 2: "beta", 3: "gamma"}
 
 
-def test_star_cc_matches_plain_propagation(spark):
+def _cc_paths(monkeypatch):
+    """Each connected-components path in turn: the driver-side replay, then
+    the distributed rounds (forced by a negative edge cap — even an empty
+    edge list is past it)."""
+    yield "driver"
+    monkeypatch.setattr(D, "_DRIVER_EDGE_CAP", -1)
+    yield "distributed"
+
+
+def _cc_rows(df):
+    return sorted(
+        ((r["doc_id"], r["cluster_id"]) for r in df.collect()),
+        key=lambda t: (t[0] is None, t[0]),
+    )
+
+
+def test_star_cc_matches_plain_propagation(spark, monkeypatch):
     """large-star/small-star ≡ min-label propagation on a mixed graph."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (5, 6)],
         "doc_a BIGINT, doc_b BIGINT",
     )
-    star = {(r["doc_id"], r["cluster_id"])
-            for r in D.connected_components_star(pairs).collect()}
-    plain = {(r["doc_id"], r["cluster_id"])
-             for r in D.connected_components(pairs).collect()}
-    assert star == plain
-    assert star == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10),
-                    (20, 20), (21, 20), (5, 5), (6, 5)}
+    for path in _cc_paths(monkeypatch):
+        star = {(r["doc_id"], r["cluster_id"])
+                for r in D.connected_components_star(pairs).collect()}
+        plain = {(r["doc_id"], r["cluster_id"])
+                 for r in D.connected_components(pairs).collect()}
+        assert star == plain, path
+        assert star == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10),
+                        (20, 20), (21, 20), (5, 5), (6, 5)}, path
 
 
-def test_star_cc_long_diameter_converges_fast(spark):
+def test_star_cc_long_diameter_converges_fast(spark, monkeypatch):
     """A 200-node path (diameter 200) — plain propagation needs ~200 rounds
     (would trip its max_iter=25 warning); the star algorithm reaches the
     fixed point in O(log n) rounds with no warning."""
@@ -396,11 +413,116 @@ def test_star_cc_long_diameter_converges_fast(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "doc_a BIGINT, doc_b BIGINT"
     )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)  # any warning = failure
-        labels = D.connected_components_star(pairs, max_iter=30).collect()
-    assert {r["cluster_id"] for r in labels} == {0}
-    assert len(labels) == 201
+    for path in _cc_paths(monkeypatch):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)  # any warning = failure
+            labels = D.connected_components_star(pairs, max_iter=30).collect()
+        assert {r["cluster_id"] for r in labels} == {0}, path
+        assert len(labels) == 201, path
+
+
+def test_cc_null_ids_same_on_both_paths(spark, monkeypatch):
+    """NULL ids in either column: plain CC never propagates through a NULL
+    (equi-join semantics) and emits it as one (NULL, NULL) row; the star
+    variant drops every pair holding a NULL. Both paths agree."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 2), (3, None), (None, None), (4, 5), (5, None)],
+        "doc_a BIGINT, doc_b BIGINT",
+    )
+    for path in _cc_paths(monkeypatch):
+        assert _cc_rows(D.connected_components(pairs)) == [
+            (1, 1), (2, 1), (3, 3), (4, 4), (5, 4), (None, None)
+        ], path
+        assert _cc_rows(D.connected_components_star(pairs)) == [
+            (1, 1), (2, 1), (4, 4), (5, 4)
+        ], path
+
+
+def test_cc_string_ids_self_loops_duplicates(spark, monkeypatch):
+    """String ids (binary order, so "B" < "a"), self-loops, duplicate and
+    reversed pairs: same labels on both paths. A self-loop-only node is
+    emitted by plain CC and dropped by the star variant (which filters
+    u = v edges)."""
+    pairs = spark.createDataFrame(
+        [("b", "a"), ("a", "b"), ("b", "a"), ("c", "b"), ("c", "c"),
+         ("z", "z"), ("B", "c"), ("x", "y"), ("y", "x")],
+        "doc_a STRING, doc_b STRING",
+    )
+    want = [("B", "B"), ("a", "B"), ("b", "B"), ("c", "B"), ("x", "x"), ("y", "x")]
+    for path in _cc_paths(monkeypatch):
+        plain = D.connected_components(pairs)
+        assert plain.schema["doc_id"].dataType.simpleString() == "string", path
+        assert _cc_rows(plain) == sorted(want + [("z", "z")]), path
+        assert _cc_rows(D.connected_components_star(pairs)) == want, path
+
+
+def test_cc_double_ids_take_the_distributed_path(spark, monkeypatch):
+    """Float ids (NaN / -0.0 order differently in Python) never take the
+    driver replay; under the default cap they still get correct labels."""
+
+    def no_replay(*_):
+        raise AssertionError("driver replay taken for float ids")
+
+    monkeypatch.setattr(D, "_min_label_replay", no_replay)
+    monkeypatch.setattr(D, "_star_replay", no_replay)
+    pairs = spark.createDataFrame(
+        [(1.5, 2.5), (2.5, 0.5), (7.0, 8.0)], "doc_a DOUBLE, doc_b DOUBLE"
+    )
+    want = [(0.5, 0.5), (1.5, 0.5), (2.5, 0.5), (7.0, 7.0), (8.0, 7.0)]
+    assert _cc_rows(D.connected_components(pairs)) == want
+    assert _cc_rows(D.connected_components_star(pairs)) == want
+
+
+def test_cc_empty_pairs(spark, monkeypatch):
+    pairs = spark.createDataFrame([], "doc_a INT, doc_b INT")
+    for path in _cc_paths(monkeypatch):
+        for op in (D.connected_components, D.connected_components_star):
+            out = op(pairs)
+            assert out.collect() == [], path
+            assert [f.dataType.simpleString() for f in out.schema] == ["int", "int"], path
+
+
+def test_cc_unconverged_run_same_on_both_paths(spark, monkeypatch):
+    """A 200-node path under plain CC with max_iter=25 stops unconverged:
+    both paths warn and return the same partial labels (node i carries
+    max(0, i - 25) after 25 synchronous rounds). The star variant cut at
+    2 rounds also warns and agrees round for round."""
+    import pytest
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    want = [(i, max(0, i - 25)) for i in range(201)]
+    star = {}
+    for path in _cc_paths(monkeypatch):
+        with pytest.warns(RuntimeWarning, match="max_iter=25"):
+            out = D.connected_components(pairs, max_iter=25)
+        assert _cc_rows(out) == want, path
+        with pytest.warns(RuntimeWarning, match="fixed point in 2 rounds"):
+            star[path] = _cc_rows(D.connected_components_star(pairs, max_iter=2))
+    assert star["driver"] == star["distributed"]
+    assert len({c for _, c in star["driver"]}) > 1  # really unconverged
+
+
+def test_star_cc_bounded_graph_job_count(spark, monkeypatch):
+    """Guard against the per-round job tax: one bounded
+    connected_components_star call, result collected, stays within 4
+    Spark jobs (edge checkpoint + its collect + the result collect), where
+    the distributed rounds on the same 50-node path take more."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(50)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    sc = spark.sparkContext
+
+    def jobs_for_one_call():
+        ids0 = set(sc.statusTracker().getJobIdsForGroup())
+        rows = D.connected_components_star(pairs).collect()
+        assert {r["cluster_id"] for r in rows} == {0} and len(rows) == 51
+        return len(set(sc.statusTracker().getJobIdsForGroup()) - ids0)
+
+    counts = {path: jobs_for_one_call() for path in _cc_paths(monkeypatch)}
+    assert counts["driver"] <= 4, counts
+    assert counts["distributed"] > 4, counts
 
 
 def test_pii_redaction_semantics(spark):
