@@ -133,16 +133,36 @@ _DRIVER_EDGE_CAP = 65536
 
 def small_df(spark, rows, schema) -> DataFrame:
     """Driver-built control-plane DataFrame (LUTs, offsets, centroids,
-    query-term lists) materialized in ONE partition.
+    query-term lists, driver-replayed labels and ranks).
 
-    ``spark.createDataFrame(list)`` parallelizes the rows over
-    ``defaultParallelism`` slices, so a handful of literal rows schedules
-    32 Python-worker tasks at ``local[32]`` (measured ~2x the wall of a
-    single-slice parallelize per call, and multiple seconds of pure
-    worker-spawn CPU). These frames are O(k)/O(buckets) literals that ride
-    broadcast joins anyway — one partition is the right shape at any
-    scale, cluster or local."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    ``schema`` is a ``StructType`` or a DDL string. Each row is checked
+    against it with PySpark's own type verifier (a ``str`` into BIGINT
+    raises, as ``createDataFrame(verifySchema=True)`` does), converted by
+    ``StructType.toInternal`` and laid out as a ``pyarrow.Table`` of the
+    schema's Arrow types. Spark decodes that table in the JVM and plans it
+    as a ``LocalRelation``: no Python worker ever runs for the frame,
+    ``collect`` needs no job, and building its broadcast or writing it
+    directly is one JVM job of at most min(rows, cores) tasks. A decimal
+    whose scale exceeds the column's raises rather than rounding.
+
+    The frame is not a ``parallelize``: an RDD of Python rows is a
+    ``PythonRDD``, so every action over it starts a ``pyspark.worker``
+    task (~300 ms a replay on 4 cores, the first one also forking the
+    worker daemon) just to hand a few literal rows to the JVM."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _make_type_verifier
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    cols: list[list] = [[] for _ in struct.fields]
+    for row in rows:
+        verify(row)
+        for col, v in zip(cols, struct.toInternal(row)):
+            col.append(v)
+    arrow = to_arrow_schema(struct)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 def checkpoint_sized(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:

@@ -4824,10 +4824,15 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path-shaped cell graph). The core-cell edge set is bounded by the
     grid, so the operator replays its rounds on the driver over one
     collect of the checkpointed edges instead of one Spark job per
-    round. Point data is scanned exactly once.
+    round. Point data is scanned exactly once: the cell aggregate is one
+    eager ``localCheckpoint`` whose Observation carries the point total
+    (``coalesce(sum(cnt), 0)``), and the probes, the right side and the
+    final join all read that checkpoint.
 
     Determinism: floor(value/10) is an exactly-rounded IEEE op; all
     thresholds and labels are integers."""
+    from pyspark.sql import Observation
+
     from arc_cassandra_pipeline_plugin_spark.operators.dedup import (
         connected_components_star,
     )
@@ -4836,8 +4841,14 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") / 10.0).cast("bigint").alias("vb"),
         F.hour("ts").cast("bigint").alias("hb"),
     )
-    total = ev.count()
-    cells = ev.groupBy("vb", "hb").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    obs = Observation()
+    cells = (
+        ev.groupBy("vb", "hb")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .observe(obs, F.coalesce(F.sum("cnt"), F.lit(0)).alias("total"))
+        .localCheckpoint(eager=True)
+    )
+    total = obs.get["total"]
     core = cells.filter(F.col("cnt") * 600 > F.lit(total)).select(
         (F.col("vb") * 24 + F.col("hb")).alias("cell"), "vb", "hb", "cnt"
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
+from arc_cassandra_pipeline_plugin_spark.functions import small_df
 from arc_cassandra_pipeline_plugin_spark.stages.base import (
     PipelineStage,
     record_frame_metrics,
@@ -56,7 +57,7 @@ class ExtractStage(PipelineStage):
         if ctx.is_streaming:
             # Streaming guard: extract is explicitly not supported under a
             # streaming context (CassandraExtract.scala:92-94).
-            df = spark.createDataFrame([], self._empty_schema())
+            df = small_df(spark, [], self._empty_schema())
         else:
             df = self._read(spark, ctx)
 

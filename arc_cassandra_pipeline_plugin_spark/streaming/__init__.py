@@ -541,7 +541,7 @@ def events_stream_flushed(
                 "props": None,
             }
             rows.append(tuple(vals[f.name] for f in raw.schema.fields))
-        # two literal rows — one slice, not a defaultParallelism fan-out
+        # two literal rows: a LocalRelation, written by at most two JVM tasks
         small_df(spark, rows, raw.schema).write.mode("overwrite").parquet(sent)
     _note_stream_source(spark, ev_src)
     df = (

@@ -1,0 +1,147 @@
+"""``functions.small_df``: driver-built frames round-trip every value type
+the call sites pass, keep the type checks of ``createDataFrame``, and plan
+as a JVM ``LocalRelation`` (no Python worker, no job to collect)."""
+
+from __future__ import annotations
+
+import datetime
+import math
+from decimal import Decimal
+
+import pytest
+from pyspark.sql import types as T
+
+from arc_cassandra_pipeline_plugin_spark.functions import small_df
+from tests.conftest import SF_SMALL
+
+_DDL = (
+    "i INT, b BIGINT, s STRING, d DOUBLE, m DECIMAL(12,3), dt DATE, "
+    "ts TIMESTAMP, tn TIMESTAMP_NTZ"
+)
+
+_ROWS = [
+    (
+        1,
+        2**40,
+        "a",
+        1.5,
+        Decimal("123456789.125"),
+        datetime.date(2020, 2, 29),
+        datetime.datetime(2020, 2, 29, 23, 59, 59, 999999),
+        datetime.datetime(2020, 2, 29, 0, 0, 0, 1),
+    ),
+    (
+        -(2**31),
+        -(2**63),
+        "ünïcödé ✓",
+        float("nan"),
+        Decimal("-0.001"),
+        datetime.date(1969, 12, 31),
+        datetime.datetime(1900, 1, 1),
+        datetime.datetime(9999, 12, 31, 23, 59, 59),
+    ),
+    (2**31 - 1, 2**63 - 1, "", -0.0, Decimal("0.000"), datetime.date(1, 1, 1),
+     datetime.datetime(1970, 1, 1), datetime.datetime(1970, 1, 1)),
+    (None, None, None, None, None, None, None, None),
+]
+
+
+def _cells(rows):
+    """Row tuples with NaN made comparable and -0.0 told apart from 0.0."""
+
+    def cell(v):
+        if isinstance(v, float):
+            return ("nan",) if math.isnan(v) else (v, math.copysign(1.0, v))
+        return v
+
+    return [tuple(cell(v) for v in r) for r in rows]
+
+
+def _jobs(spark, action):
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = action()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+@pytest.mark.parametrize("schema_form", ["ddl", "struct"])
+def test_small_df_round_trips_every_type(spark, schema_form):
+    schema = _DDL if schema_form == "ddl" else T.StructType.fromDDL(_DDL)
+    df = small_df(spark, _ROWS, schema)
+    assert df.schema == T.StructType.fromDDL(_DDL)
+    assert _cells(df.collect()) == _cells(_ROWS)
+
+
+def test_small_df_round_trips_collected_timestamps(spark):
+    """The streaming sentinel path feeds back values a Spark ``collect()``
+    produced, under the frame's own schema."""
+    src = spark.sql(
+        "SELECT * FROM VALUES "
+        "(TIMESTAMP'2024-03-10 02:30:00.123456', TIMESTAMP_NTZ'2024-03-10 02:30:00.5'), "
+        "(TIMESTAMP'1899-12-31 23:59:59', TIMESTAMP_NTZ'1899-12-31 23:59:59'), "
+        "(CAST(NULL AS TIMESTAMP), CAST(NULL AS TIMESTAMP_NTZ)) AS t(ts, tn)"
+    )
+    rows = src.collect()
+    df = small_df(spark, rows, src.schema)
+    assert df.schema == src.schema
+    assert df.collect() == rows
+    # the instants, not just their Python rendering, are Spark's
+    assert df.selectExpr("unix_micros(ts)").collect() == src.selectExpr(
+        "unix_micros(ts)"
+    ).collect()
+
+
+@pytest.mark.parametrize("schema_form", ["ddl", "struct"])
+def test_small_df_empty(spark, schema_form):
+    schema = _DDL if schema_form == "ddl" else T.StructType.fromDDL(_DDL)
+    df = small_df(spark, [], schema)
+    assert df.schema == T.StructType.fromDDL(_DDL)
+    assert df.collect() == []
+    assert df.count() == 0
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([("x",)], "a BIGINT"),
+        ([(1,)], "a STRING"),
+        ([(1.5,)], "a INT"),
+        ([("2020-01-01",)], "a DATE"),
+        ([(1, 2)], "a INT"),
+        ([(Decimal("1.2345"),)], "a DECIMAL(10,2)"),
+    ],
+)
+def test_small_df_rejects_mismatched_values(spark, rows, ddl):
+    with pytest.raises(Exception):
+        small_df(spark, rows, ddl).collect()
+
+
+def test_small_df_rejects_null_in_non_nullable_field(spark):
+    schema = T.StructType([T.StructField("a", T.LongType(), nullable=False)])
+    with pytest.raises(Exception):
+        small_df(spark, [(None,)], schema).collect()
+
+
+def test_small_df_is_a_jvm_local_relation(spark):
+    df = small_df(spark, [(k, float(k)) for k in range(25)], "k INT, v DOUBLE")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    rows, jobs = _jobs(spark, df.collect)
+    assert jobs == 0
+    assert [r["k"] for r in rows] == list(range(25))
+
+
+def test_events_grid_dbscan_job_count(spark):
+    """One scan of the points into a checkpoint whose Observation carries
+    the total, a driver-replayed component step, and a return leg with no
+    job: 9 jobs for build + collect (14 when a count job and three cell
+    aggregates each scanned the points and the labels came back through a
+    Python worker)."""
+    from arc_cassandra_pipeline_plugin_spark.queries import load_all
+
+    q = load_all()["events_grid_dbscan"]
+    q.fn(spark, SF_SMALL).collect()  # schema and fixture caches warm
+    _, jobs = _jobs(spark, lambda: q.fn(spark, SF_SMALL).collect())
+    assert jobs <= 9, jobs

@@ -1,11 +1,13 @@
 """Stage-level profiler for one certified query (optimization guide §1).
 
-Runs a named query into the noop sink on a bench-identical session with
-event logging enabled, then parses the event log into a per-stage table:
-wall duration, summed executor run time, task count, input bytes, shuffle
-read/write bytes — the attribution the Spark UI would show, reconstructed
-headlessly. One untimed warmup pass precedes the timed pass so JIT and
-codegen compile outside the measurement (bench protocol parity).
+Runs a named query into the noop sink on the engine's own session
+(``sources.get_spark``; the event-log confs reach the JVM through
+``PYSPARK_SUBMIT_ARGS``, as in ``perfbench/run.py``), then parses the
+event log into a per-stage table: wall duration, summed executor run
+time, task count, input bytes, shuffle read/write bytes — the
+attribution the Spark UI would show, reconstructed headlessly. One
+untimed warmup pass precedes the timed pass so JIT and codegen compile
+outside the measurement (bench protocol parity).
 
 Usage:
   python tools/profile_query.py <name> [--sf-dir DIR] [--trials N] [--plan OUT]
@@ -20,35 +22,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import SparkSession  # noqa: E402
-
-
-def build_session(event_dir: str) -> SparkSession:
-    """The bench session (sources.get_spark config) + event logging."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_query")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def parse_event_log(event_dir: str, t_mark_ms: float):
@@ -141,13 +120,22 @@ def main() -> int:
 
     from bench import _split_fixture_dir  # noqa: E402
     from arc_cassandra_pipeline_plugin_spark.queries import load_all  # noqa: E402
+    from arc_cassandra_pipeline_plugin_spark.sources import get_spark  # noqa: E402
 
     sf_dir = args.sf_dir or _split_fixture_dir("/root/testdata/sf0.1")
     registry = load_all()
     q = registry[args.name]
 
     event_dir = tempfile.mkdtemp(prefix="profile_evlog_")
-    spark = build_session(event_dir)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(
+        [
+            "--conf", "spark.eventLog.enabled=true",
+            "--conf", f"spark.eventLog.dir=file://{event_dir}",
+            "--conf", "spark.eventLog.compress=false",
+            "pyspark-shell",
+        ]
+    )
+    spark = get_spark("profile_query")
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.plan:
