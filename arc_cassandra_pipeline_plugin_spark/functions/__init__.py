@@ -124,11 +124,37 @@ def hash_bucket_wide(col: Column, buckets: int) -> Column:
     ).cast("int")
 
 
-#: driver-side iterate safety cap: graph operators replay their rounds on
-#: the driver only while the (rolled-up or symmetrized) edge list actually
-#: holds at most this many rows — past it the distributed path runs, so a
-#: web-scale graph degrades to correct, never to a driver blowup
+#: driver-replay safety cap: see :func:`driver_rows`
 _DRIVER_EDGE_CAP = 65536
+
+
+def driver_rows(df: DataFrame, n: int | None = None) -> list | None:
+    """The rows of ``df`` on the driver when a driver replay of an iterate
+    over it applies, else ``None`` — the one bounded-collect contract of
+    the graph and connected-components operators.
+
+    A replay applies when the frame's first column (the node key) has a
+    type whose Python equality and ordering are Spark's — integers, dates,
+    decimals, binary-collation strings — and the frame holds at most
+    ``_DRIVER_EDGE_CAP`` rows. Doubles are excluded: Spark groups every
+    NaN key into one and -0.0 with 0.0, while a Python ``dict`` keeps each
+    NaN apart. ``n`` is a row count the caller already observed on its
+    checkpoint; with it, past the cap costs no job and within it one
+    collect. Without it one ``limit(cap + 1)`` collect decides. Past the
+    cap the caller runs its distributed rounds, so a web-scale graph
+    degrades to correct, never to a driver blowup."""
+    from pyspark.sql import types as T
+
+    key = df.schema[0].dataType
+    if not (
+        isinstance(key, (T.IntegralType, T.DateType, T.DecimalType))
+        or key == T.StringType()
+    ):
+        return None
+    if n is not None:
+        return df.collect() if n <= _DRIVER_EDGE_CAP else None
+    rows = df.limit(_DRIVER_EDGE_CAP + 1).collect()
+    return rows if len(rows) <= _DRIVER_EDGE_CAP else None
 
 
 def small_df(spark, rows, schema) -> DataFrame:

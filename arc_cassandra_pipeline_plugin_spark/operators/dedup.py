@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.functions import (
-    _DRIVER_EDGE_CAP,
     checkpoint_sized,
+    driver_rows,
     ensure_parallelism,
     hex_hash64,
     small_df,
@@ -362,24 +362,6 @@ def simhash64(
     )
 
 
-def _driver_edges(edges: DataFrame, n: int) -> list | None:
-    """The checkpointed edge list as driver tuples when the driver replay
-    applies, else ``None``: at most ``_DRIVER_EDGE_CAP`` rows (the count
-    the checkpoint already observed, so the check is free) and a key type
-    whose Python ordering is Spark's (integers, dates, decimals, binary-
-    collation strings — doubles are excluded for NaN/-0.0 semantics). One
-    collect over the cached checkpoint blocks; past the cap the caller's
-    distributed rounds continue from the same checkpoint, so the fallback
-    never recomputes the upstream pair pipeline."""
-    key_type = edges.schema[0].dataType
-    if n > _DRIVER_EDGE_CAP or not (
-        isinstance(key_type, (T.IntegralType, T.DateType, T.DecimalType))
-        or key_type == T.StringType()
-    ):
-        return None
-    return [(r[0], r[1]) for r in edges.collect()]
-
-
 def _labels_df(spark, labels: dict, key_type: T.DataType) -> DataFrame:
     """(doc_id, cluster_id) frame of a driver-replayed labeling, keyed by
     the input id type."""
@@ -426,10 +408,10 @@ def connected_components(
     neighbors, converging in O(diameter) rounds; the loop stops at the
     first round that changes nothing. The symmetrized, distinct edge list
     is materialized once (eager ``localCheckpoint``, whose Observation
-    also counts it). Within ``_DRIVER_EDGE_CAP`` edges the rounds replay
-    on the driver over one collect of that checkpoint — same rounds, same
-    ``max_iter``, same convergence test and warning, so even an
-    unconverged run returns the distributed path's labels. Past the cap
+    also counts it). When ``functions.driver_rows`` admits it the rounds
+    replay on the driver over one collect of that checkpoint — same
+    rounds, same ``max_iter``, same convergence test and warning, so even
+    an unconverged run returns the distributed path's labels. Otherwise
     each round is one Spark job: an equi-join + groupBy on the node id,
     with the change count riding the round's ``localCheckpoint`` (which
     also cuts the iterative lineage). For web-scale, long-diameter graphs
@@ -452,7 +434,7 @@ def connected_components(
         # be recomputed 2x per round
         .localCheckpoint(eager=True)
     )
-    rows = _driver_edges(edges, obs.get["n"])
+    rows = driver_rows(edges, obs.get["n"])
     if rows is not None:
         label, converged = _min_label_replay(rows, max_iter)
         out = _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
@@ -586,13 +568,13 @@ def connected_components_star(
     component-min stars; convergence = edge set fixed point.
 
     The symmetrized edge list is materialized once (eager
-    ``localCheckpoint``) with its count observed. Within
-    ``_DRIVER_EDGE_CAP`` edges the rounds replay on the driver over one
-    collect of that checkpoint (same ``max_iter``, same fixed-point test,
-    same warning). Past the cap each round is one Spark job continuing
-    from the same checkpoint: lineage is cut per round (localCheckpoint)
-    and the fixed point is detected with a count + order-insensitive
-    bit_xor checksum that RIDES the round's materialization via
+    ``localCheckpoint``) with its count observed. When
+    ``functions.driver_rows`` admits it the rounds replay on the driver
+    over one collect of that checkpoint (same ``max_iter``, same
+    fixed-point test, same warning). Otherwise each round is one Spark job
+    continuing from the same checkpoint: lineage is cut per round
+    (localCheckpoint) and the fixed point is detected with a count +
+    order-insensitive bit_xor checksum that RIDES the round's materialization via
     Observation (xor cannot overflow, unlike sum under ANSI mode).
     """
     from pyspark.sql import Observation
@@ -621,7 +603,7 @@ def connected_components_star(
         .distinct()
     )
 
-    rows = _driver_edges(edges, sig[0])
+    rows = driver_rows(edges, sig[0])
     if rows is not None:
         label, converged = _star_replay(rows, max_iter)
         out = _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)

@@ -1,10 +1,24 @@
-"""Graph operators: weighted PageRank as DataFrame iterations.
+"""Graph operators: vector iterates over an edge list as DataFrame rounds.
 
-Complements the connected-components operators in :mod:`dedup` — PageRank is
-the canonical "iterate a vector against an edge list" shape: each round is
-one join (edge ⋈ rank on src) + one aggregation (sum contributions by dst),
-both shuffling on graph keys. No adjacency structure ever materializes on
-the driver.
+Complements the connected-components operators in :mod:`dedup`. Every
+iterate has two paths over the same edge rollup:
+
+- **Distributed rounds**: each round is one join (edge ⋈ vector on src)
+  plus one aggregation by dst, both shuffling on graph keys.
+- **Driver replay**: when ``functions.driver_rows`` returns the rollup
+  (bounded row count, a node key type whose Python equality and ordering
+  are Spark's), the same rounds replay in Python over that one collect
+  and come back through ``functions.small_df``. Each replay
+  (``_pagerank_driver`` and its siblings) is bit-identical to the
+  distributed rounds, NULL-key join semantics included; a local-mode Spark
+  job costs a ~60 ms scheduler floor, so on a dimension-sized graph the
+  rounds are otherwise pure job-count tax. Past the bound the distributed
+  rounds run.
+
+The probed rollup is a local checkpoint: eager in bfs, sssp, hits, k-core
+and k-truss, lazy in the others, where the probe's own collect
+materializes it. Past the bound the distributed rounds read that
+checkpoint instead of computing the rollup a second time.
 
 Cross-engine determinism (the oracle unrolls the same rounds as SQL CTEs):
 every per-edge contribution is rounded to 12 dp (row-deterministic double
@@ -20,7 +34,7 @@ import decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import _DRIVER_EDGE_CAP
+from ..functions import driver_rows
 
 #: fixed-point scale for per-round rank values and edge contributions
 _SCALE = 12
@@ -70,8 +84,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    broadcast_rank: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Weighted PageRank with ``iters`` synchronous rounds over an edge
     DataFrame (src, dst, w). Returns (node, rank).
@@ -81,38 +93,15 @@ def pagerank(
     computed once. Dangling mass is dropped (simplified PageRank), matching
     the oracle formulation. For long chains of rounds, callers should
     `localCheckpoint` the iterate every few rounds (the certified query
-    uses 3 rounds — lineage stays shallow).
-
-    ``broadcast_rank`` (opt-in — only the caller knows its graph is
-    dimension-bounded; auto-detection would cost a full distinct count)
-    carries the rank vector through BROADCAST joins instead of shuffled
-    ones — for dimension-sized vertex sets (nation graphs, label graphs,
-    cluster summaries) each round then costs one shuffle (the dst
-    aggregation) instead of three. Web-scale graphs keep the shuffled
-    path: a rank vector with millions of entries must never transit the
-    driver.
-
-    ``driver_iterate`` (opt-in, same caller-declared dimension bound as
-    ``broadcast_rank``) runs the rounds on the DRIVER over the collected
-    edge rollup — the perceptron/k-means convention, where O(dim²) control
-    state ferries through the driver while the data-sized rollup that
-    produced it stays distributed. Each local-mode Spark job costs a
-    ~60 ms scheduler floor, so a 3-round iterate over a 25-node graph is
-    pure job-count tax (~25 jobs) distributed; the driver iterate replays
-    the identical 12-dp fixed-point arithmetic in Python (bit-equal: see
-    :func:`_round12`) in zero jobs. Guarded by a LimitPushDown-bounded
-    collect — past ``_DRIVER_EDGE_CAP`` edges the distributed path runs,
-    so a misdeclared web-scale graph degrades to correct, not to a driver
-    blowup."""
+    uses 3 rounds — lineage stays shallow)."""
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), F.col(weight).alias("_w")
-    )
-    if driver_iterate:
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _pagerank_driver(
-                edges.sparkSession, head, iters, damping, e.schema[0].dataType
-            )
+    ).localCheckpoint(eager=False)
+    rows = driver_rows(e)
+    if rows is not None:
+        return _pagerank_driver(
+            edges.sparkSession, rows, iters, damping, e.schema[0].dataType
+        )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -123,24 +112,16 @@ def pagerank(
     # loop and snapshot — each round then joins the rank vector against one
     # static edge list instead of re-deriving (edges ⋈ out-weights) per
     # round (one join + one shuffle subtree fewer per iteration).
-    # (r12: an earlier upfront repartition(_dst) for the broadcast mode was
-    # removed — localCheckpoint surfaces as ExistingRDD with
-    # UnknownPartitioning, so Catalyst cannot reuse the layout and the
-    # repartition was a pure extra shuffle; the r11 plan dumps proved the
-    # per-round Exchange count unchanged.)
     e_norm = e.join(outw, "_src").localCheckpoint(eager=True)
-    maybe_b = F.broadcast if broadcast_rank else (lambda df: df)
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("_n"))
     base = nodes.crossJoin(F.broadcast(n_nodes))
-    if broadcast_rank:
-        base = base.localCheckpoint(eager=True)
     rank = base.select(
         "node", "_n", F.round(F.lit(1.0) / F.col("_n"), _SCALE).alias("rank")
     )
     for _ in range(iters):
         contrib = (
             e_norm
-            .join(maybe_b(rank.select(F.col("node").alias("_src"), "rank")), "_src")
+            .join(rank.select(F.col("node").alias("_src"), "rank"), "_src")
             .select(
                 "_dst",
                 F.round(F.col("rank") * F.col("_w") / F.col("_out_w"), _SCALE)
@@ -150,7 +131,7 @@ def pagerank(
         )
         summed = contrib.groupBy("_dst").agg(F.sum("_c").alias("_s"))
         rank = (
-            base.join(maybe_b(summed), base.node == summed._dst, "left")
+            base.join(summed, base.node == summed._dst, "left")
             .select(
                 "node",
                 "_n",
@@ -165,8 +146,8 @@ def pagerank(
 
 
 def _pagerank_driver(spark, edge_rows, iters, damping, node_type) -> DataFrame:
-    """Driver-side PageRank rounds over a collected dimension-bounded edge
-    rollup — bit-identical to the distributed iterate: contributions are
+    """Driver-side PageRank rounds over the collected edge rollup —
+    bit-identical to the distributed iterate: contributions are
     ``round(rank * w / out_w, 12)`` doubles cast onto the exact
     DECIMAL(20,12) grid (:func:`_dec12`), summed exactly (Python Decimal,
     order-free like Spark's decimal sum), and each round's rank re-rounds
@@ -268,7 +249,6 @@ def bfs_levels(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Breadth-first levels from the lexicographically-smallest vertex:
     ``rounds`` synchronous frontier expansions over the edge list, the
@@ -277,8 +257,8 @@ def bfs_levels(
 
     Scale shape: each round is one join (edges ⋈ current levels on src) +
     one aggregation (min candidate level by dst) + one left join back onto
-    the node set — all shuffles keyed by graph vertices, no adjacency on
-    the driver; the source vertex arrives as a broadcast 1-row aggregate.
+    the node set — all shuffles keyed by graph vertices; the source vertex
+    arrives as a broadcast 1-row aggregate.
     Unreached nodes carry an INT infinity sentinel so the iterate is pure
     integer arithmetic (no NULL semantics to diverge between engines)."""
     inf = _bfs_inf(rounds)
@@ -287,16 +267,9 @@ def bfs_levels(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension-bounded graph: expand frontiers on the
-        # driver over the collected distinct edge set (pure INT min —
-        # trivially bit-equal; the perceptron/pagerank convention, r12).
-        # Bounded collect; past the cap the distributed path runs.
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _bfs_driver(
-                edges.sparkSession, head, rounds, e.schema[0].dataType
-            )
+    rows = driver_rows(e)
+    if rows is not None:
+        return _bfs_driver(edges.sparkSession, rows, rounds, e.schema[0].dataType)
     nodes = e.select(F.col("_s").alias("node")).union(
         e.select(F.col("_d").alias("node"))
     ).distinct()
@@ -405,7 +378,6 @@ def sssp_cheapest(
     src: str = "src",
     dst: str = "dst",
     cost: str = "cost",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Weighted single-source shortest path (Bellman-Ford relaxation) from
     the lexicographically-smallest vertex: ``rounds`` synchronous passes
@@ -425,16 +397,9 @@ def sssp_cheapest(
         .agg(F.min(F.col(cost).cast("bigint")).alias("_c"))
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension-bounded graph: relax on the driver
-        # over the collected min-collapsed rollup (pure BIGINT min-plus —
-        # trivially bit-equal; the perceptron/pagerank convention, r12).
-        # Bounded collect; past the cap the distributed path runs.
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _sssp_driver(
-                edges.sparkSession, head, rounds, e.schema[0].dataType
-            )
+    rows = driver_rows(e)
+    if rows is not None:
+        return _sssp_driver(edges.sparkSession, rows, rounds, e.schema[0].dataType)
     nodes = e.select(F.col("_s").alias("node")).union(
         e.select(F.col("_d").alias("node"))
     ).distinct()
@@ -544,8 +509,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    broadcast_labels: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Synchronous weighted label propagation (community detection): every
     node starts labeled with itself; each round it adopts the label with
@@ -563,8 +526,8 @@ def label_propagation(
     the (votes DESC, label ASC) window rank but without the window's
     per-partition sort (a reduction combines partially on the map side; a
     rank window cannot). Same iterate family as
-    :func:`pagerank`/:func:`sssp_cheapest`; no adjacency on the driver,
-    lineage cut per round via localCheckpoint on the label vector."""
+    :func:`pagerank`/:func:`sssp_cheapest`; lineage cut per round via
+    localCheckpoint on the label vector."""
     if rounds < 1:
         raise ValueError(f"label_propagation needs rounds >= 1, got {rounds}")
     # sum weights in DECIMAL(38,12) (exact, partition-order-free — a raw
@@ -586,35 +549,19 @@ def label_propagation(
         )
         .groupBy("_a", "_b")
         .agg(F.floor(F.sum("_w") + half).cast("bigint").alias("_w"))
+        .localCheckpoint(eager=False)
     )
-    if driver_iterate:
-        # dimension-bounded graphs (caller-declared): run the rounds on
-        # the driver over the collected symmetrized rollup — the
-        # perceptron convention (O(dim²) control state through the
-        # driver, the data-sized rollup stays distributed). The iterate
-        # is exact BIGINT votes with a deterministic argmax, so the
-        # Python replay is trivially bit-equal; distributed, each of the
-        # 3 rounds costs 2 aggregations + a checkpoint ≈ a dozen ~60 ms
-        # local-mode jobs over a 25-node vector. Bounded collect: past
-        # the cap the distributed path runs (misdeclared graphs degrade
-        # to correct, never to a driver blowup).
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _label_propagation_driver(
-                edges.sparkSession, head, rounds, und.schema[0].dataType
-            )
-    # (r12: the broadcast-mode upfront repartition(_b) was removed —
-    # localCheckpoint surfaces as ExistingRDD with UnknownPartitioning, so
-    # the vote groupBy could never reuse the layout and the repartition
-    # was a pure extra shuffle; the r11 plan dumps proved it.)
-    und = und.localCheckpoint(eager=True)
-    maybe_b = F.broadcast if broadcast_labels else (lambda df: df)
+    rows = driver_rows(und)
+    if rows is not None:
+        return _label_propagation_driver(
+            edges.sparkSession, rows, rounds, und.schema[0].dataType
+        )
     labels = und.select(F.col("_a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for _ in range(rounds):
         votes = (
-            und.join(maybe_b(labels.select(F.col("node").alias("_a"), "label")), "_a")
+            und.join(labels.select(F.col("node").alias("_a"), "label"), "_a")
             .groupBy("_b", "label")
             .agg(F.sum("_w").alias("_v"))
         )
@@ -624,7 +571,7 @@ def label_propagation(
             ).alias("_new")
         ).select(F.col("_b").alias("node"), "_new")
         labels = (
-            labels.join(maybe_b(best), "node", "left")
+            labels.join(best, "node", "left")
             .select("node", F.coalesce(F.col("_new"), F.col("label")).alias("label"))
             .localCheckpoint(eager=False)
         )
@@ -706,7 +653,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """HITS hubs-and-authorities: ``iters`` synchronous rounds of
     a = norm(Aᵀh), h = norm(A a) over a weighted edge list, max-normalized
@@ -766,16 +712,11 @@ def hits(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"),
         w_guarded.cast(w_dec).alias("_w"),
     ).localCheckpoint(eager=True)
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # weights arrive as exact decimal(20,6) values from the guarded
-        # checkpoint, so the driver replay works in the identical decimal
-        # algebra; bounded collect, distributed fallback past the cap
-        head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _hits_driver(
-                edges.sparkSession, head, iters, e.schema[0].dataType
-            )
+    # the weights arrive as exact decimal(20,6) values from the guarded
+    # checkpoint, so the driver replay works in the identical decimal algebra
+    rows = driver_rows(e)
+    if rows is not None:
+        return _hits_driver(edges.sparkSession, rows, iters, e.schema[0].dataType)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -978,7 +919,6 @@ def hash_random_walk(
     steps: int = 4,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Hash-seeded random walk (DeepWalk-style corpus sampling made
     REPRODUCIBLE): one walker starts at every vertex; at step t the walker
@@ -996,20 +936,20 @@ def hash_random_walk(
     materialization per walker. Multi-walker variants just seed the hash
     with a walker id."""
     from pyspark.sql import Window
+    from pyspark.sql.types import IntegralType, StringType
 
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    if driver_iterate:
-        from pyspark.sql.types import IntegralType, StringType
-
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # hop rule is md5 over the node's STRING form — replicated with
-        # hashlib only for string/integral node types, whose Spark string
-        # cast equals Python str(); other types keep the distributed path
-        nt = e.schema[0].dataType
-        if isinstance(nt, (StringType, IntegralType)):
-            head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-            if len(head) <= _DRIVER_EDGE_CAP:
-                return _hash_random_walk_driver(edges.sparkSession, head, steps, nt)
+    e = (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    # the hop rule is md5 over the node's STRING form — replicated with
+    # hashlib only for string/integral node types, whose Spark string cast
+    # equals Python str(); other types keep the distributed path
+    nt = e.schema[0].dataType
+    rows = driver_rows(e) if isinstance(nt, (StringType, IntegralType)) else None
+    if rows is not None:
+        return _hash_random_walk_driver(edges.sparkSession, rows, steps, nt)
     w = Window.partitionBy("_s").orderBy("_d")
     nbrs = (
         e.select(
@@ -1121,7 +1061,6 @@ def ktruss_edges(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """K-truss peeling (bounded synchronous rounds): keep edges whose
     triangle support (common-neighbor count in the undirected graph) is
@@ -1146,16 +1085,11 @@ def ktruss_edges(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # peel is pure integer set counting — trivially bit-equal on the
-        # driver. Bounded collect, distributed fallback past the cap.
-        # (NULL keys cannot appear: a != b filters them.)
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _ktruss_driver(
-                edges.sparkSession, head, k, rounds, und.schema[0].dataType
-            )
+    rows = driver_rows(und)  # no NULL keys: a != b filters them
+    if rows is not None:
+        return _ktruss_driver(
+            edges.sparkSession, rows, k, rounds, und.schema[0].dataType
+        )
     cur = und
     # early stop at the FIXED POINT: a round that drops no edge makes every
     # later round recompute identical support — result-identical to running
@@ -1262,7 +1196,6 @@ def kcore_vertices(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """K-core peeling (bounded synchronous rounds), the VERTEX-side
     complement of :func:`ktruss_edges`: drop vertices whose degree in the
@@ -1286,15 +1219,11 @@ def kcore_vertices(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12):
-        # integer degree peeling — trivially bit-equal on the driver;
-        # bounded collect, distributed fallback past the cap
-        head = und.limit(_DRIVER_EDGE_CAP + 1).collect()
-        if len(head) <= _DRIVER_EDGE_CAP:
-            return _kcore_driver(
-                edges.sparkSession, head, k, rounds, und.schema[0].dataType
-            )
+    rows = driver_rows(und)
+    if rows is not None:
+        return _kcore_driver(
+            edges.sparkSession, rows, k, rounds, und.schema[0].dataType
+        )
     cur = und
     keep_deg = None
     # fixed-point early stop, as in ktruss_edges: an unchanged edge frame
@@ -1383,7 +1312,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Personalized PageRank: identical fixed-point discipline as
     :func:`pagerank` (per-edge contributions rounded to 12 dp, exact
@@ -1399,27 +1327,19 @@ def personalized_pagerank(
     seed-count broadcast."""
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), F.col(weight).alias("_w")
-    )
-    if driver_iterate:
-        # caller-declared dimension bound, same contract and bit-exact
-        # replication as pagerank's driver iterate (r12); the seed set is
-        # collected under the same cap
-        e_head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        s_head = (
-            seeds.select(F.col(seeds.columns[0]).alias("node"))
-            .distinct()
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
+    ).localCheckpoint(eager=False)
+    s = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+    e_rows = driver_rows(e)
+    s_rows = driver_rows(s) if e_rows is not None else None
+    if s_rows is not None:
+        return _personalized_pagerank_driver(
+            edges.sparkSession,
+            e_rows,
+            {r[0] for r in s_rows},
+            iters,
+            damping,
+            e.schema[0].dataType,
         )
-        if len(e_head) <= _DRIVER_EDGE_CAP and len(s_head) <= _DRIVER_EDGE_CAP:
-            return _personalized_pagerank_driver(
-                edges.sparkSession,
-                e_head,
-                {r[0] for r in s_head},
-                iters,
-                damping,
-                e.schema[0].dataType,
-            )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -1427,7 +1347,6 @@ def personalized_pagerank(
     )
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_out_w"))
     e_norm = e.join(outw, "_src").localCheckpoint(eager=True)
-    s = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     ns = s.agg(F.count(F.lit(1)).alias("_ns"))
     flagged = nodes.join(
         s.withColumn("_is_seed", F.lit(1)), "node", "left"
@@ -1570,8 +1489,6 @@ def temporal_earliest_arrival(
     src: str = "src",
     dst: str = "dst",
     etime: str = "et",
-    broadcast_arrivals: bool = False,
-    driver_iterate: bool = False,
 ) -> DataFrame:
     """Earliest-arrival reachability on a TEMPORAL graph: a path is
     time-respecting when its edge times are non-decreasing, and a node's
@@ -1584,44 +1501,23 @@ def temporal_earliest_arrival(
     per-node minimum — the same iterate discipline as
     :func:`sssp_cheapest` (two node-keyed shuffles per round, lineage cut
     per round, fixed ``rounds`` so both engines run the identical
-    schedule). Arrival times are exact integers.
-
-    ``broadcast_arrivals`` (opt-in, same contract as pagerank's
-    ``broadcast_rank`` — only the caller knows its vertex set is
-    dimension-bounded) carries the arrival vector through BROADCAST joins:
-    the static edge list is then never shuffled per round (one exchange
-    per round — the min-merge — instead of three). Web-scale graphs keep
-    the shuffled path: a large arrival vector must never transit the
-    driver."""
+    schedule). Arrival times are exact integers."""
     if rounds < 1:
         raise ValueError(f"temporal_earliest_arrival needs rounds >= 1, got {rounds}")
     e = edges.select(
         F.col(src).alias("_s"), F.col(dst).alias("_d"),
         F.col(etime).cast("bigint").alias("_t"),
-    )
-    if driver_iterate:
-        # caller-declared dimension bound (pagerank convention, r12): the
-        # relaxation is exact integer min over (node, time) — trivially
-        # bit-equal on the driver; bounded collects, distributed fallback
-        e_head = e.limit(_DRIVER_EDGE_CAP + 1).collect()
-        s_head = (
-            seeds.select(F.col("node"), F.col("t0").cast("bigint").alias("at"))
-            .limit(_DRIVER_EDGE_CAP + 1)
-            .collect()
-        )
-        if len(e_head) <= _DRIVER_EDGE_CAP and len(s_head) <= _DRIVER_EDGE_CAP:
-            return _temporal_earliest_driver(
-                edges.sparkSession, e_head, s_head, rounds, e.schema[0].dataType
-            )
-    maybe_b = F.broadcast if broadcast_arrivals else (lambda df: df)
-    if broadcast_arrivals:
-        # snapshot the static edge list once: every round re-reads it, and
-        # broadcast joins preserve the streamed side so the layout survives
-        e = e.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     arr = seeds.select(F.col("node"), F.col("t0").cast("bigint").alias("at"))
+    e_rows = driver_rows(e)
+    s_rows = driver_rows(arr) if e_rows is not None else None
+    if s_rows is not None:
+        return _temporal_earliest_driver(
+            edges.sparkSession, e_rows, s_rows, rounds, e.schema[0].dataType
+        )
     for _ in range(rounds):
         relaxed = (
-            e.join(maybe_b(arr.select(F.col("node").alias("_s"), "at")), "_s")
+            e.join(arr.select(F.col("node").alias("_s"), "at"), "_s")
             .filter(F.col("_t") >= F.col("at"))
             .select(F.col("_d").alias("node"), F.col("_t").alias("at"))
         )

@@ -1041,11 +1041,10 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round and the corpus is scanned three times
         .localCheckpoint(eager=True)
     )
-    # the vertex set is the 25-nation dimension — declare it so the three
-    # rounds run on the driver over the collected ≤|V|² edge rollup (the
-    # perceptron convention — r12: the distributed iterate was ~25
-    # local-mode jobs of pure ~60 ms scheduler floor for a 25-row vector)
-    pr = pagerank(edges, iters=3, damping=0.85, driver_iterate=True)
+    # the vertex set is the 25-nation dimension, so the three rounds replay
+    # on the driver over the collected ≤|V|² edge rollup (distributed they
+    # are ~25 local-mode jobs of ~60 ms scheduler floor for a 25-row vector)
+    pr = pagerank(edges, iters=3, damping=0.85)
     return pr.select(
         F.col("node").alias("nation"), F.round("rank", 8).alias("pagerank")
     )
@@ -1088,9 +1087,9 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-    # same dimension-bounded declaration as pagerank/SSSP: frontier
-    # expansion on the driver over the collected distinct edge set (r12)
-    lv = bfs_levels(edges, rounds=3, driver_iterate=True)
+    # 25-nation dimension graph: frontier expansion replays on the driver
+    # over the collected distinct edge set
+    lv = bfs_levels(edges, rounds=3)
     return lv.select(F.col("node").alias("nation"), "level")
 
 
@@ -4029,10 +4028,9 @@ def graph_sssp_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # 25-nation dimension graph — rounds relax on the driver over the
-    # collected <=|V|^2 rollup (exact BIGINT min-plus; r12, the pagerank
-    # convention: the fact rollup stays distributed, the iterate pays
-    # zero per-round jobs)
-    d = sssp_cheapest(edges, rounds=4, driver_iterate=True)
+    # collected <=|V|^2 rollup (exact BIGINT min-plus): the fact rollup
+    # stays distributed, the iterate pays zero per-round jobs
+    d = sssp_cheapest(edges, rounds=4)
     return d.select(F.col("node").alias("nation"), F.col("dist").alias("cost"))
 
 
@@ -4082,12 +4080,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # the vertex set is the 25-nation dimension — declare it so the rounds
-    # run on the driver over the collected ≤|V|² rollup (the perceptron
-    # convention: the data-sized fact rollup stays distributed, the
-    # dimension-bounded iterate pays zero per-round jobs — r12, was ~12
+    # the vertex set is the 25-nation dimension, so the rounds replay on
+    # the driver over the collected ≤|V|² rollup (distributed they are ~12
     # local-mode scheduler floors of ~60 ms for 25-node vote rounds)
-    out = label_propagation(edges, rounds=3, driver_iterate=True)
+    out = label_propagation(edges, rounds=3)
     return out.select(F.col("node").alias("nation"), F.col("label").alias("community"))
 
 
@@ -4180,8 +4176,8 @@ def graph_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     # 25-nation dimension graph — the certified 6-dp decimal HITS algebra
-    # replays on the driver (r12; bounded collect, distributed fallback)
-    out = hits(edges, iters=3, driver_iterate=True)
+    # replays on the driver
+    out = hits(edges, iters=3)
     return out.select(F.col("node").alias("nation"), "hub", "authority")
 
 
@@ -4225,8 +4221,8 @@ def graph_hash_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     # 25-nation dimension graph, string nodes — hashlib replay of the
-    # md5 hop rule on the driver (r12)
-    walks = hash_random_walk(edges, steps=4, driver_iterate=True)
+    # md5 hop rule on the driver
+    walks = hash_random_walk(edges, steps=4)
     return walks.groupBy(F.col("node").alias("nation")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_walkers")
     )
@@ -4360,9 +4356,8 @@ def graph_ktruss_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    # 25-nation dimension graph — integer peel on the driver (r12,
-    # pagerank convention; bounded collect, distributed fallback)
-    out = ktruss_edges(edges, k=8, rounds=2, driver_iterate=True)
+    # 25-nation dimension graph — integer peel on the driver
+    out = ktruss_edges(edges, k=8, rounds=2)
     return out.select(
         F.col("a").alias("nation_a"), F.col("b").alias("nation_b"), "support"
     )
@@ -4431,8 +4426,8 @@ def graph_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") * F.col("c") * 4 >= F.col("s") * 5)
         .select("src", "dst")
     )
-    # 25-nation dimension graph — integer peel on the driver (r12)
-    out = kcore_vertices(edges, k=6, rounds=2, driver_iterate=True)
+    # 25-nation dimension graph — integer peel on the driver
+    out = kcore_vertices(edges, k=6, rounds=2)
     return out.select(F.col("a").alias("nation"), "degree")
 
 
@@ -4496,11 +4491,9 @@ def graph_ppr_asia(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_name") == "ASIA")
         .select(F.col("n_name").alias("node"))
     )
-    # 25-nation dimension graph + region-bounded seeds — driver iterate
-    # (r12, the trade-rank convention; bounded collect, distributed
-    # fallback past the cap)
-    out = personalized_pagerank(edges, seeds, iters=3, damping=0.85,
-                                driver_iterate=True)
+    # 25-nation dimension graph + region-bounded seeds — replays on the
+    # driver
+    out = personalized_pagerank(edges, seeds, iters=3, damping=0.85)
     return out.select(
         F.col("node").alias("nation"), F.round("rank", 8).alias("ppr")
     )
@@ -4585,16 +4578,13 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # 25-nation dimension graph: the 3-hop census is pure set algebra over
-    # the collected heavy-edge set (r12, the driver-iterate convention —
-    # bounded collect; past the cap the distributed hop/anti-join census
-    # below runs unchanged). Was 26 jobs of hop joins + anti-joins for a
-    # <=600-row edge set.
-    from arc_cassandra_pipeline_plugin_spark.functions import _DRIVER_EDGE_CAP
+    # the collected heavy-edge set; past the driver bound the distributed
+    # hop/anti-join census below runs unchanged (26 jobs of hop joins +
+    # anti-joins for a <=600-row edge set)
+    from arc_cassandra_pipeline_plugin_spark.functions import driver_rows, small_df
 
-    head = u.limit(_DRIVER_EDGE_CAP + 1).collect()
-    if len(head) <= _DRIVER_EDGE_CAP:
-        from arc_cassandra_pipeline_plugin_spark.functions import small_df
-
+    head = driver_rows(u)
+    if head is not None:
         adj: dict = {}
         for r in head:
             adj.setdefault(r["a"], set()).add(r["b"])
@@ -4965,9 +4955,8 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _temporal_trade_edges(spark, sf_dir)
     seeds = _temporal_seed(spark, sf_dir, 1996)
-    # 25-nation dimension graph (caller-declared): arrival vector
-    # rides broadcast joins, static edges never shuffle per round
-    arr = temporal_earliest_arrival(edges, seeds, rounds=3, driver_iterate=True)
+    # 25-nation dimension graph: the relaxation replays on the driver
+    arr = temporal_earliest_arrival(edges, seeds, rounds=3)
     return arr.select(F.col("node").alias("nation"), F.col("at").cast("bigint").alias("arrival_year"))
 
 
@@ -5029,10 +5018,9 @@ def graph_temporal_reachability_incremental(spark: SparkSession, sf_dir: str) ->
     seeds = _temporal_seed(spark, sf_dir, 1992)
     base = edges.filter(F.col("et") <= _TEMPORAL_SPLIT_YEAR)
     delta = edges.filter(F.col("et") > _TEMPORAL_SPLIT_YEAR)
-    arr_base = temporal_earliest_arrival(base, seeds, rounds=8, driver_iterate=True)
+    arr_base = temporal_earliest_arrival(base, seeds, rounds=8)
     arr = temporal_earliest_arrival(
-        delta, arr_base.select("node", F.col("at").alias("t0")), rounds=8,
-        driver_iterate=True,
+        delta, arr_base.select("node", F.col("at").alias("t0")), rounds=8
     )
     return arr.select(
         F.col("node").alias("nation"), F.col("at").cast("bigint").alias("arrival_year")

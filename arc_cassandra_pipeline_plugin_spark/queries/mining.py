@@ -2842,10 +2842,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = seq.groupBy(
         F.col("event_type").alias("src"), F.col("next_type").alias("dst")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    # label-squared (5x5) edge list — the rounds run on the driver over
-    # the collected rollup (r12, the trade-rank convention; bounded
-    # collect with distributed fallback past the cap)
-    out = pagerank(edges, iters=4, damping=1.0, driver_iterate=True)
+    # label-squared (5x5) edge list — the rounds replay on the driver over
+    # the collected rollup
+    out = pagerank(edges, iters=4, damping=1.0)
     return out.select(
         F.col("node").alias("event_type"),
         F.round("rank", 8).alias("stationary_p"),

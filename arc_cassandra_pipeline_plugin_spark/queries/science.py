@@ -1650,11 +1650,10 @@ def text_textrank_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         # trade-rank convention): each round re-references edges
         .localCheckpoint(eager=True)
     )
-    # the vocab gate bounds the graph (<= 2000 frequent words); rounds run
-    # on the driver over the collected rollup (r12) — and if an unusual
-    # corpus pushes the rollup past the collect cap, the operator falls
-    # back to the distributed iterate unchanged
-    ranks = pagerank(edges, iters=3, damping=0.85, driver_iterate=True)
+    # the vocab gate bounds the graph (<= 2000 frequent words), so the
+    # rounds replay on the driver over the collected rollup; a rollup past
+    # the driver bound runs the distributed iterate unchanged
+    ranks = pagerank(edges, iters=3, damping=0.85)
     return ranks.select(
         F.col("node").alias("word"), F.round("rank", 8).alias("textrank")
     )

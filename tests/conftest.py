@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 import sys
@@ -20,6 +21,75 @@ def spark():
     s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+#: the driver replays of the graph iterates in ``operators/graph.py``
+GRAPH_REPLAYS = (
+    "_pagerank_driver",
+    "_personalized_pagerank_driver",
+    "_hits_driver",
+    "_label_propagation_driver",
+    "_sssp_driver",
+    "_bfs_driver",
+    "_kcore_driver",
+    "_ktruss_driver",
+    "_hash_random_walk_driver",
+    "_temporal_earliest_driver",
+)
+
+
+def no_replay(*_args, **_kwargs):
+    raise AssertionError("driver replay ran on the distributed path")
+
+
+@contextlib.contextmanager
+def distributed(monkeypatch, module, *replays):
+    """Force an operator's distributed rounds: a negative driver cap (even
+    an empty frame is past it), and each named replay raises if it runs."""
+    from arc_cassandra_pipeline_plugin_spark import functions
+
+    with monkeypatch.context() as m:
+        m.setattr(functions, "_DRIVER_EDGE_CAP", -1)
+        for name in replays:
+            m.setattr(module, name, no_replay)
+        yield m
+
+
+def spy(monkeypatch, module, *replays):
+    """Record each call of the named replays (they still run)."""
+    calls = []
+    for name in replays:
+        real = getattr(module, name)
+
+        def record(*args, _real=real, _name=name, **kwargs):
+            calls.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, record)
+    return calls
+
+
+@pytest.fixture()
+def graph_paths(monkeypatch, request):
+    """``for path in graph_paths():`` runs the loop body on each path of
+    the graph iterates in turn: first the driver replay (the default for a
+    graph within the driver cap with integer or string keys; the pass
+    fails unless a replay ran), then the distributed rounds. Each pass's
+    patches are undone before the next pass, and at teardown if the body
+    fails, so one fixture serves every hypothesis example."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph
+
+    def paths():
+        with monkeypatch.context() as m:
+            request.addfinalizer(m.undo)
+            ran = spy(m, graph, *GRAPH_REPLAYS)
+            yield "driver"
+        assert ran, "no driver replay ran on the driver path"
+        with distributed(monkeypatch, graph, *GRAPH_REPLAYS) as m:
+            request.addfinalizer(m.undo)
+            yield "distributed"
+
+    return paths
 
 
 @pytest.fixture()

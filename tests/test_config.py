@@ -12,6 +12,7 @@ from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
 from arc_cassandra_pipeline_plugin_spark.errors import ConfigError
 from arc_cassandra_pipeline_plugin_spark.stages import ParquetExtract, SQLTransform
 from arc_cassandra_pipeline_plugin_spark.stages.base import inject_parameters
+from conftest import no_replay
 
 
 def test_parse_minimal_pipeline():
@@ -367,29 +368,47 @@ def test_graph_example_pipeline_runs(spark, monkeypatch):
     """The shipped examples/graph.conf (HOCON) parses and runs end-to-end:
     5 extracts → SQL edge build → operator-library PageRank from config →
     SQLValidate fixed-point gate; the config-driven rank equals the direct
-    operator call on the same edges."""
+    operator call on the same edges. The config reaches the driver replay
+    at the default cap, and its ranks are identical to the distributed
+    rounds' (forced by a negative cap, with the replay raising)."""
     import os
 
+    from arc_cassandra_pipeline_plugin_spark import functions
     from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
-    from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
+    from arc_cassandra_pipeline_plugin_spark.operators import graph
 
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "examples", "graph.conf")
     with open(path) as f:
         text = f.read()
-    ctx = PipelineContext(environment="test")
-    p = parse_config(text, ctx)
-    assert [s.stage_type for s in p.stages] == (
-        ["ParquetExtract"] * 5 + ["SQLTransform", "OperatorTransform", "SQLValidate"]
+    replay = graph._pagerank_driver
+    ran = []
+    monkeypatch.setattr(
+        graph, "_pagerank_driver", lambda *a: ran.append(1) or replay(*a)
     )
-    p.run(spark, ctx)
-    got = {(r["node"], r["rank"]) for r in spark.table("trade_rank").collect()}
-    want = {
-        (r["node"], r["rank"])
-        for r in pagerank(spark.table("trade_edges"), iters=3, damping=0.85).collect()
-    }
-    assert got == want and len(got) == 25
+    rows = {}
+    for rank_path in ("driver", "distributed"):
+        if rank_path == "distributed":
+            monkeypatch.setattr(functions, "_DRIVER_EDGE_CAP", -1)
+            monkeypatch.setattr(graph, "_pagerank_driver", no_replay)
+        ctx = PipelineContext(environment="test")
+        p = parse_config(text, ctx)
+        assert [s.stage_type for s in p.stages] == (
+            ["ParquetExtract"] * 5 + ["SQLTransform", "OperatorTransform", "SQLValidate"]
+        )
+        p.run(spark, ctx)
+        got = {(r["node"], r["rank"]) for r in spark.table("trade_rank").collect()}
+        want = {
+            (r["node"], r["rank"])
+            for r in graph.pagerank(
+                spark.table("trade_edges"), iters=3, damping=0.85
+            ).collect()
+        }
+        assert got == want and len(got) == 25, rank_path
+        rows[rank_path] = got
+    assert ran == [1, 1]  # the config run and the direct call, driver path
+    assert rows["driver"] == rows["distributed"]
 
 
 def test_dedup_example_pipeline_runs(spark, monkeypatch):
@@ -400,6 +419,7 @@ def test_dedup_example_pipeline_runs(spark, monkeypatch):
     (forced by a negative edge cap)."""
     import os
 
+    from arc_cassandra_pipeline_plugin_spark import functions
     from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
     from arc_cassandra_pipeline_plugin_spark.operators import dedup
     from arc_cassandra_pipeline_plugin_spark.operators.dedup import (
@@ -415,7 +435,8 @@ def test_dedup_example_pipeline_runs(spark, monkeypatch):
         text = f.read()
     for cc_path in ("driver", "distributed"):
         if cc_path == "distributed":
-            monkeypatch.setattr(dedup, "_DRIVER_EDGE_CAP", -1)
+            monkeypatch.setattr(functions, "_DRIVER_EDGE_CAP", -1)
+            monkeypatch.setattr(dedup, "_min_label_replay", no_replay)
         ctx = PipelineContext(environment="test")
         p = parse_config(text, ctx)
         assert [s.stage_type for s in p.stages] == (

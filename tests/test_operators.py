@@ -7,10 +7,12 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from arc_cassandra_pipeline_plugin_spark import functions as FN
 from arc_cassandra_pipeline_plugin_spark.operators import dedup as D
 from arc_cassandra_pipeline_plugin_spark.operators import similarity as S
 from arc_cassandra_pipeline_plugin_spark.operators import text as TX
 from arc_cassandra_pipeline_plugin_spark.operators import timeseries as TS
+from conftest import distributed, no_replay, spy
 
 
 def _docs(spark, rows):
@@ -375,10 +377,10 @@ def test_tfidf_ranks_distinctive_terms_first(spark):
 def _cc_paths(monkeypatch):
     """Each connected-components path in turn: the driver-side replay, then
     the distributed rounds (forced by a negative edge cap — even an empty
-    edge list is past it)."""
+    edge list is past it — with both replays raising)."""
     yield "driver"
-    monkeypatch.setattr(D, "_DRIVER_EDGE_CAP", -1)
-    yield "distributed"
+    with distributed(monkeypatch, D, "_min_label_replay", "_star_replay"):
+        yield "distributed"
 
 
 def _cc_rows(df):
@@ -612,37 +614,41 @@ def test_cluster_by_zorder_tightens_both_dims(spark):
     assert max(s.dy for s in spans) <= 32
 
 
-def test_pagerank_uniform_on_symmetric_cycle(spark):
-    """On a symmetric cycle every node has equal rank at every iteration."""
+def test_pagerank_uniform_on_symmetric_cycle(spark, graph_paths):
+    """On a symmetric cycle every node has equal rank at every iteration,
+    on both paths."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)], "src string, dst string, w long"
     )
-    ranks = {r.node: r.rank for r in pagerank(edges, iters=4).collect()}
-    assert set(ranks) == {"a", "b", "c"}
-    assert all(abs(v - 1.0 / 3.0) < 1e-9 for v in ranks.values())
+    for path in graph_paths():
+        ranks = {r.node: r.rank for r in pagerank(edges, iters=4).collect()}
+        assert set(ranks) == {"a", "b", "c"}, path
+        assert all(abs(v - 1.0 / 3.0) < 1e-9 for v in ranks.values()), path
 
 
-def test_pagerank_sink_attracts_mass(spark):
-    """A node every other node points at accumulates the highest rank."""
+def test_pagerank_sink_attracts_mass(spark, graph_paths):
+    """A node every other node points at accumulates the highest rank, on
+    both paths."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [("a", "hub", 2), ("b", "hub", 3), ("c", "hub", 1), ("hub", "a", 1)],
         "src string, dst string, w long",
     )
-    ranks = {r.node: r.rank for r in pagerank(edges, iters=3).collect()}
-    assert ranks["hub"] == max(ranks.values())
-    assert abs(sum(ranks.values())) > 0
+    for path in graph_paths():
+        ranks = {r.node: r.rank for r in pagerank(edges, iters=3).collect()}
+        assert ranks["hub"] == max(ranks.values()), path
+        assert abs(sum(ranks.values())) > 0, path
 
 
-def test_pagerank_driver_iterate_bit_equal_to_distributed(spark):
-    """The opt-in driver-side iterate (r12) must be BIT-identical to the
-    distributed rounds — same 12-dp grid, same decimal contribution sums —
-    on an irregular weighted graph (non-uniform out-weights, a dangling
-    sink, parallel-free multi-edges)."""
-    from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
+def test_pagerank_driver_iterate_bit_equal_to_distributed(spark, monkeypatch):
+    """The driver-side replay must be BIT-identical to the distributed
+    rounds — same 12-dp grid, same decimal contribution sums — on an
+    irregular weighted graph (non-uniform out-weights, a dangling sink,
+    parallel-free multi-edges)."""
+    from arc_cassandra_pipeline_plugin_spark.operators import graph as G
 
     edges = [
         (f"n{a}", f"n{(a * 3 + b) % 13}", (a * 5 + b * 7) % 9 + 1)
@@ -651,21 +657,26 @@ def test_pagerank_driver_iterate_bit_equal_to_distributed(spark):
         if a != (a * 3 + b) % 13
     ]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    dist = {(r.node, r.rank) for r in pagerank(df, iters=3).collect()}
-    drv = {(r.node, r.rank) for r in pagerank(df, iters=3, driver_iterate=True).collect()}
+    with distributed(monkeypatch, G, "_pagerank_driver"):
+        dist = {(r.node, r.rank) for r in G.pagerank(df, iters=3).collect()}
+    ran = spy(monkeypatch, G, "_pagerank_driver")
+    drv = {(r.node, r.rank) for r in G.pagerank(df, iters=3).collect()}
     assert drv == dist and len(drv) == 13
+    assert ran == ["_pagerank_driver"]
 
 
 def test_pagerank_driver_iterate_cap_falls_back_to_distributed(spark, monkeypatch):
-    """Past the dimension cap the bounded collect bails out and the
-    distributed path runs — a misdeclared graph degrades to correct."""
+    """Past the driver cap the bounded collect bails out and the
+    distributed path runs — an oversized graph degrades to correct."""
     from arc_cassandra_pipeline_plugin_spark.operators import graph as G
 
     edges = [("a", "b", 1), ("b", "c", 2), ("c", "a", 3)]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want = {(r.node, r.rank) for r in G.pagerank(df, iters=2).collect()}
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    got = {(r.node, r.rank) for r in G.pagerank(df, iters=2, driver_iterate=True).collect()}
+    with distributed(monkeypatch, G, "_pagerank_driver"):
+        want = {(r.node, r.rank) for r in G.pagerank(df, iters=2).collect()}
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 2)
+    monkeypatch.setattr(G, "_pagerank_driver", no_replay)
+    got = {(r.node, r.rank) for r in G.pagerank(df, iters=2).collect()}
     assert got == want
 
 
@@ -686,17 +697,16 @@ def test_temporal_arrival_driver_iterate_bit_equal(spark, monkeypatch):
     seeds = spark.createDataFrame(
         [("n0", 1991), ("n4", 1993), ("n0", 1990)], "node string, t0 long"
     )
-    want = {tuple(r) for r in G.temporal_earliest_arrival(df, seeds, rounds=3).collect()}
-    got = {
-        tuple(r)
-        for r in G.temporal_earliest_arrival(df, seeds, rounds=3, driver_iterate=True).collect()
-    }
+    with distributed(monkeypatch, G, "_temporal_earliest_driver"):
+        want = {tuple(r) for r in G.temporal_earliest_arrival(df, seeds, rounds=3).collect()}
+    ran = spy(monkeypatch, G, "_temporal_earliest_driver")
+    got = {tuple(r) for r in G.temporal_earliest_arrival(df, seeds, rounds=3).collect()}
     assert got == want and len(got) >= 2
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 2)
     assert {
-        tuple(r)
-        for r in G.temporal_earliest_arrival(df, seeds, rounds=3, driver_iterate=True).collect()
+        tuple(r) for r in G.temporal_earliest_arrival(df, seeds, rounds=3).collect()
     } == want
+    assert ran == ["_temporal_earliest_driver"]
 
 
 def test_kcore_ktruss_walk_driver_iterate_bit_equal(spark, monkeypatch):
@@ -713,18 +723,25 @@ def test_kcore_ktruss_walk_driver_iterate_bit_equal(spark, monkeypatch):
         if a != (a * 3 + b) % 13
     ]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2).collect()}
-    got_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2, driver_iterate=True).collect()}
+    with distributed(
+        monkeypatch, G, "_kcore_driver", "_ktruss_driver", "_hash_random_walk_driver"
+    ):
+        want_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2).collect()}
+        want_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2).collect()}
+        want_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4).collect())
+    ran = spy(
+        monkeypatch, G, "_kcore_driver", "_ktruss_driver", "_hash_random_walk_driver"
+    )
+    got_c = {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2).collect()}
     assert got_c == want_c and len(got_c) > 3
-    want_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2).collect()}
-    got_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2, driver_iterate=True).collect()}
+    got_t = {tuple(r) for r in G.ktruss_edges(df, k=4, rounds=2).collect()}
     assert got_t == want_t and len(got_t) > 3
-    want_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4).collect())
-    got_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4, driver_iterate=True).collect())
+    got_w = sorted(tuple(r) for r in G.hash_random_walk(df, steps=4).collect())
     assert got_w == want_w and len(got_w) == 13
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2, driver_iterate=True).collect()} == want_c
-    assert sorted(tuple(r) for r in G.hash_random_walk(df, steps=4, driver_iterate=True).collect()) == want_w
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 2)
+    assert {tuple(r) for r in G.kcore_vertices(df, k=4, rounds=2).collect()} == want_c
+    assert sorted(tuple(r) for r in G.hash_random_walk(df, steps=4).collect()) == want_w
+    assert ran == ["_kcore_driver", "_ktruss_driver", "_hash_random_walk_driver"]
 
 
 def test_hits_and_ppr_driver_iterate_bit_equal(spark, monkeypatch):
@@ -742,26 +759,25 @@ def test_hits_and_ppr_driver_iterate_bit_equal(spark, monkeypatch):
         if a != (a * 3 + b) % 13
     ]
     df = spark.createDataFrame(edges, "src string, dst string, w long")
-    want_h = {tuple(r) for r in G.hits(df, iters=3).collect()}
-    got_h = {tuple(r) for r in G.hits(df, iters=3, driver_iterate=True).collect()}
-    assert got_h == want_h and len(got_h) == 13
     seeds = spark.createDataFrame([("n1",), ("n4",), ("zz_outside",)], "node string")
-    want_p = {tuple(r) for r in G.personalized_pagerank(df, seeds, iters=3).collect()}
-    got_p = {
-        tuple(r)
-        for r in G.personalized_pagerank(df, seeds, iters=3, driver_iterate=True).collect()
-    }
+    with distributed(monkeypatch, G, "_hits_driver", "_personalized_pagerank_driver"):
+        want_h = {tuple(r) for r in G.hits(df, iters=3).collect()}
+        want_p = {tuple(r) for r in G.personalized_pagerank(df, seeds, iters=3).collect()}
+    ran = spy(monkeypatch, G, "_hits_driver", "_personalized_pagerank_driver")
+    got_h = {tuple(r) for r in G.hits(df, iters=3).collect()}
+    assert got_h == want_h and len(got_h) == 13
+    got_p = {tuple(r) for r in G.personalized_pagerank(df, seeds, iters=3).collect()}
     assert got_p == want_p and len(got_p) == 13
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.hits(df, iters=3, driver_iterate=True).collect()} == want_h
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 2)
+    assert {tuple(r) for r in G.hits(df, iters=3).collect()} == want_h
     assert {
-        tuple(r)
-        for r in G.personalized_pagerank(df, seeds, iters=3, driver_iterate=True).collect()
+        tuple(r) for r in G.personalized_pagerank(df, seeds, iters=3).collect()
     } == want_p
+    assert ran == ["_hits_driver", "_personalized_pagerank_driver"]
 
 
 def test_sssp_bfs_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side Bellman-Ford / BFS rounds (r12) equal the distributed
+    """Driver-side Bellman-Ford / BFS rounds equal the distributed
     iterates exactly (integer min arithmetic, same source rule, same
     infinity sentinel); past the cap the distributed path runs."""
     from arc_cassandra_pipeline_plugin_spark.operators import graph as G
@@ -773,19 +789,22 @@ def test_sssp_bfs_driver_iterate_bit_equal(spark, monkeypatch):
         if a != (a * 5 + b) % 11
     ]
     df = spark.createDataFrame(edges, "src string, dst string, cost long")
-    want_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3).collect()}
-    got_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3, driver_iterate=True).collect()}
+    with distributed(monkeypatch, G, "_sssp_driver", "_bfs_driver"):
+        want_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3).collect()}
+        want_b = {tuple(r) for r in G.bfs_levels(df, rounds=3).collect()}
+    ran = spy(monkeypatch, G, "_sssp_driver", "_bfs_driver")
+    got_s = {tuple(r) for r in G.sssp_cheapest(df, rounds=3).collect()}
     assert got_s == want_s and len(got_s) > 3
-    want_b = {tuple(r) for r in G.bfs_levels(df, rounds=3).collect()}
-    got_b = {tuple(r) for r in G.bfs_levels(df, rounds=3, driver_iterate=True).collect()}
+    got_b = {tuple(r) for r in G.bfs_levels(df, rounds=3).collect()}
     assert got_b == want_b and len(got_b) > 3
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 2)
-    assert {tuple(r) for r in G.sssp_cheapest(df, rounds=3, driver_iterate=True).collect()} == want_s
-    assert {tuple(r) for r in G.bfs_levels(df, rounds=3, driver_iterate=True).collect()} == want_b
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 2)
+    assert {tuple(r) for r in G.sssp_cheapest(df, rounds=3).collect()} == want_s
+    assert {tuple(r) for r in G.bfs_levels(df, rounds=3).collect()} == want_b
+    assert ran == ["_sssp_driver", "_bfs_driver"]
 
 
 def test_label_propagation_driver_iterate_bit_equal(spark, monkeypatch):
-    """Driver-side LPA rounds (r12) equal the distributed iterate exactly,
+    """Driver-side LPA rounds equal the distributed iterate exactly,
     including fractional-weight rollup (decimal sum before the bigint
     projection) and the (votes DESC, label ASC) argmax; past the cap the
     distributed path runs."""
@@ -798,12 +817,15 @@ def test_label_propagation_driver_iterate_bit_equal(spark, monkeypatch):
         if a != b and (a * 31 + b * 17) % 7 == 0
     ]
     df = spark.createDataFrame(edges, "src string, dst string, w double")
-    dist = {tuple(r) for r in G.label_propagation(df, rounds=3).collect()}
-    drv = {tuple(r) for r in G.label_propagation(df, rounds=3, driver_iterate=True).collect()}
+    with distributed(monkeypatch, G, "_label_propagation_driver"):
+        dist = {tuple(r) for r in G.label_propagation(df, rounds=3).collect()}
+    ran = spy(monkeypatch, G, "_label_propagation_driver")
+    drv = {tuple(r) for r in G.label_propagation(df, rounds=3).collect()}
     assert drv == dist and len(drv) == 20
-    monkeypatch.setattr(G, "_DRIVER_EDGE_CAP", 3)
-    capped = {tuple(r) for r in G.label_propagation(df, rounds=3, driver_iterate=True).collect()}
+    monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 3)
+    capped = {tuple(r) for r in G.label_propagation(df, rounds=3).collect()}
     assert capped == dist
+    assert ran == ["_label_propagation_driver"]
 
 
 def test_compact_files_reduces_file_count(spark, tmp_path):
@@ -1939,9 +1961,10 @@ def test_chunk_overlap_tiling_invariants(spark):
                 assert c["n_tokens"] == W or lo + W >= n
 
 
-def test_label_propagation_partition_invariance(spark):
+def test_label_propagation_partition_invariance(spark, graph_paths):
     """LPA determinism: identical labels under 1 vs 32 input partitions
-    (the synchronous min-label formulation cannot depend on layout)."""
+    (the synchronous min-label formulation cannot depend on layout), on
+    both paths."""
     from pyspark.sql import functions as F
 
     from arc_cassandra_pipeline_plugin_spark.operators.graph import label_propagation
@@ -1951,9 +1974,10 @@ def test_label_propagation_partition_invariance(spark):
              if a != b and (a * 31 + b * 17) % 11 == 0]
     df1 = spark.createDataFrame(edges, "src string, dst string, w long").coalesce(1)
     df32 = spark.createDataFrame(edges, "src string, dst string, w long").repartition(32)
-    r1 = {tuple(r) for r in label_propagation(df1, rounds=3).collect()}
-    r32 = {tuple(r) for r in label_propagation(df32, rounds=3).collect()}
-    assert r1 == r32 and len(r1) > 10
+    for path in graph_paths():
+        r1 = {tuple(r) for r in label_propagation(df1, rounds=3).collect()}
+        r32 = {tuple(r) for r in label_propagation(df32, rounds=3).collect()}
+        assert r1 == r32 and len(r1) > 10, path
 
 
 def test_blocked_pair_join_hot_block_salting_result_identical(spark):
@@ -2037,7 +2061,7 @@ def test_graph_degenerate_iteration_guards(spark):
         G.label_propagation(e, rounds=0)
 
 
-def test_hits_rejects_negative_weights(spark):
+def test_hits_rejects_negative_weights(spark, graph_paths):
     """hits() max-normalizes NON-NEGATIVE contributions into a
     decimal(8,6) round vector; a negative weight would push the quotient
     outside ±0.999999 and overflow the cast (r10 ADVICE). The in-plan
@@ -2050,19 +2074,19 @@ def test_hits_rejects_negative_weights(spark):
     bad = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "a", -2.5)], "src string, dst string, w double"
     )
-    with _pytest.raises(Exception, match="non-negative"):
-        G.hits(bad, iters=1).collect()
-
     ok = spark.createDataFrame(
         [("a", "b", 2.0), ("b", "c", 1.0), ("a", "c", 1.0)],
         "src string, dst string, w double",
     )
-    rows = {r["node"]: (r["hub"], r["authority"]) for r in G.hits(ok, iters=2).collect()}
-    assert set(rows) == {"a", "b", "c"}
-    assert all(0.0 <= h <= 1.0 and 0.0 <= au <= 1.0 for h, au in rows.values())
+    for path in graph_paths():
+        with _pytest.raises(Exception, match="non-negative"):
+            G.hits(bad, iters=1).collect()
+        rows = {r["node"]: (r["hub"], r["authority"]) for r in G.hits(ok, iters=2).collect()}
+        assert set(rows) == {"a", "b", "c"}, path
+        assert all(0.0 <= h <= 1.0 and 0.0 <= au <= 1.0 for h, au in rows.values()), path
 
 
-def test_label_propagation_fractional_weights_sum_before_cast(spark):
+def test_label_propagation_fractional_weights_sum_before_cast(spark, graph_paths):
     """Fractional edge weights must sum BEFORE the bigint projection (the
     oracle's shape), and the projection is the floor-form half-toward-+inf
     convention floor(sum + 0.5): three 0.4-weight parallel votes total
@@ -2073,11 +2097,12 @@ def test_label_propagation_fractional_weights_sum_before_cast(spark):
     # w votes via one 0.4 edge (floor(0.9) -> 0): v must adopt u's label
     rows = [("u", "v", 0.4), ("u", "v", 0.4), ("u", "v", 0.4), ("w", "v", 0.4)]
     df = spark.createDataFrame(rows, "src string, dst string, w double")
-    got = {tuple(r) for r in label_propagation(df, rounds=1).collect()}
-    assert ("v", "u") in got
+    for path in graph_paths():
+        got = {tuple(r) for r in label_propagation(df, rounds=1).collect()}
+        assert ("v", "u") in got, path
 
 
-def test_label_propagation_fractional_weights_cross_engine(spark):
+def test_label_propagation_fractional_weights_cross_engine(spark, graph_paths):
     """Regression (r8 advisor): Spark truncates decimal->bigint while
     DuckDB rounds (CAST(1.6) -> 1 vs 2), so a bare cast broke cross-engine
     agreement on any non-integral group weight sum. The floor(sum + 0.5)
@@ -2097,7 +2122,6 @@ def test_label_propagation_fractional_weights_cross_engine(spark):
         ("d", "e", 2.3), ("a", "e", 0.2),
     ]
     df = spark.createDataFrame(rows, "src string, dst string, w double")
-    got = sorted(tuple(r) for r in label_propagation(df, rounds=3).collect())
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE edges(src VARCHAR, dst VARCHAR, w DOUBLE);"
@@ -2109,31 +2133,37 @@ def test_label_propagation_fractional_weights_cross_engine(spark):
             label_propagation_oracle_sql("SELECT src, dst, w FROM edges", rounds=3)
         ).fetchall()
     )
-    assert got == want
+    for path in graph_paths():
+        got = sorted(tuple(r) for r in label_propagation(df, rounds=3).collect())
+        assert got == want, path
 
 
-def test_truss_core_early_stop_is_result_identical(spark):
+def test_truss_core_early_stop_is_result_identical(spark, graph_paths):
     """Fixed-point early stop: running MORE rounds than the peel depth
     returns exactly the converged result (triangle graph is its own
     3-truss / 2-core fixed point from round 1, so rounds=5 must equal
-    rounds=1 output)."""
+    rounds=1 output). The early stop lives in the distributed rounds; the
+    replay must give the same answers."""
     from arc_cassandra_pipeline_plugin_spark.operators import graph as G
 
     tri = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")], "src string, dst string"
     )
-    t1 = {tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=1).collect()}
-    t5 = {tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=5).collect()}
-    assert t1 != set() and t5 == {
-        tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=2).collect()
-    }
-    # after the pendant edge (a, d) peels, rounds 2.. are the fixed point
-    assert {(r[0], r[1]) for r in t5} == {("a", "b"), ("a", "c"), ("b", "c")}
+    for path in graph_paths():
+        t1 = {tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=1).collect()}
+        t5 = {tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=5).collect()}
+        assert t1 != set() and t5 == {
+            tuple(r) for r in G.ktruss_edges(tri, k=3, rounds=2).collect()
+        }, path
+        # after the pendant edge (a, d) peels, rounds 2.. are the fixed point
+        assert {(r[0], r[1]) for r in t5} == {("a", "b"), ("a", "c"), ("b", "c")}, path
 
-    c1 = {tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=1).collect()}
-    c5 = {tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=5).collect()}
-    assert c5 == {tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=3).collect()}
-    assert {r[0] for r in c5} == {"a", "b", "c"} and len(c1) >= len(c5)
+        c1 = {tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=1).collect()}
+        c5 = {tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=5).collect()}
+        assert c5 == {
+            tuple(r) for r in G.kcore_vertices(tri, k=2, rounds=3).collect()
+        }, path
+        assert {r[0] for r in c5} == {"a", "b", "c"} and len(c1) >= len(c5), path
 
 
 def test_ann_recall_floors_on_sf1_twin(spark):

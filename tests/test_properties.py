@@ -306,20 +306,22 @@ def _py_kcore(edges, k, rounds):
 
 @given(edges=edges_strategy, k=st.integers(min_value=1, max_value=4))
 @_settings
-def test_kcore_matches_python_reference_and_is_monotone(spark, edges, k):
+def test_kcore_matches_python_reference_and_is_monotone(spark, graph_paths, edges, k):
     """kcore_vertices == the plain-Python bounded peel for any graph, and
-    the (k+1)-core is always a subset of the k-core (monotonicity)."""
+    the (k+1)-core is always a subset of the k-core (monotonicity), on
+    both paths."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import kcore_vertices
 
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
-        (r["a"], r["degree"])
-        for r in kcore_vertices(df, k=k, rounds=2).collect()
-    }
     want = set(_py_kcore(edges, k, rounds=2).items())
-    assert got == want
-    higher = {v for v, _ in kcore_vertices(df, k=k + 1, rounds=2).collect()}
-    assert higher <= {v for v, _ in got}
+    for path in graph_paths():
+        got = {
+            (r["a"], r["degree"])
+            for r in kcore_vertices(df, k=k, rounds=2).collect()
+        }
+        assert got == want, path
+        higher = {v for v, _ in kcore_vertices(df, k=k + 1, rounds=2).collect()}
+        assert higher <= {v for v, _ in got}, path
 
 
 def _py_ktruss(edges, k, rounds):
@@ -342,16 +344,17 @@ def _py_ktruss(edges, k, rounds):
 
 @given(edges=edges_strategy, k=st.integers(min_value=3, max_value=5))
 @_settings
-def test_ktruss_matches_python_reference(spark, edges, k):
+def test_ktruss_matches_python_reference(spark, graph_paths, edges, k):
     from arc_cassandra_pipeline_plugin_spark.operators.graph import ktruss_edges
 
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
-        (r["a"], r["b"], r["support"])
-        for r in ktruss_edges(df, k=k, rounds=2).collect()
-    }
     want = {(a, b, s) for (a, b), s in _py_ktruss(edges, k, rounds=2).items()}
-    assert got == want
+    for path in graph_paths():
+        got = {
+            (r["a"], r["b"], r["support"])
+            for r in ktruss_edges(df, k=k, rounds=2).collect()
+        }
+        assert got == want, path
 
 
 @given(ids=st.lists(st.integers(min_value=0, max_value=400),
@@ -418,12 +421,12 @@ def _py_ppr(edges, seeds, iters, damping=0.85):
     ),
 )
 @_settings
-def test_personalized_pagerank_mass_and_seed_locality(spark, edges):
+def test_personalized_pagerank_mass_and_seed_locality(spark, graph_paths, edges):
     """PPR invariants on arbitrary graphs: total rank mass never exceeds
     1 + epsilon (teleport + damped flow, dangling mass dropped), every
     rank is non-negative, and with NO path into a non-seed component the
     teleport keeps all mass on seeds (locality — the property that makes
-    PPR a recommendation primitive)."""
+    PPR a recommendation primitive). Both paths."""
     from pyspark.sql import functions as F
 
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
@@ -435,12 +438,16 @@ def test_personalized_pagerank_mass_and_seed_locality(spark, edges):
     )
     seeds = sorted({a for a, _ in edges})[:2]
     sdf = spark.createDataFrame([(s,) for s in seeds], "node int")
-    got = {r["node"]: r["rank"] for r in personalized_pagerank(df, sdf, iters=2).collect()}
-    assert all(v >= 0 for v in got.values())
-    assert sum(got.values()) <= 1.0 + 1e-9
     want = _py_ppr(edges, set(seeds), iters=2)
-    for v, r in want.items():
-        assert abs(got[v] - r) < 5e-12, (v, got[v], r)
+    for path in graph_paths():
+        got = {
+            r["node"]: r["rank"]
+            for r in personalized_pagerank(df, sdf, iters=2).collect()
+        }
+        assert all(v >= 0 for v in got.values()), path
+        assert sum(got.values()) <= 1.0 + 1e-9, path
+        for v, r in want.items():
+            assert abs(got[v] - r) < 5e-12, (path, v, got[v], r)
 
 
 def _py_rake(texts, stopwords, max_phrase):
@@ -931,10 +938,10 @@ def test_pava_matches_minimax_characterization(bins):
     t0=st.integers(min_value=0, max_value=3),
     rounds=st.integers(min_value=1, max_value=4),
 )
-def test_temporal_earliest_arrival_matches_bruteforce(spark, edges, t0, rounds):
+def test_temporal_earliest_arrival_matches_bruteforce(spark, graph_paths, edges, t0, rounds):
     """Earliest time-respecting arrival == brute-force dynamic program on
     any random temporal graph, seed time, and round budget (within the
-    same number of synchronous relaxations)."""
+    same number of synchronous relaxations), on both paths."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
         temporal_earliest_arrival,
     )
@@ -944,11 +951,6 @@ def test_temporal_earliest_arrival_matches_bruteforce(spark, edges, t0, rounds):
         return
     e = spark.createDataFrame(edges, "src int, dst int, et long")
     seeds = spark.createDataFrame([(0, t0)], "node int, t0 long")
-    got = {
-        r["node"]: r["at"]
-        for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
-    }
-
     want = {0: t0}
     for _ in range(rounds):
         nxt = dict(want)
@@ -957,7 +959,12 @@ def test_temporal_earliest_arrival_matches_bruteforce(spark, edges, t0, rounds):
                 if d not in nxt or t < nxt[d]:
                     nxt[d] = t
         want = nxt
-    assert got == want, (got, want)
+    for path in graph_paths():
+        got = {
+            r["node"]: r["at"]
+            for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
+        }
+        assert got == want, (path, got, want)
 
 
 @_settings
@@ -1014,13 +1021,15 @@ def test_global_rank_ties_matches_sql_windows(spark, keys):
     t0=st.integers(min_value=0, max_value=3),
     split=st.integers(min_value=0, max_value=5),
 )
-def test_temporal_incremental_equals_full_fixpoint(spark, edges, t0, split):
+def test_temporal_incremental_equals_full_fixpoint(spark, graph_paths, edges, t0, split):
     """Incremental maintenance contract (graph_temporal_reachability_
     incremental): base fixpoint (et <= split) then relaxing ONLY delta
     edges (et > split) equals the full-recompute fixpoint — on any random
     temporal graph, seed time, and split year. Both run to fixpoint
     (rounds = node count bounds the hop diameter: optimal earliest-arrival
-    paths are simple)."""
+    paths are simple). Both paths."""
+    from pyspark.sql import functions as F
+
     from arc_cassandra_pipeline_plugin_spark.operators.graph import (
         temporal_earliest_arrival,
     )
@@ -1031,24 +1040,23 @@ def test_temporal_incremental_equals_full_fixpoint(spark, edges, t0, split):
     rounds = 7  # max 7 distinct nodes -> simple paths have <= 6 edges
     e = spark.createDataFrame(edges, "src int, dst int, et long")
     seeds = spark.createDataFrame([(0, t0)], "node int, t0 long")
-    full = {
-        r["node"]: r["at"]
-        for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
-    }
-    from pyspark.sql import functions as F
-
     base = e.filter(F.col("et") <= split)
     delta = e.filter(F.col("et") > split)
-    arr_base = temporal_earliest_arrival(base, seeds, rounds=rounds) if base.count() else seeds.select("node", F.col("t0").alias("at"))
-    inc = {
-        r["node"]: r["at"]
-        for r in (
-            temporal_earliest_arrival(
-                delta, arr_base.select("node", F.col("at").alias("t0")), rounds=rounds
-            ) if delta.count() else arr_base
-        ).collect()
-    }
-    assert inc == full, (inc, full, split)
+    for path in graph_paths():
+        full = {
+            r["node"]: r["at"]
+            for r in temporal_earliest_arrival(e, seeds, rounds=rounds).collect()
+        }
+        arr_base = temporal_earliest_arrival(base, seeds, rounds=rounds) if base.count() else seeds.select("node", F.col("t0").alias("at"))
+        inc = {
+            r["node"]: r["at"]
+            for r in (
+                temporal_earliest_arrival(
+                    delta, arr_base.select("node", F.col("at").alias("t0")), rounds=rounds
+                ) if delta.count() else arr_base
+            ).collect()
+        }
+        assert inc == full, (path, inc, full, split)
 
 
 @given(

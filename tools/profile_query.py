@@ -1,16 +1,20 @@
-"""Stage-level profiler for one certified query (optimization guide §1).
+"""Stage-level profiler for certified queries (optimization guide §1).
 
-Runs a named query into the noop sink on the engine's own session
+Runs each named query into the noop sink on the engine's own session
 (``sources.get_spark``; the event-log confs reach the JVM through
 ``PYSPARK_SUBMIT_ARGS``, as in ``perfbench/run.py``), then parses the
 event log into a per-stage table: wall duration, summed executor run
 time, task count, input bytes, shuffle read/write bytes — the
-attribution the Spark UI would show, reconstructed headlessly. One
-untimed warmup pass precedes the timed pass so JIT and codegen compile
-outside the measurement (bench protocol parity).
+attribution the Spark UI would show, reconstructed headlessly — and the
+Spark job count of each timed trial (build + write). One untimed warmup
+pass precedes the timed passes so JIT and codegen compile outside the
+measurement (bench protocol parity).
 
 Usage:
-  python tools/profile_query.py <name> [--sf-dir DIR] [--trials N] [--plan OUT]
+  python tools/profile_query.py <name> [<name> ...] [--sf-dir DIR] [--trials N] [--plan OUT]
+
+With several names, one session runs them in turn and a closing
+per-query table lists the jobs of every trial and the median wall.
 
 Default fixture is the bench's split sf0.1 twin (what BENCH_r*.json
 measures). ``--plan OUT`` additionally writes ``explain('formatted')`` to
@@ -30,14 +34,33 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def parse_event_log(event_dir: str, t_mark_ms: float):
-    """Aggregate the (single) event log: stages completed after t_mark_ms,
-    with per-stage wall/cpu/io attribution summed from task-end events."""
+def _event_files(event_dir: str) -> list[str]:
     files = []
     for root, _dirs, names in os.walk(event_dir):
         for f in names:
             if not f.startswith(".") and "appstatus" not in f:
                 files.append(os.path.join(root, f))
+    return files
+
+
+def count_jobs(event_dir: str) -> dict[str, int]:
+    """Number of ``SparkListenerJobStart`` events per job description."""
+    counts: dict[str, int] = {}
+    for path in _event_files(event_dir):
+        with open(path) as fh:
+            for line in fh:
+                if '"SparkListenerJobStart"' not in line:
+                    continue
+                ev = json.loads(line)
+                desc = (ev.get("Properties") or {}).get("spark.job.description", "")
+                counts[desc] = counts.get(desc, 0) + 1
+    return counts
+
+
+def parse_event_log(event_dir: str, t_mark_ms: float):
+    """Aggregate the (single) event log: stages completed after t_mark_ms,
+    with per-stage wall/cpu/io attribution summed from task-end events."""
+    files = _event_files(event_dir)
     stages: dict[tuple[int, int], dict] = {}
     job_of_stage: dict[int, tuple[int, str]] = {}
     for path in files:
@@ -111,12 +134,14 @@ def parse_event_log(event_dir: str, t_mark_ms: float):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("name")
+    ap.add_argument("names", nargs="+")
     ap.add_argument("--sf-dir", default=None)
     ap.add_argument("--trials", type=int, default=1)
     ap.add_argument("--plan", default=None, help="write explain(formatted) here")
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
+    if args.plan and len(args.names) > 1:
+        ap.error("--plan takes a single query name")
 
     from bench import _split_fixture_dir  # noqa: E402
     from arc_cassandra_pipeline_plugin_spark.queries import load_all  # noqa: E402
@@ -124,7 +149,7 @@ def main() -> int:
 
     sf_dir = args.sf_dir or _split_fixture_dir("/root/testdata/sf0.1")
     registry = load_all()
-    q = registry[args.name]
+    queries = [(name, registry[name]) for name in args.names]
 
     event_dir = tempfile.mkdtemp(prefix="profile_evlog_")
     os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(
@@ -139,32 +164,39 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.plan:
-        df = q.fn(spark, sf_dir)
+        df = queries[0][1].fn(spark, sf_dir)
         from arc_cassandra_pipeline_plugin_spark.plans import explain_str
 
         with open(args.plan, "w") as fh:
             fh.write(explain_str(df, "formatted"))
         print(f"plan -> {args.plan}")
 
-    if not args.no_warmup:
-        spark.sparkContext.setJobDescription(f"warmup:{args.name}")
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    t_mark_ms = time.time() * 1000
-    walls = []
-    for i in range(args.trials):
-        spark.sparkContext.setJobDescription(f"timed:{args.name}:{i}")
-        t0 = time.time()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls.append(time.time() - t0)
+    walls: dict[str, list[float]] = {}
+    for name, q in queries:
+        if not args.no_warmup:
+            spark.sparkContext.setJobDescription(f"warmup:{name}")
+            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        walls[name] = []
+        for i in range(args.trials):
+            spark.sparkContext.setJobDescription(f"timed:{name}:{i}")
+            t0 = time.time()
+            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            walls[name].append(time.time() - t0)
     spark.sparkContext.setJobDescription(None)
 
     # flush the event log by stopping the session
     spark.stop()
-    rows = parse_event_log(event_dir, t_mark_ms)
+    rows = [r for r in parse_event_log(event_dir, 0) if r["desc"].startswith("timed:")]
+    jobs = count_jobs(event_dir)
+    trial_jobs = {
+        name: [jobs.get(f"timed:{name}:{i}", 0) for i in range(args.trials)]
+        for name in walls
+    }
 
-    print(f"\nquery={args.name} sf_dir={sf_dir}")
-    print("timed walls:", [round(w, 3) for w in walls])
+    print(f"\nqueries={' '.join(args.names)} sf_dir={sf_dir}")
+    for name in walls:
+        print(f"{name}: timed walls {[round(w, 3) for w in walls[name]]},"
+              f" jobs per trial {trial_jobs[name]}")
     total_wall = sum(r["wall_ms"] for r in rows)
     print(
         f"{len(rows)} stages (timed region), sum(stage wall)={total_wall} ms"
@@ -183,6 +215,11 @@ def main() -> int:
             f"{r.get('shuf_write', 0):>9} {r.get('fetch_wait_ms', 0):>7}  "
             f"{(r['desc'] or r['name'])[:70]}"
         )
+    if len(walls) > 1:
+        print("\n| query | jobs per trial | median wall s |\n|---|---|---|")
+        for name, w in walls.items():
+            med = sorted(w)[len(w) // 2]
+            print(f"| `{name}` | {', '.join(map(str, trial_jobs[name]))} | {med:.3f} |")
     return 0
 
 
