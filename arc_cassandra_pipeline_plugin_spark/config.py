@@ -19,9 +19,12 @@ Rebuilds the reference's config layer semantics (``CassandraExtract.scala:
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 import re
+import types
+import typing
 from typing import Any
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
@@ -64,7 +67,6 @@ _KEY_TO_FIELD = {
     "bucketBy": "bucket_by",
     "numBuckets": "num_buckets",
     "sortBy": "sort_by",
-    "observeMetrics": "observe_metrics",
     "trim": "trim",
     "lenient": "lenient",
     "nullableValues": "nullable_values",
@@ -94,58 +96,39 @@ def _substitute_env(text: str) -> str:
     return _ENV_RE.sub(lambda m: os.environ.get(m.group(1), m.group(0)), text)
 
 
-def _coerce(field: dataclasses.Field, value: Any, key: str) -> Any:
+@functools.cache
+def _field_types(cls: type) -> dict[str, Any]:
+    return typing.get_type_hints(cls)
+
+
+def _coerce(cls: type, fname: str, value: Any, key: str) -> Any:
     """Typed getters with validation, mirroring the reference's
     getValue[String]/[Int]/[Boolean]/[StringList] extractors
-    (``CassandraExtract.scala:22-35``)."""
-    typ = field.type if isinstance(field.type, str) else getattr(field.type, "__name__", "")
-    if field.name in ("environments", "partition_by", "bucket_by", "sort_by", "nullable_values"):
-        if not (isinstance(value, list) and all(isinstance(v, str) for v in value)):
-            raise TypeError(f"expected a list of strings for '{key}'")
+    (``CassandraExtract.scala:22-35``), read from the field's annotation:
+    the value must be an instance of one union member, where ``bool`` does
+    not count as a number, a ``list[str]`` holds only strings, and the
+    values of a ``dict[str, str]`` (Arc's ``Map[String,String]``) are
+    stringified."""
+    hint = _field_types(cls)[fname]
+    unions = (typing.Union, types.UnionType)
+    members = typing.get_args(hint) if typing.get_origin(hint) in unions else (hint,)
+    for member in members:
+        origin = typing.get_origin(member) or member
+        args = [typing.get_origin(a) or a for a in typing.get_args(member)]
+        if (isinstance(value, bool) and origin is not bool) or not isinstance(value, origin):
+            continue
+        if origin is list and args and not all(isinstance(v, args[0]) for v in value):
+            continue
+        if origin is dict and args == [str, str]:
+            return {str(k): str(v) for k, v in value.items()}
+        if origin is dict and args and not all(isinstance(v, args[1]) for v in value.values()):
+            continue
         return value
-    if field.name in ("params", "sql_params", "formatters", "authentication"):
-        if not isinstance(value, dict):
-            raise TypeError(f"expected an object for '{key}'")
-        return {str(k): str(v) for k, v in value.items()}
-    if field.name == "metadata":
-        if not isinstance(value, dict):
-            raise TypeError(f"expected an object for '{key}'")
-        return value
-    if field.name in ("num_partitions", "num_buckets"):
-        if isinstance(value, bool) or not isinstance(value, int):
-            raise TypeError(f"expected an integer for '{key}'")
-        return value
-    if field.name in (
-        "persist", "header", "infer_schema", "multi_line", "partition_output",
-        "observe_metrics", "trim", "lenient", "skip_sort_output", "whole_text",
-    ):
-        if not isinstance(value, bool):
-            raise TypeError(f"expected a boolean for '{key}'")
-        return value
-    if field.name == "rows_per_second":
-        if isinstance(value, bool) or not isinstance(value, int):
-            raise TypeError(f"expected an integer for '{key}'")
-        return value
-    if field.name in ("skip_min", "skip_max"):
-        # index-range bound: any comparable scalar (the stage compares it
-        # against the column's native min/max via Spark literals)
-        if isinstance(value, bool) or not isinstance(value, (int, float, str)):
-            raise TypeError(f"expected a scalar (number or string) for '{key}'")
-        return value
-    if field.name == "schema":
-        # schema accepts a DDL string OR a programmatic StructType (the
-        # annotation-substring fallback below would wrongly reject the
-        # latter because the stringified annotation contains 'str')
-        from pyspark.sql import types as T
-
-        if not isinstance(value, (str, T.StructType)):
-            raise TypeError(f"expected a DDL string or StructType for '{key}'")
-        return value
-    if "str" in str(typ) or field.name in ("sql", "input_uri", "output_uri", "description"):
-        if not isinstance(value, str):
-            raise TypeError(f"expected a string for '{key}'")
-        return value
-    return value
+    expected = " | ".join(
+        "None" if m is type(None) else str(m) if typing.get_args(m) else m.__name__
+        for m in members
+    )
+    raise TypeError(f"expected {expected} for '{key}'")
 
 
 def instantiate_stage(index: int, spec: dict[str, Any]) -> tuple[PipelineStage | None, list[StageError]]:
@@ -189,11 +172,11 @@ def instantiate_stage(index: int, spec: dict[str, Any]) -> tuple[PipelineStage |
         if fname not in fields:
             continue
         try:
-            kwargs[fname] = _coerce(fields[fname], value, key)
+            kwargs[fname] = _coerce(cls, fname, value, key)
         except TypeError as exc:
             errors.append(StageError(index, name, key, str(exc)))
 
-    if "name" not in kwargs:
+    if "name" not in spec:
         errors.append(StageError(index, name, "name", "required key missing"))
 
     if errors:

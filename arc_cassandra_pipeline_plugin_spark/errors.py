@@ -64,6 +64,10 @@ class StageDetail:
     The reference records type/name/description plus runtime metrics such as
     ``numPartitions``, ``outputColumns``, ``records``
     (``CassandraExtract.scala:126-132``, ``CassandraLoad.scala:98-101``).
+    ``numPartitions`` is recorded by extract and load stages only, the
+    reference's two instrumentation sites: it converts the frame to an RDD,
+    which under AQE runs the plan's shuffle stages, and the transform
+    stages' metrics must not execute a query of their own.
     """
 
     data: dict[str, Any] = field(default_factory=dict)

@@ -6,6 +6,10 @@ given ``(spark, logger, ctx)`` (``CassandraExtract.scala:81-83``,
 exactly that shape: a stage object with an ``execute(spark, ctx)`` method
 returning ``Optional[DataFrame]``, trivially testable without the config
 layer (reference entry point 2, ``CassandraExecuteSuite.scala:57-68``).
+
+Two dataclass bases say each shared step of that contract once:
+:class:`ViewStage` publishes a frame as a temp view (repartition, register,
+persist, metrics) and :class:`SQLStage` resolves a stage's SQL text.
 """
 
 from __future__ import annotations
@@ -115,17 +119,43 @@ def repartition(
 
 def record_frame_metrics(detail: StageDetail, df: DataFrame, count: bool = False) -> None:
     """Instrumentation parity (``CassandraExtract.scala:126-132``,
-    ``CassandraLoad.scala:98-101``): inputFiles / outputColumns /
-    numPartitions, optionally a forced ``records`` count."""
+    ``CassandraLoad.scala:98-101``): inputFiles / outputColumns, optionally
+    a forced ``records`` count. Recording runs no query: ``numPartitions``
+    is not recorded here, because ``df.rdd`` runs the plan's shuffle stages
+    under AQE in a query whose output nothing reads. Only the reference's
+    two instrumentation sites, :class:`~.extract.ExtractStage` and
+    :class:`~.load.LoadStage`, record it."""
     if not df.isStreaming:
         try:
             detail.set("inputFiles", len(df.inputFiles()))
         except Exception:  # sources without file provenance
             detail.set("inputFiles", None)
         detail.set("outputColumns", len(df.schema))
-        detail.set("numPartitions", df.rdd.getNumPartitions())
         if count:
             detail.set("records", df.count())
+
+
+@dataclass
+class ViewStage(PipelineStage):
+    """A stage that publishes its frame as ``output_view``: extracts and the
+    frame-producing transforms."""
+
+    output_view: str = ""
+    num_partitions: int | None = None
+    partition_by: list[str] = field(default_factory=list)
+    persist: bool = False
+
+    def _publish(self, df: DataFrame, ctx: PipelineContext) -> DataFrame:
+        """Repartition matrix, view registration, then persist FIRST so the
+        forced count materializes the cache (``CassandraExtract.scala:
+        107-133``: persist, then count) — otherwise the count pays a full
+        uncached pass and the first downstream consumer recomputes it."""
+        df = repartition(df, self.num_partitions, self.partition_by or None)
+        register_view(df, self.output_view, ctx)
+        if self.persist and not df.isStreaming:
+            df.persist(ctx.storage_level)
+        record_frame_metrics(self.stage_detail, df, count=self.persist)
+        return df
 
 
 def inject_parameters(sql_text: str, params: dict[str, str], strict: bool = True) -> str:
@@ -197,3 +227,25 @@ def resolve_sql_input(
             with urlopen(req) as resp:  # noqa: S310 - parity feature
                 sql = resp.read().decode("utf-8")
     return inject_parameters(sql, params, strict=strict)
+
+
+@dataclass
+class SQLStage(PipelineStage):
+    """A stage whose statement is SQL, inline or from ``input_uri``, with
+    ``${param}`` injection from the context's and the stage's params."""
+
+    sql: str | None = None
+    input_uri: str | None = None
+    sql_params: dict[str, str] = field(default_factory=dict)
+    #: optional Arc-style auth map for inputURI (CassandraExecute.scala:29)
+    authentication: dict[str, str] | None = None
+
+    def _sql_text(self, ctx: PipelineContext) -> str:
+        text = resolve_sql_input(
+            self.sql,
+            self.input_uri,
+            {**ctx.sql_params, **self.sql_params},
+            authentication=self.authentication,
+        )
+        self.stage_detail.set("sql", text)
+        return text

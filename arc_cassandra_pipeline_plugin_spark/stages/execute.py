@@ -14,58 +14,44 @@ Two backends:
 - :class:`CassandraExecute` — true-Cassandra parity via the Python
   ``cassandra-driver``, gated behind an import-try (the driver package is not
   in this environment).
+
+``SQLExecute``, ``CassandraExecute`` and ``SQLValidate`` resolve their SQL
+through :class:`~.base.SQLStage`.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
-from arc_cassandra_pipeline_plugin_spark.stages.base import PipelineStage, resolve_sql_input
+from arc_cassandra_pipeline_plugin_spark.stages.base import PipelineStage, SQLStage
 
 
 @dataclass
-class SQLExecute(PipelineStage):
+class SQLExecute(SQLStage):
     """Run DDL/DML on the Spark session catalog; returns no DataFrame."""
 
     stage_type: str = "SQLExecute"
-    sql: str | None = None
-    input_uri: str | None = None
-    sql_params: dict[str, str] = field(default_factory=dict)
-    #: optional Arc-style auth map for inputURI (CassandraExecute.scala:29)
-    authentication: dict[str, str] | None = None
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
-        merged = {**ctx.sql_params, **self.sql_params}
-        text = resolve_sql_input(
-            self.sql, self.input_uri, merged, authentication=self.authentication
-        )
-        self.stage_detail.set("sql", text)
-        spark.sql(text).collect()  # force side effect; DDL returns empty frame
+        # force the side effect; DDL returns an empty frame
+        spark.sql(self._sql_text(ctx)).collect()
         return None  # execute contributes nothing to the dataflow (":110")
 
 
 @dataclass
-class CassandraExecute(PipelineStage):
+class CassandraExecute(SQLStage):
     """Raw CQL over a driver-side connection (``CassandraExecute.scala:97-102``).
     Connection settings merge stage params over session conf, mirroring the
     ``CassandraConnectorConf.fromSparkConf`` overlay (``:98-101``)."""
 
     stage_type: str = "CassandraExecute"
-    sql: str | None = None
-    input_uri: str | None = None
-    sql_params: dict[str, str] = field(default_factory=dict)
-    authentication: dict[str, str] | None = None
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
-        merged = {**ctx.sql_params, **self.sql_params}
-        text = resolve_sql_input(
-            self.sql, self.input_uri, merged, authentication=self.authentication
-        )
-        self.stage_detail.set("sql", text)
+        text = self._sql_text(ctx)
         try:
             from cassandra.cluster import Cluster  # type: ignore[import-not-found]
         except ImportError as exc:  # pragma: no cover - env-dependent
@@ -93,7 +79,7 @@ class CassandraExecute(PipelineStage):
 
 
 @dataclass
-class SQLValidate(PipelineStage):
+class SQLValidate(SQLStage):
     """Data-quality gate: run SQL that must return EXACTLY one row whose
     first column is a boolean verdict; optional second column is a message
     (string, or a JSON object logged as structured detail). On a false
@@ -106,18 +92,9 @@ class SQLValidate(PipelineStage):
     SQL-bearing stage here."""
 
     stage_type: str = "SQLValidate"
-    sql: str | None = None
-    input_uri: str | None = None
-    sql_params: dict[str, str] = field(default_factory=dict)
-    authentication: dict[str, str] | None = None
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
-        merged = {**ctx.sql_params, **self.sql_params}
-        text = resolve_sql_input(
-            self.sql, self.input_uri, merged, authentication=self.authentication
-        )
-        self.stage_detail.set("sql", text)
-        rows = spark.sql(text).collect()  # contract: exactly one verdict row
+        rows = spark.sql(self._sql_text(ctx)).collect()  # contract: exactly one verdict row
         if len(rows) != 1:
             raise ValueError(
                 f"SQLValidate expects exactly 1 row, got {len(rows)}"

@@ -8,68 +8,66 @@ formats:
 
 1. streaming guard → empty DataFrame (``CassandraExtract.scala:92-94``)
 2. source read, schema inferred by the source (``CassandraExtract.scala:95-98``)
-3. optional repartition matrix (``CassandraExtract.scala:107-122``)
-4. view registration honoring immutable mode (``CassandraExtract.scala:123``)
-5. instrumentation + optional persist with forced materialization
-   (``CassandraExtract.scala:126-133``)
+3. publish through :class:`~.base.ViewStage`: optional repartition matrix
+   (``CassandraExtract.scala:107-122``), view registration honoring
+   immutable mode (``:123``), instrumentation + optional persist with
+   forced materialization (``:126-133``)
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Optional
+import functools
+from dataclasses import dataclass
+from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
 from arc_cassandra_pipeline_plugin_spark.functions import small_df
-from arc_cassandra_pipeline_plugin_spark.stages.base import (
-    PipelineStage,
-    record_frame_metrics,
-    register_view,
-    repartition,
-)
+from arc_cassandra_pipeline_plugin_spark.stages.base import ViewStage
+
+
+def minmax_manifest(df: DataFrame, col: str) -> DataFrame:
+    """Per-file ``min_val`` / ``max_val`` of ``col``, keyed by the hidden
+    ``_metadata.file_path`` column: one aggregate, O(files) rows. The
+    skipping index :class:`ParquetExtract` prunes with and
+    :class:`~.load.ParquetLoad` persists."""
+    c = F.col(col)
+    return df.groupBy(F.col("_metadata.file_path").alias("file_path")).agg(
+        F.min(c).alias("min_val"), F.max(c).alias("max_val")
+    )
 
 
 @dataclass
-class ExtractStage(PipelineStage):
+class ExtractStage(ViewStage):
     """Common extract behavior; subclasses implement :meth:`_read`."""
 
-    output_view: str = ""
-    num_partitions: int | None = None
-    partition_by: list[str] = field(default_factory=list)
-    persist: bool = False
     schema: T.StructType | str | None = None
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
         raise NotImplementedError
 
-    def _empty_schema(self) -> T.StructType:
-        """Schema of the streaming-guard empty frame. The reference returns a
-        completely empty DataFrame (``spark.emptyDataFrame``,
-        ``CassandraExtract.scala:93``)."""
-        if isinstance(self.schema, T.StructType):
-            return self.schema
-        return T.StructType([])
+    def _reader(self, spark: SparkSession, fmt: str, **opts) -> DataFrameReader:
+        """A ``fmt`` reader with the stage's own options, then the ``params``
+        passthrough (which may override them), then the supplied schema."""
+        reader = spark.read.format(fmt).options(**opts).options(**self.params)
+        return reader if self.schema is None else reader.schema(self.schema)
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
         if ctx.is_streaming:
             # Streaming guard: extract is explicitly not supported under a
-            # streaming context (CassandraExtract.scala:92-94).
-            df = small_df(spark, [], self._empty_schema())
+            # streaming context (CassandraExtract.scala:92-94); the reference
+            # returns a completely empty frame (spark.emptyDataFrame, :93).
+            schema = self.schema if isinstance(self.schema, T.StructType) else T.StructType([])
+            df = small_df(spark, [], schema)
         else:
             df = self._read(spark, ctx)
-
-        df = repartition(df, self.num_partitions, self.partition_by or None)
-        register_view(df, self.output_view, ctx)
-        if self.persist and not df.isStreaming:
-            # persist FIRST so the metrics count below materializes the cache
-            # (CassandraExtract.scala:130-133: persist, then forced count) —
-            # otherwise the count pays a full uncached pass and the first
-            # downstream consumer recomputes the source.
-            df.persist(ctx.storage_level)
-        record_frame_metrics(self.stage_detail, df, count=self.persist)
+        df = self._publish(df, ctx)
+        if not df.isStreaming:
+            # the reference's read-side partition count (CassandraExtract.scala:128)
+            self.stage_detail.set("numPartitions", df.rdd.getNumPartitions())
         return df
 
 
@@ -86,58 +84,33 @@ class ParquetExtract(ExtractStage):
     lakehouse data-skipping pattern (Delta/Iceberg file stats), exposed on
     the extract side, the reference's only physical-knob surface
     (``CassandraExtract.scala:107-122``). The manifest is built once from
-    the hidden ``_metadata.file_path`` column (one aggregate keyed by
-    file) and, when ``skipManifestURI`` is set, persisted there and
-    reused — subsequent runs prune from the manifest alone, touching no
-    skipped data file. A persisted manifest is validated against the LIVE
-    file listing first (O(files) name comparison, no data read): files
-    appended after the manifest was built, or compacted away since, make
-    it stale — a stale manifest is rebuilt in place, never trusted
-    (silently excluding appended files would break the "results are
-    exactly the full scan's" guarantee; pruning to removed files would
-    crash the read). The driver-side file list is O(files), never rows,
-    and is refused above ``maxManifestFiles`` (default 100k) — a table
-    with millions of files needs a real table format's manifest tree, and
-    failing loudly beats OOMing the driver. Both the manifest build and
-    the pruned read set ``basePath``, so hive-style partition columns
-    survive file-level pruning. The range predicate is re-applied to the
-    surviving rows, so results are exactly the full scan's (skipping is a
-    pure optimization).
-    Metrics: ``skipIndexFilesTotal`` / ``skipIndexFilesRead``.
+    the hidden ``_metadata.file_path`` column (:func:`minmax_manifest`)
+    and, when ``skipManifestURI`` is set, persisted there and reused —
+    subsequent runs prune from the manifest alone, touching no skipped
+    data file. Metrics: ``skipIndexFilesTotal`` / ``skipIndexFilesRead``.
+
+    **Bloom-filter file index** (``skipBloomColumn`` + ``skipBloomValue``,
+    optionally ``skipBloomManifestURI``) for EQUALITY probes — the
+    complement of the min/max index, which cannot prune high-cardinality
+    uniform columns. Metrics: ``bloomFilesTotal`` / ``bloomFilesRead``.
+
+    Both indexes prune through :meth:`_pruned_read`, which states the
+    staleness, refusal and exactness rules once.
     """
 
     stage_type: str = "ParquetExtract"
     input_uri: str = ""
     skip_index_col: str = ""
-    skip_min: object = None
-    skip_max: object = None
+    skip_min: int | float | str | None = None
+    skip_max: int | float | str | None = None
     skip_manifest_uri: str = ""
     max_manifest_files: int = 100_000
-    #: Bloom-filter file index for EQUALITY probes — the complement of the
-    #: min/max index (which cannot prune high-cardinality uniform columns):
     #: per file, the set of md5-derived bit positions of its values; a probe
     #: keeps only files whose set contains ALL the probe value's positions.
     #: False positives read an extra file; false negatives are impossible.
     skip_bloom_col: str = ""
-    skip_bloom_value: object = None
+    skip_bloom_value: bool | int | float | str | None = None
     skip_bloom_manifest_uri: str = ""
-
-    def _list_data_files(self, spark: SparkSession) -> set:
-        """Live recursive listing of the layout's data files as normalized
-        (scheme-less) paths — pure filesystem metadata, O(files); no
-        parquet footer or data row is ever touched."""
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.input_uri)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        it = fs.listFiles(fs.makeQualified(path), True)
-        out = set()
-        while it.hasNext():
-            f = it.next()
-            name = f.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
-                continue  # _SUCCESS, hidden/CRC side files
-            out.add(f.getPath().toUri().getPath())
-        return out
 
     @staticmethod
     def _norm_path(uri: str) -> str:
@@ -162,24 +135,120 @@ class ParquetExtract(ExtractStage):
             return unquote(uri)
         return urlunparse((p.scheme, p.netloc, unquote(p.path), "", "", ""))
 
-    def _qualified_base(self, spark: SparkSession) -> str:
-        """``input_uri`` qualified through its own filesystem (adds the
-        scheme/authority a bare path lacks), so ``basePath`` sits over the
-        pruned file URIs on any FS, not just the default one."""
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.input_uri)
-        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs.makeQualified(path).toString()
-
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = spark.read.options(**self.params)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
+        reader = self._reader(spark, "parquet")
         if self.skip_index_col and (self.skip_min is not None or self.skip_max is not None):
             return self._skipping_read(spark, reader)
         if self.skip_bloom_col and self.skip_bloom_value is not None:
             return self._bloom_skipping_read(spark, reader)
-        return reader.parquet(self.input_uri)
+        return reader.load(self.input_uri)
+
+    def _pruned_read(
+        self,
+        spark: SparkSession,
+        reader: DataFrameReader,
+        metric: str,
+        manifest_uri: str,
+        meta: dict,
+        build: Callable[[DataFrame], DataFrame],
+        conds: Callable[[Callable[[], DataFrame]], tuple[Column, Column]],
+    ) -> DataFrame:
+        """Read only the files a per-file manifest keeps, then re-apply the
+        row predicate, so results are exactly the full scan's (pruning is a
+        pure optimization).
+
+        - The live recursive file listing is pure filesystem metadata,
+          O(files), never rows, and is refused above ``maxManifestFiles``
+          (default 100k): a table with millions of files needs a real table
+          format's manifest tree, and failing loudly beats OOMing the driver.
+        - A manifest persisted at ``manifest_uri`` is trusted only when its
+          file set equals the LIVE listing (O(files) name comparison, no
+          data read) and its ``meta`` columns hold the expected values
+          (the bloom index's column and geometry). Files appended after it
+          was built, or compacted away since, make it stale: silently
+          excluding appended files would break exactness, and pruning to
+          removed files would crash the read. A stale or missing manifest
+          is rebuilt with ``build`` over the full read and, with a
+          ``manifest_uri``, persisted there.
+        - ``conds(full)`` gives the manifest keep predicate and the row
+          predicate; ``full()`` is the read of the whole layout, made once
+          (its schema inference is a job) and shared with the build. The
+          keep-list collect is the planner's O(files) file census. Both the
+          manifest build and the pruned read set ``basePath`` (``input_uri``
+          qualified through its own filesystem, so it sits over the pruned
+          file URIs on any FS), so hive-style partition columns survive
+          file-level pruning.
+
+        Metrics: ``<metric>Total`` / ``<metric>Read``."""
+        path = spark._jvm.org.apache.hadoop.fs.Path(self.input_uri)
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        base = fs.makeQualified(path)
+        reader = reader.option("basePath", base.toString())
+
+        @functools.cache
+        def full() -> DataFrame:
+            return reader.load(self.input_uri)
+
+        live, files = set(), fs.listFiles(base, True)
+        while files.hasNext():
+            f = files.next().getPath()
+            if not f.getName().startswith(("_", ".")):  # _SUCCESS, hidden/CRC files
+                live.add(f.toUri().getPath())
+        if len(live) > self.max_manifest_files:
+            raise ValueError(
+                f"file index refused: {len(live)} data files exceed "
+                f"maxManifestFiles={self.max_manifest_files}; a driver-side "
+                "file manifest at this count risks driver memory — use a "
+                "table format with a manifest tree (Delta/Iceberg) or "
+                "hive partition pruning instead"
+            )
+        manifest = None
+        if manifest_uri:
+            try:
+                persisted = spark.read.parquet(manifest_uri)
+                # a manifest without the meta columns raises here: stale too
+                head = persisted.select(*meta).first() if meta else {}
+                if head is not None and all(head[k] == v for k, v in meta.items()):
+                    mpaths = {
+                        self._norm_path(r["file_path"])
+                        for r in persisted.select("file_path").collect()
+                    }
+                    if mpaths == live:
+                        manifest = persisted
+            except Exception:
+                pass  # not built yet
+        if manifest is None:
+            manifest = build(full())
+            if manifest_uri:
+                manifest.write.mode("overwrite").parquet(manifest_uri)
+                manifest = spark.read.parquet(manifest_uri)
+
+        keep_cond, row_cond = conds(full)
+        rows = manifest.select("file_path", keep_cond.alias("_keep")).collect()
+        keep = [self._read_path(r["file_path"]) for r in rows if r["_keep"]]
+        self.stage_detail.set(f"{metric}Total", len(rows))
+        self.stage_detail.set(f"{metric}Read", len(keep))
+        if not keep:
+            return full().filter(F.lit(False))
+        return reader.load(keep).filter(row_cond)
+
+    def _skipping_read(self, spark: SparkSession, reader: DataFrameReader) -> DataFrame:
+        col = F.col(self.skip_index_col)
+
+        def conds(full) -> tuple[Column, Column]:
+            keep_cond = row_cond = F.lit(True)
+            if self.skip_min is not None:
+                keep_cond = keep_cond & (F.col("max_val") >= F.lit(self.skip_min))
+                row_cond = row_cond & (col >= F.lit(self.skip_min))
+            if self.skip_max is not None:
+                keep_cond = keep_cond & (F.col("min_val") <= F.lit(self.skip_max))
+                row_cond = row_cond & (col <= F.lit(self.skip_max))
+            return keep_cond, row_cond
+
+        return self._pruned_read(
+            spark, reader, "skipIndexFiles", self.skip_manifest_uri, {},
+            lambda df: minmax_manifest(df, self.skip_index_col), conds,
+        )
 
     #: bloom geometry: 4096 bits x 5 hashes holds the false-positive rate
     #: under ~1% to ~400 distinct values per file; saturated files simply
@@ -197,8 +266,6 @@ class ParquetExtract(ExtractStage):
         (``0.0001`` vs ``1.0E-4``), boolean (``True`` vs ``true``) and
         date/timestamp values, which would prune files containing real
         matches (silent row loss). One-row local job, O(1)."""
-        from pyspark.sql import functions as F
-
         row = (
             spark.range(1)
             .select(F.lit(self.skip_bloom_value).cast(dtype).alias("_probe"))
@@ -209,8 +276,6 @@ class ParquetExtract(ExtractStage):
 
     @classmethod
     def _bloom_pos_cols(cls, col_name: str) -> list:
-        from pyspark.sql import functions as F
-
         return [
             (
                 F.conv(
@@ -225,142 +290,36 @@ class ParquetExtract(ExtractStage):
             for k in range(cls._BLOOM_K)
         ]
 
-    def _bloom_skipping_read(self, spark: SparkSession, reader) -> DataFrame:
-        """Equality-probe file skipping via a per-file Bloom index: the
-        manifest holds each file's SORTED set of bit positions; the pruned
-        read keeps files containing ALL the probe's positions, then
-        re-applies the equality predicate (pruning is a pure optimization
-        — results are exactly the full scan's). Same staleness discipline
-        as the min/max manifest: validated against the live O(files)
-        listing, rebuilt when the layout changed.
-        Metrics: ``bloomFilesTotal`` / ``bloomFilesRead``."""
-        from pyspark.sql import functions as F
+    def _bloom_skipping_read(self, spark: SparkSession, reader: DataFrameReader) -> DataFrame:
+        """Equality-probe file skipping: the manifest holds each file's
+        SORTED set of bit positions; the read keeps files containing ALL
+        the probe's positions, then re-applies the equality predicate."""
+        meta = {
+            "bloom_col": self.skip_bloom_col,
+            "bloom_bits": self._BLOOM_BITS,
+            "bloom_k": self._BLOOM_K,
+        }
 
-        reader = reader.option("basePath", self._qualified_base(spark))
-        live = self._list_data_files(spark)
-        if len(live) > self.max_manifest_files:
-            raise ValueError(
-                f"bloom index refused: {len(live)} data files exceed "
-                f"maxManifestFiles={self.max_manifest_files}"
-            )
-        base = reader.parquet(self.input_uri)
-        dtype = base.schema[self.skip_bloom_col].dataType
-        manifest = None
-        if self.skip_bloom_manifest_uri:
-            try:
-                persisted = spark.read.parquet(self.skip_bloom_manifest_uri)
-                # geometry + column validity: a manifest built for a
-                # different column or bloom geometry would prune with the
-                # wrong bit sets (silent row loss) — treat it as stale
-                # exactly like a changed file layout
-                meta_ok = {"bloom_col", "bloom_bits", "bloom_k"} <= set(
-                    persisted.columns
-                )
-                if meta_ok:
-                    head = persisted.select(
-                        "bloom_col", "bloom_bits", "bloom_k"
-                    ).first()
-                    meta_ok = head is not None and (
-                        head["bloom_col"] == self.skip_bloom_col
-                        and head["bloom_bits"] == self._BLOOM_BITS
-                        and head["bloom_k"] == self._BLOOM_K
-                    )
-                if meta_ok:
-                    mpaths = {
-                        self._norm_path(r["file_path"])
-                        for r in persisted.select("file_path").collect()
-                    }
-                    if mpaths == live:
-                        manifest = persisted
-            except Exception:
-                manifest = None  # not built yet
-        if manifest is None:
+        def build(df: DataFrame) -> DataFrame:
             pos = F.explode(F.array(*self._bloom_pos_cols(self.skip_bloom_col)))
-            manifest = (
-                base.select(
-                    F.col("_metadata.file_path").alias("file_path"),
-                    pos.alias("pos"),
-                )
+            return (
+                df.select(F.col("_metadata.file_path").alias("file_path"), pos.alias("pos"))
                 .groupBy("file_path")
                 .agg(F.sort_array(F.collect_set("pos")).alias("bloom"))
-                .select(
-                    "file_path",
-                    "bloom",
-                    F.lit(self.skip_bloom_col).alias("bloom_col"),
-                    F.lit(self._BLOOM_BITS).alias("bloom_bits"),
-                    F.lit(self._BLOOM_K).alias("bloom_k"),
-                )
+                .select("file_path", "bloom", *(F.lit(v).alias(k) for k, v in meta.items()))
             )
-            if self.skip_bloom_manifest_uri:
-                manifest.write.mode("overwrite").parquet(self.skip_bloom_manifest_uri)
-                manifest = spark.read.parquet(self.skip_bloom_manifest_uri)
 
-        probe = self._bloom_positions_probe(spark, dtype)
-        keep_cond = F.lit(True)
-        for p in probe:
-            keep_cond = keep_cond & F.array_contains(F.col("bloom"), p)
-        rows = manifest.select("file_path", keep_cond.alias("_keep")).collect()
-        keep = [self._read_path(r["file_path"]) for r in rows if r["_keep"]]
-        self.stage_detail.set("bloomFilesTotal", len(rows))
-        self.stage_detail.set("bloomFilesRead", len(keep))
-        eq = F.col(self.skip_bloom_col) == F.lit(self.skip_bloom_value).cast(dtype)
-        if not keep:
-            return reader.parquet(self.input_uri).filter(F.lit(False))
-        return reader.parquet(*keep).filter(eq)
+        def conds(full) -> tuple[Column, Column]:
+            dtype = full().schema[self.skip_bloom_col].dataType
+            keep_cond = F.lit(True)
+            for p in self._bloom_positions_probe(spark, dtype):
+                keep_cond = keep_cond & F.array_contains(F.col("bloom"), p)
+            eq = F.col(self.skip_bloom_col) == F.lit(self.skip_bloom_value).cast(dtype)
+            return keep_cond, eq
 
-    def _skipping_read(self, spark: SparkSession, reader) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        reader = reader.option("basePath", self._qualified_base(spark))
-        col = F.col(self.skip_index_col)
-        live = self._list_data_files(spark)
-        if len(live) > self.max_manifest_files:
-            raise ValueError(
-                f"skipping index refused: {len(live)} data files exceed "
-                f"maxManifestFiles={self.max_manifest_files}; a driver-side "
-                "file manifest at this count risks driver memory — use a "
-                "table format with a manifest tree (Delta/Iceberg) or "
-                "hive partition pruning instead"
-            )
-        manifest = None
-        if self.skip_manifest_uri:
-            try:
-                persisted = spark.read.parquet(self.skip_manifest_uri)
-                mpaths = {
-                    self._norm_path(r["file_path"])
-                    for r in persisted.select("file_path").collect()
-                }
-                if mpaths == live:
-                    manifest = persisted
-                # else: stale (files appended or compacted away) — rebuild
-            except Exception:
-                manifest = None  # not built yet
-        if manifest is None:
-            manifest = (
-                reader.parquet(self.input_uri)
-                .groupBy(F.col("_metadata.file_path").alias("file_path"))
-                .agg(F.min(col).alias("min_val"), F.max(col).alias("max_val"))
-            )
-            if self.skip_manifest_uri:
-                manifest.write.mode("overwrite").parquet(self.skip_manifest_uri)
-                manifest = spark.read.parquet(self.skip_manifest_uri)
-
-        keep_cond = F.lit(True)
-        row_cond = F.lit(True)
-        if self.skip_min is not None:
-            keep_cond = keep_cond & (F.col("max_val") >= F.lit(self.skip_min))
-            row_cond = row_cond & (col >= F.lit(self.skip_min))
-        if self.skip_max is not None:
-            keep_cond = keep_cond & (F.col("min_val") <= F.lit(self.skip_max))
-            row_cond = row_cond & (col <= F.lit(self.skip_max))
-        # O(files) driver list — the planner's file census, never row data
-        rows = manifest.select("file_path", keep_cond.alias("_keep")).collect()
-        keep = [self._read_path(r["file_path"]) for r in rows if r["_keep"]]
-        self.stage_detail.set("skipIndexFilesTotal", len(rows))
-        self.stage_detail.set("skipIndexFilesRead", len(keep))
-        if not keep:
-            return reader.parquet(self.input_uri).filter(F.lit(False))
-        return reader.parquet(*keep).filter(row_cond)
+        return self._pruned_read(
+            spark, reader, "bloomFiles", self.skip_bloom_manifest_uri, meta, build, conds
+        )
 
 
 @dataclass
@@ -377,15 +336,9 @@ class DelimitedExtract(ExtractStage):
     infer_schema: bool = False
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = (
-            spark.read.option("header", self.header)
-            .option("sep", self.delimiter)
-            .option("inferSchema", self.infer_schema)
-            .options(**self.params)
-        )
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.csv(self.input_uri)
+        return self._reader(
+            spark, "csv", header=self.header, sep=self.delimiter, inferSchema=self.infer_schema
+        ).load(self.input_uri)
 
 
 @dataclass
@@ -397,10 +350,7 @@ class ORCExtract(ExtractStage):
     input_uri: str = ""
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = spark.read.options(**self.params)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.orc(self.input_uri)
+        return self._reader(spark, "orc").load(self.input_uri)
 
 
 @dataclass
@@ -412,10 +362,7 @@ class JSONExtract(ExtractStage):
     multi_line: bool = False
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = spark.read.option("multiLine", self.multi_line).options(**self.params)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.json(self.input_uri)
+        return self._reader(spark, "json", multiLine=self.multi_line).load(self.input_uri)
 
 
 @dataclass
@@ -430,14 +377,7 @@ class XMLExtract(ExtractStage):
     row_tag: str = "row"
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = (
-            spark.read.format("xml")
-            .option("rowTag", self.row_tag)
-            .options(**self.params)
-        )
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.load(self.input_uri)
+        return self._reader(spark, "xml", rowTag=self.row_tag).load(self.input_uri)
 
 
 @dataclass
@@ -451,10 +391,7 @@ class TextExtract(ExtractStage):
     whole_text: bool = False
 
     def _read(self, spark: SparkSession, ctx: PipelineContext) -> DataFrame:
-        reader = spark.read.options(**self.params)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        return reader.text(self.input_uri, wholetext=self.whole_text)
+        return self._reader(spark, "text", wholetext=self.whole_text).load(self.input_uri)
 
 
 @dataclass
@@ -508,8 +445,7 @@ class RateStreamExtract(ExtractStage):
             .options(**self.params)
             .load()
         )
-        df = repartition(df, self.num_partitions, self.partition_by or None)
-        register_view(df, self.output_view, ctx)
+        df = self._publish(df, ctx)
         self.stage_detail.set("outputColumns", len(df.schema))
         self.stage_detail.set("isStreaming", True)
         return df

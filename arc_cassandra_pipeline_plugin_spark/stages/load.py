@@ -11,6 +11,9 @@ Rebuilds ``CassandraLoad`` (``CassandraLoad.scala:92-164``):
    truncating sink requires ``confirm.truncate=true``
    (``CassandraLoadSuite.scala:104``)
 5. optional repartition before write (``CassandraLoad.scala:131-151``)
+
+Every sink starts from :meth:`LoadStage._writer`: save mode, ``params``,
+and hive-style ``partitionBy`` where the sink offers it.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
@@ -28,16 +31,11 @@ from arc_cassandra_pipeline_plugin_spark.stages.base import (
     record_frame_metrics,
     repartition,
 )
+from arc_cassandra_pipeline_plugin_spark.stages.extract import minmax_manifest
 
 #: SaveMode whitelist (CassandraLoad.scala:35); Overwrite is the default.
+#: ``DataFrameWriter.mode`` takes these names case-insensitively.
 SAVE_MODES = ("Append", "ErrorIfExists", "Ignore", "Overwrite")
-
-_SAVE_MODE_MAP = {
-    "Append": "append",
-    "ErrorIfExists": "errorifexists",
-    "Ignore": "ignore",
-    "Overwrite": "overwrite",
-}
 
 
 @dataclass
@@ -53,10 +51,6 @@ class LoadStage(PipelineStage):
     #: ``confirm.truncate`` param (CassandraLoadSuite.scala:104)
     requires_truncate_confirmation: bool = False
 
-    #: capture write-completion metrics via Observation (reference parity
-    #: for the stage-completed listener, CassandraLoad.scala:105,161)
-    observe_metrics: bool = True
-
     def __post_init__(self) -> None:
         if self.save_mode not in SAVE_MODES:
             raise ValueError(
@@ -65,6 +59,16 @@ class LoadStage(PipelineStage):
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
         raise NotImplementedError
+
+    def _writer(self, df: DataFrame, partition_output: bool = False) -> DataFrameWriter:
+        """``df``'s writer with the save mode and the ``params`` passthrough;
+        ``partitionBy`` on ``partition_by`` when ``partition_output`` is set.
+        ``confirm.truncate`` is this stage's own gate, never a sink option."""
+        opts = {k: v for k, v in self.params.items() if k != "confirm.truncate"}
+        writer = df.write.mode(self.save_mode).options(**opts)
+        if partition_output and self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        return writer
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
         df = spark.table(self.input_view)  # view resolution (CassandraLoad.scala:96)
@@ -75,6 +79,8 @@ class LoadStage(PipelineStage):
             # (CassandraLoad.scala:108-109). streaming.StreamingLoad upgrades.
             self.stage_detail.set("streamingSkipped", True)
             return df
+        # the reference's write-side partition count (CassandraLoad.scala:100)
+        self.stage_detail.set("numPartitions", df.rdd.getNumPartitions())
 
         if (
             self.save_mode == "Overwrite"
@@ -87,23 +93,17 @@ class LoadStage(PipelineStage):
                 self.stage_detail.as_dict(),
             )
 
+        # Write-completion metrics without a second pass: Observation rides
+        # the write job itself — the PySpark-idiomatic equivalent of the
+        # reference's stage-completed Spark listener (CassandraLoad.scala:
+        # 105,161 via ListenerUtils).
+        obs = Observation()
         out = repartition(df, self.num_partitions, self.partition_by or None)
-        if self.observe_metrics:
-            # Write-completion metrics without a second pass: Observation
-            # rides the write job itself — the PySpark-idiomatic equivalent
-            # of the reference's stage-completed Spark listener
-            # (CassandraLoad.scala:105,161 via ListenerUtils).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            out = out.observe(obs, F.count(F.lit(1)).alias("records"))
-            self._write(out, spark, ctx)
-            try:
-                self.stage_detail.set("records", obs.get["records"])
-            except Exception:
-                pass
-        else:
-            self._write(out, spark, ctx)
+        self._write(out.observe(obs, F.count(F.lit(1)).alias("records")), spark, ctx)
+        try:
+            self.stage_detail.set("records", obs.get["records"])
+        except Exception:
+            pass
         return df
 
 
@@ -141,25 +141,15 @@ class ParquetLoad(LoadStage):
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
         if self.skip_sort_output and self.skip_index_col:
             # default partition count from the session's shuffle setting —
-            # df.rdd.getNumPartitions() would force a Python->RDD plan
-            # conversion just to read a number
+            # reading the frame's own partition count would force an RDD
+            # conversion of the plan just to read a number
             n = self.num_partitions or int(
                 df.sparkSession.conf.get("spark.sql.shuffle.partitions")
             )
             df = df.repartitionByRange(n, self.skip_index_col)
-        writer = df.write.mode(_SAVE_MODE_MAP[self.save_mode]).options(**self.params)
-        if self.partition_output and self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.output_uri)
+        self._writer(df, self.partition_output).parquet(self.output_uri)
         if self.skip_index_col and self.skip_manifest_uri:
-            from pyspark.sql import functions as F
-
-            col = F.col(self.skip_index_col)
-            manifest = (
-                spark.read.parquet(self.output_uri)
-                .groupBy(F.col("_metadata.file_path").alias("file_path"))
-                .agg(F.min(col).alias("min_val"), F.max(col).alias("max_val"))
-            )
+            manifest = minmax_manifest(spark.read.parquet(self.output_uri), self.skip_index_col)
             manifest.write.mode("overwrite").parquet(self.skip_manifest_uri)
             self.stage_detail.set(
                 "skipIndexFilesIndexed", spark.read.parquet(self.skip_manifest_uri).count()
@@ -178,16 +168,10 @@ class XMLLoad(LoadStage):
     partition_output: bool = False
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
-        writer = (
-            df.write.format("xml")
-            .mode(_SAVE_MODE_MAP[self.save_mode])
-            .option("rowTag", self.row_tag)
-            .option("rootTag", self.root_tag)
-            .options(**self.params)
-        )
-        if self.partition_output and self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.save(self.output_uri)
+        # the params passthrough keeps precedence over the tag options
+        tags = {"rowTag": self.row_tag, "rootTag": self.root_tag}
+        writer = self._writer(df, self.partition_output).format("xml")
+        writer.options(**{**tags, **self.params}).save(self.output_uri)
 
 
 @dataclass
@@ -199,10 +183,7 @@ class ORCLoad(LoadStage):
     partition_output: bool = False
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
-        writer = df.write.mode(_SAVE_MODE_MAP[self.save_mode]).options(**self.params)
-        if self.partition_output and self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.orc(self.output_uri)
+        self._writer(df, self.partition_output).orc(self.output_uri)
 
 
 @dataclass
@@ -214,12 +195,8 @@ class DelimitedLoad(LoadStage):
     header: bool = True
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
-        (
-            df.write.mode(_SAVE_MODE_MAP[self.save_mode])
-            .option("header", self.header)
-            .options(**self.params)
-            .csv(self.output_uri)
-        )
+        # the params passthrough keeps precedence over ``header``
+        self._writer(df).options(**{"header": self.header, **self.params}).csv(self.output_uri)
 
 
 @dataclass
@@ -237,7 +214,7 @@ class TableLoad(LoadStage):
     sort_by: list[str] = field(default_factory=list)
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
-        writer = df.write.mode(_SAVE_MODE_MAP[self.save_mode]).options(**self.params)
+        writer = self._writer(df)
         if self.bucket_by:
             if not self.num_buckets:
                 raise ValueError("bucket_by requires num_buckets")
@@ -260,11 +237,5 @@ class CassandraLoad(LoadStage):
     requires_truncate_confirmation: bool = True
 
     def _write(self, df: DataFrame, spark: SparkSession, ctx: PipelineContext) -> None:
-        opts = {k: v for k, v in self.params.items() if k != "confirm.truncate"}
-        (
-            df.write.mode(_SAVE_MODE_MAP[self.save_mode])
-            .options(**opts)
-            .options(table=self.table, keyspace=self.keyspace)
-            .format("org.apache.spark.sql.cassandra")
-            .save()
-        )
+        writer = self._writer(df).options(table=self.table, keyspace=self.keyspace)
+        writer.format("org.apache.spark.sql.cassandra").save()

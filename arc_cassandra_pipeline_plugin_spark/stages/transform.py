@@ -4,7 +4,10 @@ The reference's pipeline model presumes a ``SQLTransform`` stage between
 extract and load (SURVEY.md §0; pipeline-composition pattern in
 ``src/it/resources/arc.json:1-30``) — all relational operators are supplied
 by Spark SQL over the registered views. This module supplies that stage plus
-a programmatic DataFrame-function variant.
+a programmatic DataFrame-function variant. ``SQLTransform``,
+``PythonTransform`` and ``OperatorTransform`` publish through
+:class:`~.base.ViewStage`; ``SQLTransform`` resolves its SQL through
+:class:`~.base.SQLStage`.
 """
 
 from __future__ import annotations
@@ -13,19 +16,20 @@ from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
 from arc_cassandra_pipeline_plugin_spark.stages.base import (
     PipelineStage,
+    SQLStage,
+    ViewStage,
     record_frame_metrics,
     register_view,
-    repartition,
-    resolve_sql_input,
 )
 
 
 @dataclass
-class SQLTransform(PipelineStage):
+class SQLTransform(SQLStage, ViewStage):
     """Run a SQL statement over the registered views; publish the result as
     ``output_view``. SQL resolves inline or from ``input_uri``
     (``CassandraExecute.scala:31-32`` pattern) with ``${param}`` injection
@@ -33,35 +37,13 @@ class SQLTransform(PipelineStage):
     stage adds no execution logic of its own (SURVEY.md §4)."""
 
     stage_type: str = "SQLTransform"
-    sql: str | None = None
-    input_uri: str | None = None
-    output_view: str = ""
-    sql_params: dict[str, str] = field(default_factory=dict)
-    #: optional Arc-style auth map for inputURI (CassandraExecute.scala:29)
-    authentication: dict[str, str] | None = None
-    num_partitions: int | None = None
-    partition_by: list[str] = field(default_factory=list)
-    persist: bool = False
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
-        merged = {**ctx.sql_params, **self.sql_params}
-        text = resolve_sql_input(
-            self.sql, self.input_uri, merged, authentication=self.authentication
-        )
-        self.stage_detail.set("sql", text)
-        df = spark.sql(text)
-        df = repartition(df, self.num_partitions, self.partition_by or None)
-        register_view(df, self.output_view, ctx)
-        if self.persist and not df.isStreaming:
-            # persist before the forced count so the count materializes the
-            # cache (CassandraExtract.scala:130-133 ordering)
-            df.persist(ctx.storage_level)
-        record_frame_metrics(self.stage_detail, df, count=self.persist)
-        return df
+        return self._publish(spark.sql(self._sql_text(ctx)), ctx)
 
 
 @dataclass
-class PythonTransform(PipelineStage):
+class PythonTransform(ViewStage):
     """Programmatic transform: a Python callable ``DataFrame -> DataFrame``
     over the input view. This is the hook extension operators (dedup,
     similarity, text analysis — :mod:`..operators`) plug into the
@@ -69,23 +51,12 @@ class PythonTransform(PipelineStage):
 
     stage_type: str = "PythonTransform"
     input_view: str = ""
-    output_view: str = ""
     fn: Callable[[DataFrame], DataFrame] | None = None
-    num_partitions: int | None = None
-    partition_by: list[str] = field(default_factory=list)
-    persist: bool = False
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
         if self.fn is None:
             raise ValueError("PythonTransform requires fn")
-        df = self.fn(spark.table(self.input_view))
-        df = repartition(df, self.num_partitions, self.partition_by or None)
-        register_view(df, self.output_view, ctx)
-        if self.persist and not df.isStreaming:
-            # persist before the forced count (see SQLTransform)
-            df.persist(ctx.storage_level)
-        record_frame_metrics(self.stage_detail, df, count=self.persist)
-        return df
+        return self._publish(self.fn(spark.table(self.input_view)), ctx)
 
 
 #: modules of :mod:`..operators` reachable from declarative config — a
@@ -115,7 +86,7 @@ _OPERATOR_MODULES = frozenset(
 
 
 @dataclass
-class OperatorTransform(PipelineStage):
+class OperatorTransform(ViewStage):
     """Declarative access to the operator library: a config-file pipeline
     (JSON/HOCON) invokes any public ``operators.<module>.<function>`` whose
     first argument is a DataFrame, without writing Python —
@@ -136,11 +107,7 @@ class OperatorTransform(PipelineStage):
     stage_type: str = "OperatorTransform"
     operator: str = ""
     input_view: str = ""
-    output_view: str = ""
     right_view: str | None = None
-    num_partitions: int | None = None
-    partition_by: list[str] = field(default_factory=list)
-    persist: bool = False
 
     def _resolve(self) -> Callable[..., DataFrame]:
         mod_name, dot, fn_name = self.operator.partition(".")
@@ -256,13 +223,7 @@ class OperatorTransform(PipelineStage):
                 f"OperatorTransform: {self.operator} returned {type(out).__name__}, "
                 "not a DataFrame — only frame-to-frame operators are usable here"
             )
-        df = repartition(out, self.num_partitions, self.partition_by or None)
-        register_view(df, self.output_view, ctx)
-        if self.persist and not df.isStreaming:
-            # persist before the forced count (see SQLTransform)
-            df.persist(ctx.storage_level)
-        record_frame_metrics(self.stage_detail, df, count=self.persist)
-        return df
+        return self._publish(out, ctx)
 
 
 @dataclass
@@ -289,7 +250,7 @@ class TypingTransform(PipelineStage):
     stage_type: str = "TypingTransform"
     input_view: str = ""
     output_view: str = ""
-    schema: object | None = None
+    schema: T.StructType | str | None = None
     trim: bool = True
     nullable_values: list[str] = field(default_factory=lambda: ["", "null"])
     formatters: dict[str, str] = field(default_factory=dict)
@@ -297,7 +258,6 @@ class TypingTransform(PipelineStage):
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         if self.schema is None:
             raise ValueError("TypingTransform requires a target schema")

@@ -182,6 +182,74 @@ def test_structtype_schema_through_dict_config():
     assert p.stages[0].schema is schema
 
 
+#: what each config key accepts, written out independently of the stage
+#: annotations: a kind per key, and the values of the probe pool it admits
+_KINDS = {
+    "str": ("s",),
+    "bool": (True,),
+    "int": (3,),
+    "list[str]": (["s"],),
+    "map": ({"a": "b"}, {"a": 1}, {"a": {"k": "v"}}),
+    "map of maps": ({"a": {"k": "v"}},),
+    "scalar": ("s", 3, 2.5),
+    "scalar or bool": ("s", 3, 2.5, True),
+}
+_KEY_KINDS = {
+    **dict.fromkeys(
+        "name id description outputView inputView inputURI outputURI sql table "
+        "keyspace delimiter rowTag rootTag leftView rightView operator saveMode "
+        "schema skipIndexColumn skipManifestURI skipBloomColumn "
+        "skipBloomManifestURI".split(),
+        "str",
+    ),
+    **dict.fromkeys(
+        "persist header inferSchema multiLine wholeText partitionOutput trim "
+        "lenient skipSortOutput".split(),
+        "bool",
+    ),
+    **dict.fromkeys("numPartitions numBuckets rowsPerSecond".split(), "int"),
+    **dict.fromkeys("environments partitionBy bucketBy sortBy nullableValues".split(), "list[str]"),
+    **dict.fromkeys("params sqlParams formatters authentication".split(), "map"),
+    "metadata": "map of maps",
+    "skipMin": "scalar",
+    "skipMax": "scalar",
+    "skipBloomValue": "scalar or bool",
+}
+_POOL = ("s", 3, 2.5, True, ["s"], [1, 2], {"a": "b"}, {"a": 1}, {"a": {"k": "v"}})
+
+
+def _accepted_keys():
+    import dataclasses
+
+    from arc_cassandra_pipeline_plugin_spark.config import _FIELD_TO_KEY
+    from arc_cassandra_pipeline_plugin_spark.stages import STAGE_REGISTRY
+
+    for stage_type, cls in sorted(STAGE_REGISTRY.items()):
+        for f in dataclasses.fields(cls):
+            if f.init and f.name in _FIELD_TO_KEY:
+                yield stage_type, _FIELD_TO_KEY[f.name]
+
+
+@pytest.mark.parametrize("stage_type,key", list(_accepted_keys()))
+def test_every_config_key_is_type_checked(stage_type, key):
+    """Every key of every registered stage is checked at parse time: each
+    wrong-typed probe value gives exactly one error, on that key, and each
+    well-typed one parses (a stage that fails only at execute time hides
+    the config problem behind the stages before it)."""
+    from arc_cassandra_pipeline_plugin_spark.config import instantiate_stage
+
+    good = _KINDS[_KEY_KINDS[key]]
+    for value in _POOL:
+        ok = any(value == g and type(value) is type(g) for g in good)
+        if key == "saveMode" and ok:
+            value = "Append"  # the whitelist check is a separate rule
+        stage, errors = instantiate_stage(0, {"type": stage_type, "name": "n", key: value})
+        if ok:
+            assert stage is not None and errors == [], (value, errors)
+        else:
+            assert [e.key for e in errors] == [key], (value, errors)
+
+
 # ---------------------------------------------------------------------------
 # HOCON-subset config parsing (the reference's config layer is Typesafe
 # Config — CassandraLoadSuite.scala:126 ArcPipeline.parseConfig)

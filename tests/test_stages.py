@@ -12,8 +12,10 @@ from arc_cassandra_pipeline_plugin_spark.errors import DetailException
 from arc_cassandra_pipeline_plugin_spark.stages import (
     CassandraLoad,
     DelimitedExtract,
+    OperatorTransform,
     ParquetExtract,
     ParquetLoad,
+    PythonTransform,
     SQLExecute,
     SQLTransform,
 )
@@ -33,19 +35,84 @@ def test_extract_repartition_matrix(spark, ctx):
     assert df.count() == 25
 
 
-def test_extract_persist_records_metrics(spark, ctx):
-    st = ParquetExtract(
-        name="p",
-        input_uri=f"{SF_SMALL}/region.parquet",
-        output_view="region_persist",
-        persist=True,
-    )
+#: every ViewStage, each publishing the 5-row, 2-column region table
+_PERSISTED = {
+    "ParquetExtract": (ParquetExtract, dict(input_uri=f"{SF_SMALL}/region.parquet")),
+    "SQLTransform": (SQLTransform, dict(sql="SELECT * FROM region_src")),
+    "OperatorTransform": (
+        OperatorTransform,
+        dict(
+            operator="sampling.deterministic_sample",
+            input_view="region_src",
+            params={"key_col": "r_regionkey", "fraction": "1.0"},
+        ),
+    ),
+    "PythonTransform": (PythonTransform, dict(input_view="region_src", fn=lambda df: df)),
+}
+
+
+@pytest.mark.parametrize("stage", list(_PERSISTED))
+def test_view_stage_persist_records_metrics(spark, ctx, stage):
+    """Persist comes before the forced count, so the count fills the cache
+    (CassandraExtract.scala:130-133)."""
+    ParquetExtract(
+        name="src", input_uri=f"{SF_SMALL}/region.parquet", output_view="region_src"
+    ).execute(spark, ctx)
+    cls, kwargs = _PERSISTED[stage]
+    st = cls(name="p", output_view="region_persist", persist=True, **kwargs)
     df = st.execute(spark, ctx)
     detail = st.stage_detail.as_dict()
     assert detail["records"] == 5
     assert detail["outputColumns"] == 2
     assert df.storageLevel.useMemory
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    assert cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
     df.unpersist()
+
+
+def _jobs(spark, action):
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = action()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def test_stage_metrics_execute_no_query(spark, ctx, tmp_path):
+    """A transform's metrics run no Spark job: ``numPartitions`` would
+    convert the plan to an RDD, which runs its shuffle stages under AQE.
+    Only the reference's two instrumentation sites, extract and load,
+    record it."""
+    ParquetExtract(
+        name="e", input_uri=f"{SF_SMALL}/nation.parquet", output_view="nation_jobs"
+    ).execute(spark, ctx)
+    agg = SQLTransform(
+        name="agg",
+        sql="SELECT n_regionkey, count(*) AS n FROM nation_jobs GROUP BY n_regionkey",
+        output_view="nation_agg",
+    )
+    dedup = OperatorTransform(
+        name="dedup",
+        operator="dedup.exact_dedup",
+        input_view="nation_jobs",
+        output_view="nation_dedup",
+        params={"text_col": "n_name", "id_col": "n_nationkey"},
+    )
+    for st in (agg, dedup):
+        assert _jobs(spark, lambda: st.execute(spark, ctx))[1] == 0, st.name
+        assert "numPartitions" not in st.stage_detail.as_dict()
+
+    ext = ParquetExtract(
+        name="e3",
+        input_uri=f"{SF_SMALL}/nation.parquet",
+        output_view="nation_jobs3",
+        num_partitions=3,
+    )
+    ext.execute(spark, ctx)
+    assert ext.stage_detail.as_dict()["numPartitions"] == 3
+    load = ParquetLoad(name="l", input_view="nation_agg", output_uri=str(tmp_path / "agg"))
+    load.execute(spark, ctx)
+    assert load.stage_detail.as_dict()["numPartitions"] >= 1
+    assert load.stage_detail.as_dict()["records"] == 5
 
 
 def test_streaming_guard_on_extract(spark):

@@ -1,4 +1,4 @@
-"""Stage-level profiler for certified queries (optimization guide §1).
+"""Stage-level profiler for certified queries and pipeline configs.
 
 Runs each named query into the noop sink on the engine's own session
 (``sources.get_spark``; the event-log confs reach the JVM through
@@ -10,8 +10,16 @@ Spark job count of each timed trial (build + write). One untimed warmup
 pass precedes the timed passes so JIT and codegen compile outside the
 measurement (bench protocol parity).
 
+A name ``pipeline:<conf path>`` runs that config file instead, as the
+benchmark's ``etl_sf01`` workload does: ``production`` environment, the
+fake Cassandra source registered, ``${SPARK_GRAFT_SF_DIR}`` pointed at
+``--sf-dir`` and ``${BENCH_OUT_DIR}`` / ``${BENCH_CASSANDRA_ROOT}`` at a
+temporary directory. Its jobs are counted per pipeline stage, keyed by the
+``"<Type>: <name>"`` description ``PipelineStage.execute`` sets.
+
 Usage:
   python tools/profile_query.py <name> [<name> ...] [--sf-dir DIR] [--trials N] [--plan OUT]
+  python tools/profile_query.py pipeline:perfbench/etl/curation.conf [...] --sf-dir DIR
 
 With several names, one session runs them in turn and a closing
 per-query table lists the jobs of every trial and the median wall.
@@ -27,6 +35,7 @@ import argparse
 import json
 import os
 import shlex
+import shutil
 import sys
 import tempfile
 import time
@@ -43,18 +52,44 @@ def _event_files(event_dir: str) -> list[str]:
     return files
 
 
-def count_jobs(event_dir: str) -> dict[str, int]:
-    """Number of ``SparkListenerJobStart`` events per job description."""
+#: local property naming the profiled run (``warmup:<name>`` or
+#: ``timed:<name>:<i>``) that submitted a job; pipeline stages set their
+#: own job descriptions, so the run travels separately
+RUN_PROPERTY = "profile.run"
+
+
+def count_jobs(event_dir: str, run: str | None = None) -> dict[str, int]:
+    """Number of ``SparkListenerJobStart`` events per job description; with
+    ``run``, only the jobs of that profiled run."""
     counts: dict[str, int] = {}
     for path in _event_files(event_dir):
         with open(path) as fh:
             for line in fh:
                 if '"SparkListenerJobStart"' not in line:
                     continue
-                ev = json.loads(line)
-                desc = (ev.get("Properties") or {}).get("spark.job.description", "")
+                props = json.loads(line).get("Properties") or {}
+                if run is not None and props.get(RUN_PROPERTY) != run:
+                    continue
+                desc = props.get("spark.job.description", "")
                 counts[desc] = counts.get(desc, 0) + 1
     return counts
+
+
+def run_pipeline(spark, conf_path: str, sf_dir: str, work_dir: str) -> list[str]:
+    """Run a pipeline config in the ``production`` environment; return the
+    job descriptions of its stages in order."""
+    from arc_cassandra_pipeline_plugin_spark.config import parse_config
+    from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
+
+    os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
+    os.environ["BENCH_OUT_DIR"] = os.path.join(work_dir, "out")
+    os.environ["BENCH_CASSANDRA_ROOT"] = os.path.join(work_dir, "cassandra")
+    with open(conf_path, encoding="utf-8") as fh:
+        text = fh.read()
+    ctx = PipelineContext(environment="production")
+    pipeline = parse_config(text, ctx)
+    pipeline.run(spark, ctx)
+    return [f"{st.stage_type or type(st).__name__}: {st.name}" for st in pipeline.stages]
 
 
 def parse_event_log(event_dir: str, t_mark_ms: float):
@@ -72,11 +107,11 @@ def parse_event_log(event_dir: str, t_mark_ms: float):
                     continue
                 kind = ev.get("Event")
                 if kind == "SparkListenerJobStart":
-                    desc = (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    )
+                    props = ev.get("Properties") or {}
+                    desc = props.get("spark.job.description", "")
+                    run = props.get(RUN_PROPERTY, "")
                     for sid in ev.get("Stage IDs", []):
-                        job_of_stage[sid] = (ev["Job ID"], desc)
+                        job_of_stage[sid] = (ev["Job ID"], desc, run)
                 elif kind == "SparkListenerStageCompleted":
                     si = ev["Stage Info"]
                     sub = si.get("Submission Time")
@@ -118,13 +153,14 @@ def parse_event_log(event_dir: str, t_mark_ms: float):
     for (sid, att), agg in stages.items():
         if "wall_ms" not in agg:
             continue  # stage from before the mark or never completed
-        job_id, desc = job_of_stage.get(sid, (-1, ""))
+        job_id, desc, run = job_of_stage.get(sid, (-1, "", ""))
         rows.append(
             dict(
                 stage=sid,
                 attempt=att,
                 job=job_id,
                 desc=desc,
+                run=run,
                 **agg,
             )
         )
@@ -140,7 +176,7 @@ def main() -> int:
     ap.add_argument("--plan", default=None, help="write explain(formatted) here")
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
-    if args.plan and len(args.names) > 1:
+    if args.plan and (len(args.names) > 1 or args.names[0].startswith("pipeline:")):
         ap.error("--plan takes a single query name")
 
     from bench import _split_fixture_dir  # noqa: E402
@@ -149,7 +185,7 @@ def main() -> int:
 
     sf_dir = args.sf_dir or _split_fixture_dir("/root/testdata/sf0.1")
     registry = load_all()
-    queries = [(name, registry[name]) for name in args.names]
+    pipelines = [n for n in args.names if n.startswith("pipeline:")]
 
     event_dir = tempfile.mkdtemp(prefix="profile_evlog_")
     os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(
@@ -162,9 +198,27 @@ def main() -> int:
     )
     spark = get_spark("profile_query")
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    work_dir = tempfile.mkdtemp(prefix="profile_work_")
+    stage_descs: dict[str, list[str]] = {}
+    if pipelines:
+        from arc_cassandra_pipeline_plugin_spark.sources.cassandra_fake import (
+            register_fake_cassandra,
+        )
+
+        register_fake_cassandra(spark)
+
+    def run_once(name: str, run: str) -> None:
+        sc.setLocalProperty(RUN_PROPERTY, run)
+        if name in pipelines:
+            sc.setJobDescription(None)  # each stage sets its own
+            stage_descs[name] = run_pipeline(spark, name.split(":", 1)[1], sf_dir, work_dir)
+        else:
+            sc.setJobDescription(run)
+            registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     if args.plan:
-        df = queries[0][1].fn(spark, sf_dir)
+        df = registry[args.names[0]].fn(spark, sf_dir)
         from arc_cassandra_pipeline_plugin_spark.plans import explain_str
 
         with open(args.plan, "w") as fh:
@@ -172,25 +226,28 @@ def main() -> int:
         print(f"plan -> {args.plan}")
 
     walls: dict[str, list[float]] = {}
-    for name, q in queries:
+    for name in args.names:
         if not args.no_warmup:
-            spark.sparkContext.setJobDescription(f"warmup:{name}")
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            run_once(name, f"warmup:{name}")
         walls[name] = []
         for i in range(args.trials):
-            spark.sparkContext.setJobDescription(f"timed:{name}:{i}")
             t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            run_once(name, f"timed:{name}:{i}")
             walls[name].append(time.time() - t0)
-    spark.sparkContext.setJobDescription(None)
+    sc.setJobDescription(None)
+    sc.setLocalProperty(RUN_PROPERTY, None)
 
     # flush the event log by stopping the session
     spark.stop()
-    rows = [r for r in parse_event_log(event_dir, 0) if r["desc"].startswith("timed:")]
-    jobs = count_jobs(event_dir)
-    trial_jobs = {
-        name: [jobs.get(f"timed:{name}:{i}", 0) for i in range(args.trials)]
+    shutil.rmtree(work_dir, ignore_errors=True)
+    rows = [r for r in parse_event_log(event_dir, 0) if r["run"].startswith("timed:")]
+    run_jobs = {
+        (name, i): count_jobs(event_dir, f"timed:{name}:{i}")
         for name in walls
+        for i in range(args.trials)
+    }
+    trial_jobs = {
+        name: [sum(run_jobs[name, i].values()) for i in range(args.trials)] for name in walls
     }
 
     print(f"\nqueries={' '.join(args.names)} sf_dir={sf_dir}")
@@ -215,6 +272,14 @@ def main() -> int:
             f"{r.get('shuf_write', 0):>9} {r.get('fetch_wait_ms', 0):>7}  "
             f"{(r['desc'] or r['name'])[:70]}"
         )
+    for name in pipelines:
+        descs = stage_descs[name]
+        extra = {d for i in range(args.trials) for d in run_jobs[name, i]} - set(descs)
+        print(f"\n{name}: Spark jobs per stage\n\n| stage | jobs per trial |\n|---|---|")
+        for desc in descs + sorted(extra):
+            per_trial = [run_jobs[name, i].get(desc, 0) for i in range(args.trials)]
+            print(f"| `{desc or '(no stage)'}` | {', '.join(map(str, per_trial))} |")
+        print(f"| total | {', '.join(map(str, trial_jobs[name]))} |")
     if len(walls) > 1:
         print("\n| query | jobs per trial | median wall s |\n|---|---|---|")
         for name, w in walls.items():
