@@ -23,6 +23,14 @@ def spark():
     yield s
 
 
+def spark_jobs(spark, action):
+    """``action()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = action()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
 #: the driver replays of the graph iterates in ``operators/graph.py``
 GRAPH_REPLAYS = (
     "_pagerank_driver",

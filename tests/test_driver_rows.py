@@ -12,14 +12,7 @@ import pytest
 from arc_cassandra_pipeline_plugin_spark import functions as FN
 from arc_cassandra_pipeline_plugin_spark.functions import driver_rows
 from arc_cassandra_pipeline_plugin_spark.operators import graph as G
-from conftest import GRAPH_REPLAYS, no_replay
-
-
-def _jobs(spark, action):
-    sc = spark.sparkContext
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    out = action()
-    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+from conftest import GRAPH_REPLAYS, no_replay, spark_jobs
 
 
 def _frame(spark, n, key="BIGINT"):
@@ -34,27 +27,27 @@ def _frame(spark, n, key="BIGINT"):
 
 def test_double_key_is_rejected_without_a_job(spark):
     df = _frame(spark, 5, "DOUBLE")
-    assert _jobs(spark, lambda: driver_rows(df)) == (None, 0)
-    assert _jobs(spark, lambda: driver_rows(df, 5)) == (None, 0)
+    assert spark_jobs(spark, lambda: driver_rows(df)) == (None, 0)
+    assert spark_jobs(spark, lambda: driver_rows(df, 5)) == (None, 0)
 
 
 def test_observed_count_past_the_cap_runs_no_job(spark):
     df = _frame(spark, 5)
-    assert _jobs(spark, lambda: driver_rows(df, FN._DRIVER_EDGE_CAP + 1)) == (None, 0)
+    assert spark_jobs(spark, lambda: driver_rows(df, FN._DRIVER_EDGE_CAP + 1)) == (None, 0)
 
 
 def test_observed_count_within_the_cap_is_one_collect(spark):
     df = _frame(spark, 5)
-    rows, jobs = _jobs(spark, lambda: driver_rows(df, 5))
+    rows, jobs = spark_jobs(spark, lambda: driver_rows(df, 5))
     assert [tuple(r) for r in rows] == [(i, i) for i in range(5)] and jobs == 1
 
 
 def test_unobserved_count_is_one_bounded_collect(spark, monkeypatch):
     df = _frame(spark, 5)
-    rows, jobs = _jobs(spark, lambda: driver_rows(df))
+    rows, jobs = spark_jobs(spark, lambda: driver_rows(df))
     assert [tuple(r) for r in rows] == [(i, i) for i in range(5)] and jobs == 1
     monkeypatch.setattr(FN, "_DRIVER_EDGE_CAP", 4)
-    assert _jobs(spark, lambda: driver_rows(df)) == (None, 1)
+    assert spark_jobs(spark, lambda: driver_rows(df)) == (None, 1)
 
 
 @pytest.mark.parametrize(

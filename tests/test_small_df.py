@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.functions import small_df
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, spark_jobs
 
 _DDL = (
     "i INT, b BIGINT, s STRING, d DOUBLE, m DECIMAL(12,3), dt DATE, "
@@ -55,13 +55,6 @@ def _cells(rows):
         return v
 
     return [tuple(cell(v) for v in r) for r in rows]
-
-
-def _jobs(spark, action):
-    sc = spark.sparkContext
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    out = action()
-    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
 
 
 @pytest.mark.parametrize("schema_form", ["ddl", "struct"])
@@ -128,7 +121,7 @@ def test_small_df_is_a_jvm_local_relation(spark):
     assert plan.startswith("LocalRelation"), plan
     lineage = df._jdf.queryExecution().toRdd().toDebugString()
     assert "PythonRDD" not in lineage, lineage
-    rows, jobs = _jobs(spark, df.collect)
+    rows, jobs = spark_jobs(spark, df.collect)
     assert jobs == 0
     assert [r["k"] for r in rows] == list(range(25))
 
@@ -143,5 +136,5 @@ def test_events_grid_dbscan_job_count(spark):
 
     q = load_all()["events_grid_dbscan"]
     q.fn(spark, SF_SMALL).collect()  # schema and fixture caches warm
-    _, jobs = _jobs(spark, lambda: q.fn(spark, SF_SMALL).collect())
+    _, jobs = spark_jobs(spark, lambda: q.fn(spark, SF_SMALL).collect())
     assert jobs <= 9, jobs

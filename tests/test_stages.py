@@ -19,7 +19,7 @@ from arc_cassandra_pipeline_plugin_spark.stages import (
     SQLExecute,
     SQLTransform,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, spark_jobs
 
 
 def test_extract_repartition_matrix(spark, ctx):
@@ -70,13 +70,6 @@ def test_view_stage_persist_records_metrics(spark, ctx, stage):
     df.unpersist()
 
 
-def _jobs(spark, action):
-    sc = spark.sparkContext
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    out = action()
-    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
-
-
 def test_stage_metrics_execute_no_query(spark, ctx, tmp_path):
     """A transform's metrics run no Spark job: ``numPartitions`` would
     convert the plan to an RDD, which runs its shuffle stages under AQE.
@@ -98,7 +91,7 @@ def test_stage_metrics_execute_no_query(spark, ctx, tmp_path):
         params={"text_col": "n_name", "id_col": "n_nationkey"},
     )
     for st in (agg, dedup):
-        assert _jobs(spark, lambda: st.execute(spark, ctx))[1] == 0, st.name
+        assert spark_jobs(spark, lambda: st.execute(spark, ctx))[1] == 0, st.name
         assert "numPartitions" not in st.stage_detail.as_dict()
 
     ext = ParquetExtract(
