@@ -52,19 +52,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def char_shingles(col: F.Column, k: int = 5) -> F.Column:
-    """Distinct character k-shingles of the normalized text as an array.
-
-    NOTE: array-building via a higher-order ``transform`` lambda falls out
-    of whole-stage codegen and was measured ~6× slower than the row-based
-    :func:`shingle_rows` path — prefer that in anything hot."""
-    norm = normalize_text(col)
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(norm, i, k))
-    )
-
-
 def shingle_rows(
     df: DataFrame, text_col: str, id_col: str, k: int, distinct: bool = False
 ) -> DataFrame:

@@ -15,9 +15,8 @@ iterate has two paths over the same edge rollup:
   rounds are otherwise pure job-count tax. Past the bound the distributed
   rounds run.
 
-The probed rollup is a local checkpoint: eager in bfs, sssp, hits, k-core
-and k-truss, lazy in the others, where the probe's own collect
-materializes it. Past the bound the distributed rounds read that
+The probed rollup is a lazy local checkpoint, which the probe's own
+collect materializes. Past the bound the distributed rounds read that
 checkpoint instead of computing the rollup a second time.
 
 Cross-engine determinism (the oracle unrolls the same rounds as SQL CTEs):
@@ -265,7 +264,7 @@ def bfs_levels(
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     rows = driver_rows(e)
     if rows is not None:
@@ -395,7 +394,7 @@ def sssp_cheapest(
     e = (
         edges.groupBy(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .agg(F.min(F.col(cost).cast("bigint")).alias("_c"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     rows = driver_rows(e)
     if rows is not None:
@@ -711,7 +710,7 @@ def hits(
     e = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"),
         w_guarded.cast(w_dec).alias("_w"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     # the weights arrive as exact decimal(20,6) values from the guarded
     # checkpoint, so the driver replay works in the identical decimal algebra
     rows = driver_rows(e)
@@ -1083,7 +1082,7 @@ def ktruss_edges(
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     rows = driver_rows(und)  # no NULL keys: a != b filters them
     if rows is not None:
@@ -1217,7 +1216,7 @@ def kcore_vertices(
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     rows = driver_rows(und)
     if rows is not None:

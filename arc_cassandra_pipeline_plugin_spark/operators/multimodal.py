@@ -60,21 +60,6 @@ def documents_as_assets(documents: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """STUB for formats that need codec libraries (progressive/arithmetic
-    JPEG, WebP et al.): real deployments decode with PIL/turbojpeg here;
-    the container has none. PNG, 24-bit BMP, baseline grayscale JPEG and
-    baseline COLOR JPEG (YCbCr 4:2:0) have REAL decoders in this module
-    (:func:`decode_png`, :func:`decode_bmp24`, :func:`decode_jpeg_gray`,
-    :func:`decode_jpeg_color`)."""
-    raise NotImplementedError(
-        "progressive/arithmetic JPEG decode requires PIL/libjpeg, not "
-        "present in this environment; use decode_png/decode_bmp24/"
-        "decode_jpeg_gray/decode_jpeg_color for the library-free formats, "
-        "or extract_features' deterministic byte-level fake"
-    )
-
-
 def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for an embedding model: mean of each of
     ``dim`` byte stripes, scaled to [0,1]. Pure-bytes math → reproducible

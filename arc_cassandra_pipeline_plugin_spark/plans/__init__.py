@@ -40,12 +40,6 @@ def read_schemas(df: DataFrame) -> list[list[str]]:
     return out
 
 
-def physical_nodes(df: DataFrame) -> list[str]:
-    """Physical operator names, in plan order."""
-    text = explain_str(df, "simple")
-    return re.findall(r"^[\s:+\-*(\d)]*([A-Za-z]+)", text, flags=re.MULTILINE)
-
-
 def has_node(df: DataFrame, node: str) -> bool:
     return node in explain_str(df, "simple")
 

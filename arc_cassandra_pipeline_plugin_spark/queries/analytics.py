@@ -1311,7 +1311,7 @@ def streaming_funnel_stage_mins(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-touch ordering — the trade a production stream actually makes."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir)
+    ev = ST.table_stream(spark, sf_dir, "events")
     mins = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),

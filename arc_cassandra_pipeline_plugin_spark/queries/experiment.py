@@ -1036,7 +1036,7 @@ def streaming_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     result columns are a driver-hash hazard (r10 agg_decimal_exact)."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir).select(
+    ev = ST.table_stream(spark, sf_dir, "events").select(
         F.col("user_id").alias("u"), F.col("value").cast("decimal(18,2)").alias("s")
     )
     users = ST.run_stream_accumulate(ev, key_cols=("u",), sum_cols=("s",))

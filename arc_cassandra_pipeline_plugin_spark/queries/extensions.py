@@ -1834,7 +1834,7 @@ def streaming_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n, last))
         yield pd.DataFrame({"user_id": [key[0]], "n": [n], "last_event": [last]})
 
-    ev = ST.events_stream(spark, sf_dir).select("user_id", "event_id")
+    ev = ST.table_stream(spark, sf_dir, "events").select("user_id", "event_id")
     out = ev.groupBy("user_id").applyInPandasWithState(
         track,
         "user_id bigint, n bigint, last_event bigint",
@@ -1909,7 +1909,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifiable against the batch latest-row-per-key oracle."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
+    ev = ST.table_stream(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     final = ST.run_stream_upsert(ev, key_cols=("user_id",), order_cols=("ts", "event_id"))
     return final.select(
         "user_id",
@@ -2410,7 +2410,7 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py)."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir)
+    ev = ST.table_stream(spark, sf_dir, "events")
     agg = ST.tumbling_window_counts(ev, window="1 hour", watermark="2 hours",
                                     group_cols=("event_type",))
     return ST.run_stream_to_memory(agg, "streaming_windowed_agg_result")
@@ -2441,7 +2441,7 @@ def streaming_append_closed_windows(spark: SparkSession, sf_dir: str) -> DataFra
     contract itself, not just the window arithmetic."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir)
+    ev = ST.table_stream(spark, sf_dir, "events")
     agg = ST.tumbling_window_counts(ev, window="1 hour", watermark="2 hours",
                                     group_cols=("event_type",))
     return ST.run_stream_to_memory(
@@ -2462,7 +2462,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives. Watermark bounds dedup state at scale."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir)
+    ev = ST.table_stream(spark, sf_dir, "events")
     deduped = ST.dedup_stream(ev, key_cols=("user_id", "event_type")).select(
         "user_id", "event_type"
     )
@@ -2497,7 +2497,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir)
+    ev = ST.table_stream(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -2780,7 +2780,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch interval join and certifies under the SQL oracle."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir).filter(F.col("user_id") < _SSJ_MAX_USER)
+    ev = ST.table_stream(spark, sf_dir, "events").filter(F.col("user_id") < _SSJ_MAX_USER)
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
     )
@@ -2924,7 +2924,7 @@ def streaming_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream side never shuffles."""
     from arc_cassandra_pipeline_plugin_spark import streaming as ST
 
-    ev = ST.events_stream(spark, sf_dir).select("event_id", "user_id")
+    ev = ST.table_stream(spark, sf_dir, "events").select("event_id", "user_id")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -3389,12 +3389,18 @@ def streaming_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per micro-batch for a 5-group aggregate — the r11 plain-gauntlet
     # 150/400-rows-in-120s timeout. The synthetic source is 400 ~1 KB docs,
     # so pass its known volume for the data-derived state width.
-    with stream_shuffle_pinned(spark, source_bytes=400 * 1024):
+    # Spark's Python streaming source has no availableNow support, so the
+    # drain polls a processing-time query instead of going through
+    # streaming._drain (whose note on cleanup errors applies here too).
+    with (
+        tempfile.TemporaryDirectory(prefix="ckpt_pyds_q_", ignore_cleanup_errors=True) as ckpt,
+        stream_shuffle_pinned(spark, source_bytes=400 * 1024),
+    ):
         q = (
             agg.writeStream.format("memory")
             .queryName("pyds_stream_agg")
             .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_pyds_q_"))
+            .option("checkpointLocation", ckpt)
             .trigger(processingTime="0 seconds")
             .start()
         )

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: the driver's deterministic synthetic tables (TESTDATA.md)
 TABLES = (
@@ -80,23 +81,16 @@ def _path_mtime(path: str) -> float:
     return os.path.getmtime(path)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table (schema inferred from parquet metadata).
+def raw_schema(spark: SparkSession, path: str, name: str) -> T.StructType:
+    """The parquet schema of fixture table ``name`` at ``path``, inferred
+    once per (path, mtime) and then served from ``_SCHEMA_CACHE``.
 
-    The ``events`` table's ``ts`` column has shipped in two physical forms
-    across fixture generations; both are normalized to TIMESTAMP (LTZ,
-    session tz pinned UTC) so every certified query sees one type:
-
-    - parquet TIMESTAMP(NANOS): Spark rejects it by default
-      (PARQUET_TYPE_ILLEGAL); read via the ``nanosAsLong`` legacy flag and
-      truncate to microseconds with integer division (``ts div 1000`` —
-      exact on int64), matching DuckDB's ns→µs truncation on read.
-    - parquet timestamp[us] without isAdjustedToUTC: Spark 4 infers
-      TIMESTAMP_NTZ (``inferTimestampNTZ``); cast to TIMESTAMP — with the
-      session tz pinned UTC the wall-clock → instant mapping is the
-      identity, which is exactly the timezone-naive DuckDB reading.
+    Sets the session confs every read of the table needs: the session tz
+    pinned UTC and, for ``events``, ``nanosAsLong`` (a TIMESTAMP(NANOS)
+    ``ts`` is otherwise rejected with PARQUET_TYPE_ILLEGAL). The schema is
+    the raw one: ``normalize_ts`` maps ``events.ts`` to one type after the
+    read.
     """
-    path = table_path(sf_dir, name)
     # Defensive: all certified queries assume UTC (CassandraLoadSuite.scala:49
     # parity; the DuckDB oracle is timezone-naive). The driver's session may
     # not pin it, so every table read re-asserts it. Set unconditionally:
@@ -107,25 +101,46 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # pre-set to avoid a noisy failed first read attempt on executors
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cache_key = (path, _path_mtime(path))
-    cached = _SCHEMA_CACHE.get(cache_key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
+    schema = _SCHEMA_CACHE.get(cache_key)
+    if schema is None:
         try:
-            df = spark.read.parquet(path)
+            schema = spark.read.parquet(path).schema
         except Exception:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-        _SCHEMA_CACHE[cache_key] = df.schema
-    from pyspark.sql import types as T
+            schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[cache_key] = schema
+    return schema
 
-    if name == "events":
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+def normalize_ts(df: DataFrame, name: str) -> DataFrame:
+    """Map the ``events`` table's ``ts`` to TIMESTAMP (LTZ, session tz
+    pinned UTC), so every certified query, batch or streaming, sees one
+    type; other tables pass through. ``ts`` has shipped in two physical
+    forms across fixture generations:
+
+    - parquet TIMESTAMP(NANOS), read as BIGINT through ``nanosAsLong``:
+      truncate to microseconds with integer division (``ts div 1000`` —
+      exact on int64), matching DuckDB's ns→µs truncation on read.
+    - parquet timestamp[us] without isAdjustedToUTC: Spark 4 infers
+      TIMESTAMP_NTZ (``inferTimestampNTZ``); cast to TIMESTAMP — with the
+      session tz pinned UTC the wall-clock → instant mapping is the
+      identity, which is exactly the timezone-naive DuckDB reading.
+    """
+    if name != "events":
+        return df
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table: its cached ``raw_schema``, then
+    ``normalize_ts``."""
+    path = table_path(sf_dir, name)
+    return normalize_ts(spark.read.schema(raw_schema(spark, path, name)).parquet(path), name)
 
 
 def register_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

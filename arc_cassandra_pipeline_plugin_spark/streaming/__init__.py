@@ -6,11 +6,23 @@ streaming view (``CassandraLoad.scala:108-109``). Parity keeps those guards
 (see stages/); this module is the real implementation a modern pipeline
 needs: file-replay streaming extract, watermarked event-time windows, and a
 ``foreachBatch``-based streaming load that reuses any batch LoadStage.
+
+Stream sources read through ``sources.raw_schema`` and
+``sources.normalize_ts``, the batch reader's cached schema and ``events.ts``
+mapping (``table_stream``, ``events_stream_flushed``). Bounded replays
+drain through one ``_drain``: availableNow trigger, state width pinned by
+``stream_shuffle_pinned``, a checkpoint that is deleted afterwards, and a
+stopped query plus ``RuntimeError`` on timeout. ``run_stream_to_memory``
+drains into a memory sink; ``run_stream_upsert`` and
+``run_stream_accumulate`` fold micro-batches into a keyed state through
+``_fold_stream``.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import os
+import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
@@ -20,6 +32,7 @@ from pyspark.sql import functions as F
 
 from arc_cassandra_pipeline_plugin_spark.context import PipelineContext
 from arc_cassandra_pipeline_plugin_spark.functions import small_df
+from arc_cassandra_pipeline_plugin_spark.sources import normalize_ts, raw_schema
 from arc_cassandra_pipeline_plugin_spark.stages.base import PipelineStage, register_view
 from arc_cassandra_pipeline_plugin_spark.stages.load import LoadStage
 
@@ -127,16 +140,17 @@ class StreamingLoad(PipelineStage):
     written with the batch writer (save modes, truncate gate and params all
     apply per batch).
 
-    ``trigger_available_now=True`` drains all available input then stops —
-    the batch-replay mode used by tests and backfills.
+    The stage drains all available input with the availableNow trigger and
+    waits for the query to stop — the batch-replay mode of tests and
+    backfills. The checkpoint is the user's ``checkpoint_uri``, and the
+    wait has no timeout. It does not go through ``_drain``: pinning the
+    shuffle width would change the width of the wrapped batch writes.
     """
 
     stage_type: str = "StreamingLoad"
     input_view: str = ""
     wrapped: LoadStage | None = None
     checkpoint_uri: str = ""
-    trigger_available_now: bool = True
-    await_termination: bool = True
 
     def _run(self, spark: SparkSession, ctx: PipelineContext) -> Optional[DataFrame]:
         if self.wrapped is None:
@@ -146,13 +160,7 @@ class StreamingLoad(PipelineStage):
             raise ValueError(f"input view '{self.input_view}' is not a streaming DataFrame")
 
         wrapped = self.wrapped
-        batch_ctx = PipelineContext(
-            environment=ctx.environment,
-            is_streaming=False,
-            immutable_views=False,
-            storage_level=ctx.storage_level,
-            sql_params=ctx.sql_params,
-        )
+        batch_ctx = dataclasses.replace(ctx, is_streaming=False, immutable_views=False)
         # Overwrite semantics only make sense for the first micro-batch;
         # subsequent batches append. The wrapped stage is never mutated —
         # a per-batch replace keeps re-executions of this pipeline object
@@ -165,15 +173,14 @@ class StreamingLoad(PipelineStage):
             batch_stage = dataclasses.replace(wrapped, save_mode=mode)
             batch_stage.execute(batch_df.sparkSession, batch_ctx)
 
-        writer = df.writeStream.foreachBatch(write_batch).option(
-            "checkpointLocation", self.checkpoint_uri
+        query = (
+            df.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", self.checkpoint_uri)
+            .trigger(availableNow=True)
+            .start()
         )
-        if self.trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        query = writer.start()
         self.stage_detail.set("queryId", str(query.id))
-        if self.await_termination:
-            query.awaitTermination()
+        query.awaitTermination()
         return None
 
 
@@ -212,43 +219,22 @@ def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     - directory fixture → the directory IS the streaming source
     - single-file driver fixture → stream ``sf_dir`` with a name glob
 
-    Schema is snapshotted with a batch read up-front, as Structured
-    Streaming requires."""
-    import os
-
+    The schema, fixed up-front as Structured Streaming requires, is the
+    batch reader's cached ``raw_schema``; ``events.ts`` is normalized as in
+    ``sources.load_table``."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(raw_schema(spark, path, table))
     _note_stream_source(spark, path)
     if os.path.isdir(path):
-        return spark.readStream.schema(schema).parquet(path)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", f"{table}.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events fixture (TIMESTAMP(NANOS) handled the
-    same way as sources.load_table: nanosAsLong + exact ns→µs truncation);
-    schema is fixed up-front as Structured Streaming requires."""
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = table_stream(spark, sf_dir, "events")
-    from pyspark.sql import types as T
-
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+        df = reader.parquet(path)
+    else:
+        df = reader.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir)
+    return normalize_ts(df, table)
 
 
 #: per-session note of the most recent stream SOURCE's on-disk byte size,
-#: written by the stream builders (events_stream / events_stream_flushed /
-#: table_stream) and read by stream_shuffle_pinned at drain start. Streams
+#: written by the stream builders (table_stream / events_stream_flushed)
+#: and read by stream_shuffle_pinned at drain start. Streams
 #: here are built and drained inside one query function on one thread, so
 #: "most recent" is the drain's own source.
 _STREAM_SRC_BYTES: dict = {}
@@ -262,8 +248,6 @@ _STREAM_STATE_TARGET_BYTES = 32 << 20
 
 
 def _path_bytes(path: str) -> int:
-    import os
-
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
@@ -318,27 +302,64 @@ def stream_shuffle_pinned(spark: SparkSession, source_bytes: int | None = None):
         spark.conf.set(key, prev)
 
 
+def _drain(df: DataFrame, writer, what: str, timeout_s: int) -> None:
+    """Run ``writer`` (a ``df.writeStream`` with its sink set) with the
+    availableNow trigger until the source is drained: everything currently
+    in the source is processed, then the query stops, so the streaming plan
+    runs for real (stateful operators, watermarks, micro-batching) with a
+    deterministic end. The state width is pinned by
+    ``stream_shuffle_pinned``, and the checkpoint lives in a temporary
+    directory deleted afterwards. A drain that has not finished after
+    ``timeout_s`` is stopped and raises ``RuntimeError``, never a partial
+    result."""
+    # cleanup errors are ignored: a state-store maintenance thread may still
+    # write into the checkpoint after the query stops, and a leftover
+    # directory must not turn a finished drain into a failure
+    with (
+        tempfile.TemporaryDirectory(prefix=f"ckpt_{what}_", ignore_cleanup_errors=True) as ckpt,
+        stream_shuffle_pinned(df.sparkSession),
+    ):
+        q = writer.trigger(availableNow=True).option("checkpointLocation", ckpt).start()
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise RuntimeError(f"{what}: drain did not finish in {timeout_s} s")
+
+
 def run_stream_to_memory(
     df: DataFrame, name: str, output_mode: str = "complete", timeout_s: int = 120
 ) -> DataFrame:
-    """Execute a streaming frame with the availableNow trigger into a memory
-    sink and return the materialized result table. availableNow processes
-    everything currently in the source, then stops — the streaming plan
-    runs for real (stateful operators, watermarks, micro-batching), with a
-    deterministic end."""
-    import tempfile
-
-    with stream_shuffle_pinned(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ckpt_{name}_"))
-            .start()
-        )
-        q.awaitTermination(timeout_s)
+    """Drain a streaming frame into a memory sink named ``name`` and return
+    the materialized result table."""
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _drain(df, writer, name, timeout_s)
     return df.sparkSession.table(name)
+
+
+def _fold_stream(df: DataFrame, reduce, what: str, timeout_s: int) -> DataFrame:
+    """Drain ``df`` through ``foreachBatch``, folding its micro-batches into
+    one state frame: the first batch gives ``reduce(batch)``, each later one
+    ``reduce(state ∪ reduce(batch))``. With a ``reduce`` whose merge is
+    associative and commutative, the final state is independent of the
+    micro-batch boundaries.
+
+    Each round snapshots the state with an eager ``localCheckpoint``, so it
+    never re-reads source lineage; reassigning the state drops the only
+    reference to the previous snapshot, so CPython refcounting + Spark's
+    ContextCleaner free its blocks promptly — at most two snapshots are
+    ever live (the repo-wide lineage-cut idiom, see operators/graph.py).
+    Raises ``RuntimeError`` when no micro-batch arrives."""
+    state: Optional[DataFrame] = None
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal state
+        part = reduce(batch_df)
+        merged = part if state is None else reduce(state.unionByName(part))
+        state = merged.localCheckpoint(eager=True)
+
+    _drain(df, df.writeStream.foreachBatch(merge), what, timeout_s)
+    if state is None:
+        raise RuntimeError(f"{what}: no micro-batches arrived")
+    return state
 
 
 def run_stream_upsert(
@@ -347,19 +368,12 @@ def run_stream_upsert(
     order_cols: tuple[str, ...],
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Streaming CDC upsert via ``foreachBatch``: each micro-batch is
-    reduced to its winning row per key (max over ``order_cols``, descending)
-    and merged into a keyed state snapshot — the 'stream into a mutable
-    store' pattern. The merge is associative and commutative on the order
-    key, so the final state is independent of micro-batch boundaries.
-    Drains with availableNow and returns the final state DataFrame; raises
-    loudly on a drain timeout instead of returning partial state."""
-    import tempfile
-
-    from pyspark.sql import functions as F
+    """Streaming CDC upsert: each micro-batch is reduced to its winning row
+    per key (max over ``order_cols``, descending) and merged into a keyed
+    state snapshot — the 'stream into a mutable store' pattern. The merge
+    is associative and commutative on the order key. Returns the final
+    state DataFrame."""
     from pyspark.sql.window import Window
-
-    state: dict[str, Optional[DataFrame]] = {"df": None}
 
     def winners(frame: DataFrame) -> DataFrame:
         # order by order_cols, then every remaining payload column as a
@@ -381,28 +395,7 @@ def run_stream_upsert(
             .drop("__rn")
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        upserts = winners(batch_df)
-        prev = state["df"]
-        merged = upserts if prev is None else winners(prev.unionByName(upserts))
-        # snapshot per batch: the state must not re-read source lineage
-        state["df"] = merged.localCheckpoint(eager=True)
-
-    with stream_shuffle_pinned(df.sparkSession):
-        q = (
-            df.writeStream.foreachBatch(merge)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError(
-                f"run_stream_upsert: drain did not finish in {timeout_s} s"
-            )
-    if state["df"] is None:
-        raise RuntimeError("run_stream_upsert: no micro-batches arrived")
-    return state["df"]
+    return _fold_stream(df, winners, "run_stream_upsert", timeout_s)
 
 
 def stream_stream_interval_join(
@@ -498,10 +491,6 @@ def events_stream_flushed(
     non-joinable) and a timestamp 30 days past the real maximum; callers
     filter ``user_id >= 0`` from results. The work dir holds a symlink to
     the fixture plus the sentinel parquet, built once per process."""
-    import os
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # absolute target: a relative sf_dir would make the link resolve
     # against the scratch dir and dangle (0-row stream, no error)
     ev_src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
@@ -510,7 +499,7 @@ def events_stream_flushed(
         os.unlink(link)  # repair a dangling link from an older relative run
     if not os.path.lexists(link):
         os.symlink(ev_src, link)
-    raw = spark.read.parquet(ev_src)
+    schema = raw_schema(spark, ev_src, "events")
     sent = os.path.join(work_dir, "sentinel")
     if not os.path.exists(os.path.join(sent, "_SUCCESS")):
         from pyspark.sql import types as T
@@ -522,9 +511,10 @@ def events_stream_flushed(
         mkey = (ev_src, os.path.getmtime(ev_src))
         mx = _MAX_TS_CACHE.get(mkey)
         if mx is None:
+            raw = spark.read.schema(schema).parquet(ev_src)
             mx = raw.agg(F.max("ts").alias("m")).collect()[0]["m"]
             _MAX_TS_CACHE[mkey] = mx
-        if isinstance(raw.schema["ts"].dataType, T.LongType):
+        if isinstance(schema["ts"].dataType, T.LongType):
             future = int(mx) + 30 * 86400 * 1_000_000_000  # ns
         else:
             import datetime
@@ -540,22 +530,16 @@ def events_stream_flushed(
                 "value": 0.0,
                 "props": None,
             }
-            rows.append(tuple(vals[f.name] for f in raw.schema.fields))
+            rows.append(tuple(vals[f.name] for f in schema.fields))
         # two literal rows: a LocalRelation, written by at most two JVM tasks
-        small_df(spark, rows, raw.schema).write.mode("overwrite").parquet(sent)
+        small_df(spark, rows, schema).write.mode("overwrite").parquet(sent)
     _note_stream_source(spark, ev_src)
     df = (
-        spark.readStream.schema(raw.schema)
+        spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(work_dir)
     )
-    from pyspark.sql import types as T
-
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_ts(df, "events")
 
 
 def run_stream_accumulate(
@@ -564,24 +548,15 @@ def run_stream_accumulate(
     sum_cols: tuple[str, ...],
     timeout_s: int = 120,
 ) -> DataFrame:
-    """Streaming ADDITIVE state via ``foreachBatch``: each micro-batch is
-    pre-aggregated to per-key partial sums, then merged into the running
-    state by re-aggregating the union of state and partials (sum-merge is
-    associative and commutative, so the final state is independent of
-    micro-batch boundaries) — the incremental form of any
+    """Streaming ADDITIVE state: each micro-batch is pre-aggregated to
+    per-key partial sums, then merged into the running state by
+    re-aggregating the union of state and partials (sum-merge is
+    associative and commutative) — the incremental form of any
     groupBy(key).sum() readout (experiment arm totals, per-source token
     counts) over an unbounded stream, with state bounded by |keys|, not
-    rows. Each round snapshots the state with an eager localCheckpoint;
-    reassigning ``state['df']`` drops the only reference to the previous
-    snapshot, so CPython refcounting + Spark's ContextCleaner free its
-    blocks promptly — at most two |keys|-sized snapshots are ever live
-    (the repo-wide lineage-cut idiom, see operators/graph.py). Drains
-    with availableNow; raises loudly on drain timeout."""
-    import tempfile
-
+    rows."""
     from pyspark.sql import types as T
 
-    state: dict[str, Optional[DataFrame]] = {"df": None}
     keys = list(key_cols)
     sums = list(sum_cols)
 
@@ -601,24 +576,4 @@ def run_stream_accumulate(
             *[F.sum(F.col(c)).cast(acc_types[c]).alias(c) for c in sums]
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        p = partials(batch_df)
-        prev = state["df"]
-        merged = p if prev is None else partials(prev.unionByName(p))
-        state["df"] = merged.localCheckpoint(eager=True)
-
-    with stream_shuffle_pinned(df.sparkSession):
-        q = (
-            df.writeStream.foreachBatch(merge)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_accum_"))
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError(
-                f"run_stream_accumulate: drain did not finish in {timeout_s} s"
-            )
-    if state["df"] is None:
-        raise RuntimeError("run_stream_accumulate: no micro-batches arrived")
-    return state["df"]
+    return _fold_stream(df, partials, "run_stream_accumulate", timeout_s)

@@ -112,3 +112,34 @@ def test_nan_keys_never_replay_on_the_driver(spark, monkeypatch):
     assert got == want
     # NaN is one node: {NaN, 1.0, 2.0}
     assert [r[0] for r in got["pagerank"]] == ["nan", 1.0, 2.0]
+
+
+@pytest.mark.parametrize(
+    "name, jobs",
+    [
+        ("bfs_levels", 2),
+        ("sssp_cheapest", 2),
+        ("hits", 3),
+        ("kcore_vertices", 2),
+        ("ktruss_edges", 2),
+    ],
+)
+def test_within_cap_build_and_collect_jobs(spark, name, jobs):
+    """A bounded iterate probes a lazy checkpoint of its rollup, so the
+    probe's collect materializes it: building and collecting one of these
+    iterates on a 400-edge, 4-partition frame runs a fixed number of
+    Spark jobs, one fewer than an eager checkpoint followed by the probe.
+    hits stays at 3: its rollup is a projection that keeps the input's 4
+    partitions, which the bounded collect reads in more than one job."""
+    edges = spark.range(0, 400, 1, 4).selectExpr(
+        "id % 60 AS src", "(id * 7 + 3) % 60 AS dst", "id % 5 + 1 AS w", "id % 5 + 1 AS cost"
+    )
+    run = {
+        "bfs_levels": lambda: G.bfs_levels(edges),
+        "sssp_cheapest": lambda: G.sssp_cheapest(edges),
+        "hits": lambda: G.hits(edges),
+        "kcore_vertices": lambda: G.kcore_vertices(edges, k=2),
+        "ktruss_edges": lambda: G.ktruss_edges(edges, k=2),
+    }[name]
+    rows, n = spark_jobs(spark, lambda: run().collect())
+    assert rows and n == jobs, (len(rows), n)

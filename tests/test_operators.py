@@ -12,7 +12,7 @@ from arc_cassandra_pipeline_plugin_spark.operators import dedup as D
 from arc_cassandra_pipeline_plugin_spark.operators import similarity as S
 from arc_cassandra_pipeline_plugin_spark.operators import text as TX
 from arc_cassandra_pipeline_plugin_spark.operators import timeseries as TS
-from conftest import distributed, no_replay, spy
+from conftest import distributed, no_replay, spark_jobs, spy
 
 
 def _docs(spark, rows):
@@ -514,13 +514,11 @@ def test_star_cc_bounded_graph_job_count(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(50)], "doc_a BIGINT, doc_b BIGINT"
     )
-    sc = spark.sparkContext
 
     def jobs_for_one_call():
-        ids0 = set(sc.statusTracker().getJobIdsForGroup())
-        rows = D.connected_components_star(pairs).collect()
+        rows, jobs = spark_jobs(spark, lambda: D.connected_components_star(pairs).collect())
         assert {r["cluster_id"] for r in rows} == {0} and len(rows) == 51
-        return len(set(sc.statusTracker().getJobIdsForGroup()) - ids0)
+        return jobs
 
     counts = {path: jobs_for_one_call() for path in _cc_paths(monkeypatch)}
     assert counts["driver"] <= 4, counts
@@ -1429,17 +1427,12 @@ def test_bpe_batched_equals_serial_with_fewer_jobs(spark):
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     docs.count()  # warm the scan
-    sc = spark.sparkContext
 
     def run(lookahead):
-        ids0 = set(sc.statusTracker().getJobIdsForGroup())
-        table = [
-            (r["round"], r["p1"], r["p2"], r["cnt"])
-            for r in bpe_train(docs, rounds=12, lookahead=lookahead)
-            .orderBy("round")
-            .collect()
-        ]
-        jobs = len(set(sc.statusTracker().getJobIdsForGroup()) - ids0)
+        rows, jobs = spark_jobs(
+            spark, lambda: bpe_train(docs, rounds=12, lookahead=lookahead).orderBy("round").collect()
+        )
+        table = [(r["round"], r["p1"], r["p2"], r["cnt"]) for r in rows]
         return table, jobs, bpe_train.last_iterations
 
     serial_table, serial_jobs, serial_iters = run(1)

@@ -417,7 +417,7 @@ def test_stream_static_join_broadcasts_the_dim(spark):
 
     from arc_cassandra_pipeline_plugin_spark.sources import load_table
 
-    ev = ST.events_stream(spark, SF_SMALL).select("event_id", "user_id")
+    ev = ST.table_stream(spark, SF_SMALL, "events").select("event_id", "user_id")
     dim = load_table(spark, SF_SMALL, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )

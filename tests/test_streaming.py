@@ -798,3 +798,87 @@ def test_stream_accumulate_sums_across_micro_batches(spark, tmp_path):
     got = {(r["user_id"], r["v"], r["one"]) for r in final.collect()}
     want = {(r["user_id"], r["v"], r["one"]) for r in expected.collect()}
     assert got == want
+
+
+@pytest.fixture
+def drain_src(spark, tmp_path):
+    """A two-file parquet source of 40 (k, v) rows over 4 keys."""
+    src = str(tmp_path / "drain_src")
+    spark.range(0, 40, 1, 2).selectExpr("id % 4 AS k", "id AS v").write.parquet(src)
+    return src
+
+
+def _drains(spark, src):
+    """The three bounded drains, each over a fresh stream of ``src``."""
+    from arc_cassandra_pipeline_plugin_spark import streaming as ST
+
+    def stream():
+        return spark.readStream.schema("k BIGINT, v BIGINT").parquet(src)
+
+    return {
+        "run_stream_to_memory": lambda: ST.run_stream_to_memory(
+            stream().groupBy("k").sum("v"), "drain_probe_result"
+        ),
+        "run_stream_upsert": lambda: ST.run_stream_upsert(
+            stream(), key_cols=("k",), order_cols=("v",)
+        ),
+        "run_stream_accumulate": lambda: ST.run_stream_accumulate(
+            stream(), key_cols=("k",), sum_cols=("v",)
+        ),
+    }
+
+
+def test_drains_delete_their_checkpoints(spark, drain_src, tmp_path, monkeypatch):
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    for name, drain in _drains(spark, drain_src).items():
+        assert drain().count() == 4, name
+        assert list(tmp.glob("ckpt_*")) == [], name
+
+
+def test_timed_out_drain_stops_the_query_and_raises(spark, drain_src, monkeypatch):
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    for name, drain in _drains(spark, drain_src).items():
+        with pytest.raises(RuntimeError, match="did not finish"):
+            drain()
+        assert spark.streams.active == [], name
+
+
+def test_fold_without_a_micro_batch_raises(spark, tmp_path):
+    from arc_cassandra_pipeline_plugin_spark.streaming import run_stream_accumulate
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    stream = spark.readStream.schema("k BIGINT, v BIGINT").parquet(str(empty))
+    with pytest.raises(RuntimeError, match="no micro-batches"):
+        run_stream_accumulate(stream, key_cols=("k",), sum_cols=("v",))
+
+
+def test_streaming_load_batches_keep_the_user_data(spark, drain_src, tmp_path):
+    """Every micro-batch runs the wrapped stage under the pipeline's own
+    context, with only the streaming and immutable-view flags switched off."""
+    seen = []
+
+    class RecordingLoad(ParquetLoad):
+        def _run(self, spark, ctx):
+            seen.append((ctx.user_data, ctx.is_streaming, ctx.immutable_views))
+            return super()._run(spark, ctx)
+
+    spark.readStream.schema("k BIGINT, v BIGINT").parquet(drain_src).createOrReplaceTempView(
+        "drain_src_stream"
+    )
+    ctx = PipelineContext(immutable_views=True, user_data={"run": "r1"})
+    out = str(tmp_path / "out")
+    StreamingLoad(
+        name="sl_ctx",
+        input_view="drain_src_stream",
+        wrapped=RecordingLoad(name="inner", input_view="drain_src_batch", output_uri=out),
+        checkpoint_uri=str(tmp_path / "ckpt"),
+    ).execute(spark, ctx)
+    assert seen and all(s == ({"run": "r1"}, False, False) for s in seen), seen
+    assert spark.read.parquet(out).count() == 40
