@@ -1,11 +1,18 @@
-"""Column-level helper functions.
+"""Column-level and frame-level helper functions.
 
-All helpers return Spark ``Column`` expressions built from
-``pyspark.sql.functions`` — JVM-side, whole-stage-codegen'd, no Python UDFs
-in any hot path. Where a function participates in oracle-checked queries,
-its semantics are chosen to be expressible identically in ANSI SQL
-(cross-engine-deterministic: md5-hex prefixes for hashing, sequential
-left-to-right folds for vector math).
+The column helpers return Spark ``Column`` expressions built from
+``pyspark.sql.functions``: JVM-side, no Python UDFs. The vector helpers'
+``transform`` / ``aggregate`` / ``zip_with`` lambdas are not
+whole-stage-codegen'd: Spark's higher-order functions have no codegen
+path and evaluate row by row, interpreted. Where a function participates in
+oracle-checked queries, its semantics are chosen to be expressible
+identically in ANSI SQL (cross-engine-deterministic: md5-hex prefixes for
+hashing, sequential left-to-right folds for vector math).
+
+:func:`per_row` is the one Python escape hatch for per-row kernels that
+Spark has no builtin for (the media codecs, the tar unpacker): a
+``mapInArrow`` pass whose output batches are laid out from row tuples the
+same way :func:`small_df` lays out driver rows.
 """
 
 from __future__ import annotations
@@ -176,19 +183,60 @@ def small_df(spark, rows, schema) -> DataFrame:
     task (~300 ms a replay on 4 cores, the first one also forking the
     worker daemon) just to hand a few literal rows to the JVM."""
     import pyarrow as pa
+    from pyspark.sql.types import _make_type_verifier
+
+    struct, arrow = _schemas(schema)
+    verify = _make_type_verifier(struct)
+
+    def internal(row):
+        verify(row)
+        return struct.toInternal(row)
+
+    batch = _record_batch(map(internal, rows), arrow)
+    return spark.createDataFrame(pa.Table.from_batches([batch]), struct)
+
+
+def per_row(df: DataFrame, fn, schema) -> DataFrame:
+    """One ``mapInArrow`` pass calling ``fn(*row)`` on each row of ``df``
+    (its columns in order, as Python values: ``bytes`` for binary, ``int``,
+    ``None`` for NULL); ``fn`` yields zero or more output tuples in
+    ``schema``'s column order (a ``StructType`` or a DDL string). Each
+    input batch becomes one output batch built straight from those tuples
+    as Arrow arrays of the schema's types, with no pandas frame on either
+    side; an empty batch is typed by the schema. An exception raised by
+    ``fn`` fails the task, and with it the action."""
+    struct, arrow = _schemas(schema)
+
+    def batches(it):
+        for batch in it:
+            rows = zip(*(c.to_pylist() for c in batch.columns))
+            yield _record_batch((out for row in rows for out in fn(*row)), arrow)
+
+    return df.mapInArrow(batches, struct)
+
+
+def _schemas(schema):
+    """``schema`` (a ``StructType`` or DDL string) as (StructType, Arrow
+    schema)."""
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType, _make_type_verifier
+    from pyspark.sql.types import StructType
 
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    verify = _make_type_verifier(struct)
-    cols: list[list] = [[] for _ in struct.fields]
+    return struct, to_arrow_schema(struct)
+
+
+def _record_batch(rows, arrow):
+    """Row tuples laid out as one ``pyarrow.RecordBatch`` of ``arrow``'s
+    column types."""
+    import pyarrow as pa
+
+    cols: list[list] = [[] for _ in arrow]
     for row in rows:
-        verify(row)
-        for col, v in zip(cols, struct.toInternal(row)):
+        for col, v in zip(cols, row, strict=True):
             col.append(v)
-    arrow = to_arrow_schema(struct)
-    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
-    return spark.createDataFrame(table, struct)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
 
 
 def checkpoint_sized(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:

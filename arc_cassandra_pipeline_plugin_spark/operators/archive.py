@@ -4,7 +4,7 @@ Large text/multimodal corpora ship as directories of tar shards (the
 WebDataset convention: one tar per shard, one or more members per sample).
 These kernels treat each shard as an opaque ``binary`` payload row and
 unpack it executor-side with the standard library's ``tarfile`` — one
-Arrow batch in, one member-row batch out, never per-row Python, no shard
+Arrow batch in, one member-row batch out (``functions.per_row``), no shard
 ever materialized on the driver. At 100 TB the shard table is just a
 binary column scan; extraction parallelism = shard-row parallelism, and
 downstream operators see ordinary (member, payload) rows.
@@ -14,10 +14,11 @@ from __future__ import annotations
 
 import io
 import tarfile
-from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from arc_cassandra_pipeline_plugin_spark.functions import per_row
 
 
 def _member_text(doc_id: int) -> bytes:
@@ -66,24 +67,10 @@ def tar_member_stats(shards: DataFrame) -> DataFrame:
     pipeline runs before trusting a shard drop. Malformed archives raise
     (fail loud, not silent skip)."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("shard_id", "member", "n_bytes", "byte_sum")}
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                with tarfile.open(fileobj=io.BytesIO(payload)) as tf:
-                    for info in tf.getmembers():
-                        data = tf.extractfile(info).read()
-                        out["shard_id"].append(sid)
-                        out["member"].append(info.name)
-                        out["n_bytes"].append(len(data))
-                        out["byte_sum"].append(sum(data))
-            yield pd.DataFrame(
-                {
-                    "shard_id": pd.Series(out["shard_id"], dtype="int64"),
-                    "member": pd.Series(out["member"], dtype="object"),
-                    "n_bytes": pd.Series(out["n_bytes"], dtype="int32"),
-                    "byte_sum": pd.Series(out["byte_sum"], dtype="int64"),
-                }
-            )
+    def members(sid, payload):
+        with tarfile.open(fileobj=io.BytesIO(payload)) as tf:
+            for info in tf.getmembers():
+                data = tf.extractfile(info).read()
+                yield sid, info.name, len(data), sum(data)
 
-    return shards.mapInPandas(batches, schema=TAR_MEMBER_SCHEMA)
+    return per_row(shards.select("shard_id", "payload"), members, TAR_MEMBER_SCHEMA)

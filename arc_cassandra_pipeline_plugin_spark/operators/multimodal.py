@@ -4,8 +4,8 @@ columns with typed metadata.
 The container has no image/audio codec libraries, so decode kernels for
 formats needing them (progressive JPEG, MP3, H.264) are deterministic
 fakes / clearly-marked stubs — but the Spark-side plumbing is real and
-tested (schema contracts, Arrow-batched ``mapInPandas`` transforms, batch
-shapes, partition sizing), and five codecs are REAL with no codec
+tested (schema contracts, Arrow-batched per-row kernels, fan-out shapes,
+partition sizing), and five codecs are REAL with no codec
 library: :func:`decode_wav_pcm16` (RIFF/WAVE chunk parser),
 :func:`decode_bmp24` (24-bit BMP), :func:`decode_png` (compressed PNG —
 zlib inflate, CRC validation, predictive scanline unfilter),
@@ -18,19 +18,22 @@ Swapping a stub body for PIL/ffmpeg is a one-function change; nothing in
 the plan changes.
 
 Scale notes: binary payloads ride in the same parquet row groups as their
-metadata; ``spark.sql.files.maxPartitionBytes`` governs task sizing, and all
-kernels are ``mapInPandas`` (one Arrow batch in, one out) so Python overhead
-is per-batch, not per-row.
+metadata; ``spark.sql.files.maxPartitionBytes`` governs task sizing. Byte
+counts and checksums are Spark builtins (:func:`payload_checksums`). Every
+codec kernel is a per-asset Python function run through
+:func:`~arc_cassandra_pipeline_plugin_spark.functions.per_row`: one Arrow
+batch in, one out, with the kernel body (the decode or encode, which is
+per-asset work in any codec) called once per row and no pandas frame built.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from arc_cassandra_pipeline_plugin_spark.functions import per_row
 
 #: schema contract for a multimodal asset table
 ASSET_SCHEMA = (
@@ -38,12 +41,10 @@ ASSET_SCHEMA = (
     "width int, height int, duration_ms int"
 )
 
-FEATURE_SCHEMA = "asset_id bigint, media_type string, n_bytes bigint, checksum string, feature array<double>"
+#: output contract of the synthesizers and resamplers
+ASSET_PAYLOAD_SCHEMA = "asset_id bigint, payload binary"
 
-#: checksum-only contract (``extract_features(with_feature=False)``)
-FEATURE_SCHEMA_NO_VECTOR = (
-    "asset_id bigint, media_type string, n_bytes bigint, checksum string"
-)
+FEATURE_SCHEMA = "asset_id bigint, media_type string, n_bytes bigint, checksum string, feature array<double>"
 
 
 def documents_as_assets(documents: DataFrame) -> DataFrame:
@@ -82,53 +83,30 @@ def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     return out
 
 
-def extract_features(assets: DataFrame, dim: int = 8, with_feature: bool = True) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads via
-    ``mapInPandas``: n_bytes, sha-256 checksum, and (when ``with_feature``)
-    a ``dim``-wide feature vector (deterministic fake — see
-    :func:`_fake_feature`). Spark cannot prune output columns *through* a
-    ``mapInPandas`` kernel, so checksum-only callers pass
-    ``with_feature=False`` to skip the per-byte feature work instead of
-    computing and discarding it."""
-    import hashlib
-
-    schema = FEATURE_SCHEMA if with_feature else FEATURE_SCHEMA_NO_VECTOR
-
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            cols = {
-                "asset_id": pdf["asset_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": payloads.map(lambda b: 0 if b is None else len(b)),
-                "checksum": payloads.map(
-                    lambda b: hashlib.sha256(b or b"").hexdigest()
-                ),
-            }
-            if with_feature:
-                cols["feature"] = payloads.map(lambda b: _fake_feature(b, dim))
-            yield pd.DataFrame(cols)
-
-    return assets.mapInPandas(batches, schema=schema)
-
-
-def resize_images(assets: DataFrame, max_px: int = 512) -> DataFrame:
-    """STUB plumbing for image resize: passes payloads through an Arrow batch
-    unchanged (a real kernel would decode→resize→re-encode per batch) and
-    records the requested bound in ``resize_to``."""
-
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["resize_to"] = max_px
-            yield pdf
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(assets.schema.fields) + [T.StructField("resize_to", T.IntegerType())]
+def payload_checksums(assets: DataFrame) -> DataFrame:
+    """``asset_id, media_type, n_bytes, checksum, payload`` with the byte
+    length and the hex sha-256 of each payload computed by Spark builtins
+    (``length``, ``sha2``) in the JVM. A NULL payload counts as empty: 0
+    bytes and the sha-256 of ``b""``."""
+    payload = F.coalesce(F.col("payload"), F.lit(bytearray()))
+    return assets.select(
+        "asset_id",
+        "media_type",
+        F.length(payload).cast("bigint").alias("n_bytes"),
+        F.sha2(payload, 256).alias("checksum"),
+        "payload",
     )
-    return assets.mapInPandas(batches, schema=schema)
+
+
+def extract_features(assets: DataFrame, dim: int = 8) -> DataFrame:
+    """:func:`payload_checksums` plus a ``dim``-wide feature vector per
+    payload (deterministic fake, see :func:`_fake_feature`), the one column
+    that needs Python."""
+
+    def featurize(aid, media_type, n_bytes, checksum, payload):
+        yield aid, media_type, n_bytes, checksum, _fake_feature(payload, dim)
+
+    return per_row(payload_checksums(assets), featurize, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "asset_id bigint, frame_idx int, frame_payload binary, frame_offset_ms int"
@@ -138,48 +116,20 @@ def sample_frames(assets: DataFrame, every_ms: int = 1000, frame_bytes: int = 64
     """Frame-sampling plumbing for video/audio assets: emit one row per
     sampled frame with a payload slice. The *decode* is a deterministic
     byte-slicing fake (no codecs in this container — a real kernel swaps in
-    pyav/ffmpeg per batch); the Spark-side shape is the real one: one input
+    pyav/ffmpeg per asset); the Spark-side shape is the real one: one input
     asset row fans out to N frame rows inside a single Arrow batch, so
     downstream per-frame operators (feature extraction, dedup) see a plain
     distributed table keyed by (asset_id, frame_idx)."""
 
-    import numpy as np
+    def frames(aid, payload, duration_ms):
+        payload = payload or b""
+        n = len(payload)
+        span = duration_ms if duration_ms and duration_ms > 0 else max(n, 1)
+        for f in range(max(span // every_ms, 1)):
+            start = f * frame_bytes % n if n else 0
+            yield aid, f, payload[start : start + frame_bytes], f * every_ms
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    columns=["asset_id", "frame_idx", "frame_payload", "frame_offset_ms"]
-                )
-                continue
-            # vectorized fan-out: compute per-asset frame counts, then build
-            # the exploded frame table with numpy repeat/arange — batch-level
-            # Python only; the per-frame byte slices are the one remaining
-            # per-element op (they produce variable-length binary objects)
-            payloads = pdf["payload"].map(lambda b: b or b"")
-            plens = payloads.map(len).to_numpy(dtype=np.int64)
-            durations = pdf["duration_ms"].fillna(0).to_numpy(dtype=np.int64)
-            durations = np.where(durations > 0, durations, np.maximum(plens, 1))
-            n_frames = np.maximum(durations // every_ms, 1).astype(np.int64)
-
-            row_pos = np.repeat(np.arange(len(pdf)), n_frames)
-            frame_idx = np.concatenate([np.arange(n) for n in n_frames])
-            starts = np.where(
-                plens[row_pos] > 0, (frame_idx * frame_bytes) % np.maximum(plens[row_pos], 1), 0
-            )
-            pay = payloads.to_numpy(dtype=object)[row_pos]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].to_numpy()[row_pos],
-                    "frame_idx": frame_idx.astype(np.int32),
-                    "frame_payload": [
-                        bytes(p[s : s + frame_bytes]) for p, s in zip(pay, starts)
-                    ],
-                    "frame_offset_ms": (frame_idx * every_ms).astype(np.int32),
-                }
-            )
-
-    return assets.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return per_row(assets.select("asset_id", "payload", "duration_ms"), frames, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -253,25 +203,18 @@ def wav_features(assets: DataFrame) -> DataFrame:
     sample_rate, sample count, exact integer duration, peak amplitude, and
     6-dp RMS per asset. Any payload :func:`decode_wav_pcm16` rejects fails
     the task loudly (data error, not a skip)."""
-    import math
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("asset_id", "sample_rate", "n_samples", "duration_ms", "peak_abs", "rms")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rate, samples = decode_wav_pcm16(payload)
-                n = len(samples)
-                ss = sum(s * s for s in samples)
-                out["asset_id"].append(aid)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                out["duration_ms"].append(n * 1000 // rate)
-                out["peak_abs"].append(max((abs(s) for s in samples), default=0))
-                out["rms"].append(round(math.sqrt(ss / n), 6) if n else 0.0)
-            yield pd.DataFrame(out)
+    def features(aid, payload):
+        rate, samples = decode_wav_pcm16(payload)
+        n = len(samples)
+        ss = sum(s * s for s in samples)
+        yield (
+            aid, rate, n, n * 1000 // rate,
+            max((abs(s) for s in samples), default=0),
+            round(math.sqrt(ss / n), 6) if n else 0.0,
+        )
 
-    return assets.mapInPandas(batches, schema=WAV_FEATURE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), features, WAV_FEATURE_SCHEMA)
 
 
 def synthesize_wav_assets(
@@ -283,26 +226,11 @@ def synthesize_wav_assets(
     oracle reproduces exactly, serialized through the REAL encoder so the
     decoder is tested against genuine RIFF bytes."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids_,
-                    "payload": [
-                        encode_wav_pcm16(
-                            [
-                                ((i * 31 + j * 17) % 2048) - 1024
-                                for j in range(100 + i % 50)
-                            ],
-                            sample_rate,
-                        )
-                        for i in ids_
-                    ],
-                }
-            )
+    def synthesize(i):
+        samples = [((i * 31 + j * 17) % 2048) - 1024 for j in range(100 + i % 50)]
+        yield i, encode_wav_pcm16(samples, sample_rate)
 
-    return ids.select(id_col).mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(ids.select(id_col), synthesize, ASSET_PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -376,26 +304,20 @@ def decode_bmp24(payload: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     return width, height, pixels
 
 
+def _channel_means(px: list[tuple[int, int, int]], n: int) -> list[float]:
+    """Per-channel means of ``n`` RGB pixels, 6 dp (0.0 for no pixels)."""
+    return [round(sum(p[c] for p in px) / n, 6) if n else 0.0 for c in range(3)]
+
+
 def bmp_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched image feature extraction via the REAL BMP decoder:
     dimensions and exact per-channel means (6 dp)."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in
-                   ("asset_id", "width", "height", "n_pixels", "mean_r", "mean_g", "mean_b")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_bmp24(payload)
-                n = w * h
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                for idx, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                    out[key].append(round(sum(p[idx] for p in px) / n, 6) if n else 0.0)
-            yield pd.DataFrame(out)
+    def features(aid, payload):
+        w, h, px = decode_bmp24(payload)
+        yield (aid, w, h, w * h, *_channel_means(px, w * h))
 
-    return assets.mapInPandas(batches, schema=BMP_FEATURE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), features, BMP_FEATURE_SCHEMA)
 
 
 def synthesize_bmp_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -406,20 +328,23 @@ def synthesize_bmp_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     REAL encoder (bottom-up rows, padding) so the decoder faces genuine
     BMP bytes."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            payloads = []
-            for i in ids_:
-                w, h = 4 + i % 5, 3 + i % 4
-                px = [
-                    ((i + 13 * p) % 256, (2 * i + 7 * p) % 256, (3 * i + 11 * p) % 256)
-                    for p in range(w * h)
-                ]
-                payloads.append(encode_bmp24(w, h, px))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def synthesize(i):
+        w, h = 4 + i % 5, 3 + i % 4
+        px = [
+            ((i + 13 * p) % 256, (2 * i + 7 * p) % 256, (3 * i + 11 * p) % 256)
+            for p in range(w * h)
+        ]
+        yield i, encode_bmp24(w, h, px)
 
-    return ids.select(id_col).mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(ids.select(id_col), synthesize, ASSET_PAYLOAD_SCHEMA)
+
+
+def _nearest(px: list, w: int, h: int, out_w: int, out_h: int) -> list:
+    """Nearest-neighbor resample of a ``w × h`` row-major pixel list to
+    ``out_w × out_h`` on the integer sampling grid of :func:`resize_bmp`."""
+    return [
+        px[(y * h // out_h) * w + (x * w // out_w)] for y in range(out_h) for x in range(out_w)
+    ]
 
 
 def resize_bmp(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -430,21 +355,11 @@ def resize_bmp(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
     in, one out; the codec quirks (padding, row order) are exercised twice
     per asset."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_, payloads = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_bmp24(payload)
-                out = [
-                    px[(y * h // out_h) * w + (x * w // out_w)]
-                    for y in range(out_h)
-                    for x in range(out_w)
-                ]
-                ids_.append(aid)
-                payloads.append(encode_bmp24(out_w, out_h, out))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def resize(aid, payload):
+        w, h, px = decode_bmp24(payload)
+        yield aid, encode_bmp24(out_w, out_h, _nearest(px, w, h, out_w, out_h))
 
-    return assets.mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(assets.select("asset_id", "payload"), resize, ASSET_PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -639,24 +554,11 @@ def png_features(assets: DataFrame) -> DataFrame:
     dimensions, exact per-channel means (6 dp), and the compressed payload
     size (the one column a compressed format adds over BMP)."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "width", "height", "n_pixels",
-                "mean_r", "mean_g", "mean_b", "compressed_bytes")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_png(payload)
-                n = w * h
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                for idx, key in enumerate(("mean_r", "mean_g", "mean_b")):
-                    out[key].append(round(sum(p[idx] for p in px) / n, 6) if n else 0.0)
-                out["compressed_bytes"].append(len(payload))
-            yield pd.DataFrame(out)
+    def features(aid, payload):
+        w, h, px = decode_png(payload)
+        yield (aid, w, h, w * h, *_channel_means(px, w * h), len(payload))
 
-    return assets.mapInPandas(batches, schema=PNG_FEATURE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), features, PNG_FEATURE_SCHEMA)
 
 
 def synthesize_png_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -667,20 +569,15 @@ def synthesize_png_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     REAL encoder (DEFLATE + cycling scanline filters) so the decoder faces
     genuine compressed PNG bytes and every unfilter branch runs."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            payloads = []
-            for i in ids_:
-                w, h = 4 + i % 6, 3 + i % 5
-                px = [
-                    ((5 * i + 19 * p) % 256, (7 * i + 23 * p) % 256, (11 * i + 29 * p) % 256)
-                    for p in range(w * h)
-                ]
-                payloads.append(encode_png(w, h, px))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def synthesize(i):
+        w, h = 4 + i % 6, 3 + i % 5
+        px = [
+            ((5 * i + 19 * p) % 256, (7 * i + 23 * p) % 256, (11 * i + 29 * p) % 256)
+            for p in range(w * h)
+        ]
+        yield i, encode_png(w, h, px)
 
-    return ids.select(id_col).mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(ids.select(id_col), synthesize, ASSET_PAYLOAD_SCHEMA)
 
 
 def resize_png(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -689,21 +586,11 @@ def resize_png(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
     as :func:`resize_bmp`, re-encode (filter + deflate). One Arrow batch in,
     one out; the full compress/decompress cycle runs twice per asset."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_, payloads = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_png(payload)
-                out = [
-                    px[(y * h // out_h) * w + (x * w // out_w)]
-                    for y in range(out_h)
-                    for x in range(out_w)
-                ]
-                ids_.append(aid)
-                payloads.append(encode_png(out_w, out_h, out))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def resize(aid, payload):
+        w, h, px = decode_png(payload)
+        yield aid, encode_png(out_w, out_h, _nearest(px, w, h, out_w, out_h))
 
-    return assets.mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(assets.select("asset_id", "payload"), resize, ASSET_PAYLOAD_SCHEMA)
 
 
 def resample_wav(assets: DataFrame, out_rate: int) -> DataFrame:
@@ -714,18 +601,13 @@ def resample_wav(assets: DataFrame, out_rate: int) -> DataFrame:
     exactly), re-encode at the new rate. One Arrow batch in, one out; the
     RIFF container is parsed and rebuilt per asset."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_, payloads = [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                in_rate, samples = decode_wav_pcm16(payload)
-                n_out = len(samples) * out_rate // in_rate
-                out = [samples[j * in_rate // out_rate] for j in range(n_out)]
-                ids_.append(aid)
-                payloads.append(encode_wav_pcm16(out, out_rate))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def resample(aid, payload):
+        in_rate, samples = decode_wav_pcm16(payload)
+        n_out = len(samples) * out_rate // in_rate
+        out = [samples[j * in_rate // out_rate] for j in range(n_out)]
+        yield aid, encode_wav_pcm16(out, out_rate)
 
-    return assets.mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(assets.select("asset_id", "payload"), resample, ASSET_PAYLOAD_SCHEMA)
 
 
 WAV_FRAME_SCHEMA = "asset_id bigint, frame_idx int, n_samples int, peak_abs int, rms double"
@@ -737,24 +619,18 @@ def wav_frame_features(assets: DataFrame, frame_len: int = 32) -> DataFrame:
     row per frame with peak and 6-dp RMS — the frame-granular feature table
     a speech/audio pipeline feeds downstream. One asset row fans out to its
     frames inside a single Arrow batch."""
-    import math
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("asset_id", "frame_idx", "n_samples", "peak_abs", "rms")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _rate, samples = decode_wav_pcm16(payload)
-                for f in range((len(samples) + frame_len - 1) // frame_len):
-                    win = samples[f * frame_len : (f + 1) * frame_len]
-                    ss = sum(s * s for s in win)
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(f)
-                    out["n_samples"].append(len(win))
-                    out["peak_abs"].append(max((abs(s) for s in win), default=0))
-                    out["rms"].append(round(math.sqrt(ss / len(win)), 6) if win else 0.0)
-            yield pd.DataFrame(out)
+    def frames(aid, payload):
+        _rate, samples = decode_wav_pcm16(payload)
+        for f in range((len(samples) + frame_len - 1) // frame_len):
+            win = samples[f * frame_len : (f + 1) * frame_len]
+            ss = sum(s * s for s in win)
+            yield (
+                aid, f, len(win), max((abs(s) for s in win), default=0),
+                round(math.sqrt(ss / len(win)), 6) if win else 0.0,
+            )
 
-    return assets.mapInPandas(batches, schema=WAV_FRAME_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), frames, WAV_FRAME_SCHEMA)
 
 
 #: DFT window for :func:`wav_spectrum_features` and the quantized cos/sin
@@ -788,35 +664,20 @@ def wav_spectrum_features(
     1e9-quantized integer tables, so C_k = Σ smp_j·cosq[(k·j) mod N] is an
     exact bigint in BOTH engines (|C| ≤ 1024·1e9·64 < 2⁵³, so the final
     int→double rescale and the power combination are identical IEEE ops —
-    no rounding needed anywhere). One Arrow batch per partition; the fan-out
+    no rounding needed anywhere). One Arrow batch in, one out; the fan-out
     is |bins| rows per asset."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("asset_id", "bin_k", "c_k", "s_k", "power_k")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _rate, samples = decode_wav_pcm16(payload)
-                win = samples[:SPECTRUM_N]
-                if len(win) < SPECTRUM_N:
-                    raise ValueError(
-                        f"asset {aid}: {len(win)} samples < window {SPECTRUM_N}"
-                    )
-                for k in bins:
-                    cq = sum(
-                        s * _COSQ[(k * j) % SPECTRUM_N] for j, s in enumerate(win)
-                    )
-                    sq = sum(
-                        s * _SINQ[(k * j) % SPECTRUM_N] for j, s in enumerate(win)
-                    )
-                    cd, sd = float(cq), float(sq)
-                    out["asset_id"].append(aid)
-                    out["bin_k"].append(k)
-                    out["c_k"].append(cd / 1e9)
-                    out["s_k"].append(sd / 1e9)
-                    out["power_k"].append((cd * cd + sd * sd) / 1e18)
-            yield pd.DataFrame(out)
+    def spectrum(aid, payload):
+        _rate, samples = decode_wav_pcm16(payload)
+        win = samples[:SPECTRUM_N]
+        if len(win) < SPECTRUM_N:
+            raise ValueError(f"asset {aid}: {len(win)} samples < window {SPECTRUM_N}")
+        for k in bins:
+            cd = float(sum(s * _COSQ[(k * j) % SPECTRUM_N] for j, s in enumerate(win)))
+            sd = float(sum(s * _SINQ[(k * j) % SPECTRUM_N] for j, s in enumerate(win)))
+            yield aid, k, cd / 1e9, sd / 1e9, (cd * cd + sd * sd) / 1e18
 
-    return assets.mapInPandas(batches, schema=WAV_SPECTRUM_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), spectrum, WAV_SPECTRUM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1072,30 +933,13 @@ def gif_frame_features(assets: DataFrame, every_n: int = 1) -> DataFrame:
     pipeline, with a genuinely compressed container standing in for the
     codec-library formats. One Arrow batch in, one out."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "frame_idx", "delay_cs", "width", "height",
-                "n_px", "max_idx", "sum_idx")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _w, _h, _pal, frames = decode_gif(payload)
-                for fi, (_l, _t, fw, fh, delay, idxs) in enumerate(frames):
-                    if fi % every_n:
-                        continue
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(fi)
-                    out["delay_cs"].append(delay)
-                    out["width"].append(fw)
-                    out["height"].append(fh)
-                    out["n_px"].append(fw * fh)
-                    out["max_idx"].append(max(idxs) if idxs else 0)
-                    out["sum_idx"].append(sum(idxs))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64" if k in ("asset_id", "sum_idx")
-                              else "int32") for k, v in out.items()}
-            )
+    def frames(aid, payload):
+        _w, _h, _pal, frames = decode_gif(payload)
+        for fi, (_l, _t, fw, fh, delay, idxs) in enumerate(frames):
+            if fi % every_n == 0:
+                yield aid, fi, delay, fw, fh, fw * fh, max(idxs, default=0), sum(idxs)
 
-    return assets.mapInPandas(batches, schema=GIF_FRAME_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), frames, GIF_FRAME_SCHEMA)
 
 
 def synthesize_gif_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1107,21 +951,13 @@ def synthesize_gif_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decoder faces genuine variable-width compressed streams."""
     pal = [((17 * c) % 256, (29 * c) % 256, (43 * c) % 256) for c in range(16)]
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            payloads = []
-            for i in ids_:
-                w, h = 5 + i % 4, 4 + i % 3
-                nf = 2 + i % 3
-                frames = [
-                    [(7 * i + 13 * f + 3 * p) % 16 for p in range(w * h)]
-                    for f in range(nf)
-                ]
-                payloads.append(encode_gif(w, h, pal, frames, [4 + f for f in range(nf)]))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def synthesize(i):
+        w, h = 5 + i % 4, 4 + i % 3
+        nf = 2 + i % 3
+        frames = [[(7 * i + 13 * f + 3 * p) % 16 for p in range(w * h)] for f in range(nf)]
+        yield i, encode_gif(w, h, pal, frames, [4 + f for f in range(nf)])
 
-    return ids.select(id_col).mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(ids.select(id_col), synthesize, ASSET_PAYLOAD_SCHEMA)
 
 
 BMP_AHASH_SCHEMA = (
@@ -1141,37 +977,29 @@ def bmp_ahash(assets: DataFrame) -> DataFrame:
     (299 R + 587 G + 114 B), and every mean comparison is CROSS-MULTIPLIED
     (block_sum * n_total > total_sum * n_block) — pure BIGINT ordering, no
     division, no float anywhere, so the hash is bit-stable by
-    construction. Arrow-batched mapInPandas like every multimodal kernel;
-    shuffle-free (one pass over payloads)."""
+    construction. One per-row pass over payloads like every multimodal
+    kernel; shuffle-free."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("asset_id", "width", "height", "ahash4", "gray_sum")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_bmp24(payload)
-                gray = [299 * r + 587 * g + 114 * b for (r, g, b) in px]
-                total = sum(gray)
-                n = w * h
-                bs = [[0, 0], [0, 0]]
-                bn = [[0, 0], [0, 0]]
-                for p, gv in enumerate(gray):
-                    bx = 0 if (p % w) < (w // 2) else 1
-                    by = 0 if (p // w) < (h // 2) else 1
-                    bs[by][bx] += gv
-                    bn[by][bx] += 1
-                code = 0
-                for by in range(2):
-                    for bx in range(2):
-                        if bs[by][bx] * n > total * bn[by][bx]:
-                            code |= 1 << (by * 2 + bx)
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash4"].append(code)
-                out["gray_sum"].append(total)
-            yield pd.DataFrame(out)
+    def ahash(aid, payload):
+        w, h, px = decode_bmp24(payload)
+        gray = [299 * r + 587 * g + 114 * b for (r, g, b) in px]
+        total = sum(gray)
+        n = w * h
+        bs = [[0, 0], [0, 0]]
+        bn = [[0, 0], [0, 0]]
+        for p, gv in enumerate(gray):
+            bx = 0 if (p % w) < (w // 2) else 1
+            by = 0 if (p // w) < (h // 2) else 1
+            bs[by][bx] += gv
+            bn[by][bx] += 1
+        code = 0
+        for by in range(2):
+            for bx in range(2):
+                if bs[by][bx] * n > total * bn[by][bx]:
+                    code |= 1 << (by * 2 + bx)
+        yield aid, w, h, code, total
 
-    return assets.mapInPandas(batches, schema=BMP_AHASH_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), ahash, BMP_AHASH_SCHEMA)
 
 
 BMP_PATCH_SCHEMA = "asset_id bigint, py int, px int, n_px bigint, luma_sum bigint"
@@ -1186,36 +1014,27 @@ def bmp_patches(assets: DataFrame, patch: int = 2) -> DataFrame:
     grid a vision transformer embeds, with the sum left unreduced so
     downstream normalization stays in exact integers.
 
-    Scale shape: one Arrow-batched ``mapInPandas`` pass over payloads
-    (shuffle-free); output is (pixels/patch²) rows per asset — a bounded
-    constant-factor fan-out, partitioned exactly like the input
-    payloads. The decode is the pure-stdlib BMP codec; no pixel array
-    ever crosses the driver."""
+    Scale shape: one per-row pass over payloads (shuffle-free); output
+    is (pixels/patch²) rows per asset — a bounded constant-factor
+    fan-out, partitioned exactly like the input payloads. The decode is
+    the pure-stdlib BMP codec; no pixel array ever crosses the driver."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("asset_id", "py", "px", "n_px", "luma_sum")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_bmp24(payload)
-                fw, fh = (w // patch) * patch, (h // patch) * patch
-                sums: dict[tuple[int, int], int] = {}
-                cnts: dict[tuple[int, int], int] = {}
-                for p, (r, g, b) in enumerate(px):
-                    x, y = p % w, p // w
-                    if x >= fw or y >= fh:
-                        continue
-                    key = (y // patch, x // patch)
-                    sums[key] = sums.get(key, 0) + 299 * r + 587 * g + 114 * b
-                    cnts[key] = cnts.get(key, 0) + 1
-                for (py_, px_), s in sorted(sums.items()):
-                    out["asset_id"].append(aid)
-                    out["py"].append(py_)
-                    out["px"].append(px_)
-                    out["n_px"].append(cnts[(py_, px_)])
-                    out["luma_sum"].append(s)
-            yield pd.DataFrame(out)
+    def patches(aid, payload):
+        w, h, px = decode_bmp24(payload)
+        fw, fh = (w // patch) * patch, (h // patch) * patch
+        sums: dict[tuple[int, int], int] = {}
+        cnts: dict[tuple[int, int], int] = {}
+        for p, (r, g, b) in enumerate(px):
+            x, y = p % w, p // w
+            if x >= fw or y >= fh:
+                continue
+            key = (y // patch, x // patch)
+            sums[key] = sums.get(key, 0) + 299 * r + 587 * g + 114 * b
+            cnts[key] = cnts.get(key, 0) + 1
+        for (py_, px_), s in sorted(sums.items()):
+            yield aid, py_, px_, cnts[(py_, px_)], s
 
-    return assets.mapInPandas(batches, schema=BMP_PATCH_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), patches, BMP_PATCH_SCHEMA)
 
 
 GIF_MOTION_SCHEMA = (
@@ -1232,36 +1051,22 @@ def gif_motion_energy(assets: DataFrame) -> DataFrame:
     (299R + 587G + 114B). High motion_sum = cut or fast motion; zero =
     duplicated frame (the video-level exact-dup signal).
 
-    One Arrow-batched ``mapInPandas`` pass (shuffle-free); output rows =
+    One per-row pass (shuffle-free); output rows =
     frames-1 per asset. Every quantity is an exact integer — an SQL
     oracle replays the palette arithmetic bit-for-bit."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "frame_idx", "n_px", "changed_px", "motion_sum")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                _w, _h, pal, frames = decode_gif(payload)
-                luma = [299 * r + 587 * g + 114 * b for (r, g, b) in pal]
-                prev = None
-                for fi, (_l, _t, fw, fh, _delay, idxs) in enumerate(frames):
-                    if prev is not None:
-                        changed = sum(1 for a, b in zip(prev, idxs) if a != b)
-                        motion = sum(
-                            abs(luma[a] - luma[b]) for a, b in zip(prev, idxs)
-                        )
-                        out["asset_id"].append(aid)
-                        out["frame_idx"].append(fi)
-                        out["n_px"].append(fw * fh)
-                        out["changed_px"].append(changed)
-                        out["motion_sum"].append(motion)
-                    prev = idxs
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype="int64" if k in ("asset_id", "motion_sum")
-                              else "int32") for k, v in out.items()}
-            )
+    def motion(aid, payload):
+        _w, _h, pal, frames = decode_gif(payload)
+        luma = [299 * r + 587 * g + 114 * b for (r, g, b) in pal]
+        prev = None
+        for fi, (_l, _t, fw, fh, _delay, idxs) in enumerate(frames):
+            if prev is not None:
+                changed = sum(1 for a, b in zip(prev, idxs) if a != b)
+                energy = sum(abs(luma[a] - luma[b]) for a, b in zip(prev, idxs))
+                yield aid, fi, fw * fh, changed, energy
+            prev = idxs
 
-    return assets.mapInPandas(batches, schema=GIF_MOTION_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), motion, GIF_MOTION_SCHEMA)
 
 
 BMP_EDGE_SCHEMA = (
@@ -1279,33 +1084,21 @@ def bmp_edge_energy(assets: DataFrame) -> DataFrame:
     quantity is an exact integer — an SQL oracle replays the pixel
     arithmetic bit-for-bit.
 
-    One Arrow-batched ``mapInPandas`` pass over payloads (shuffle-free);
+    One per-row pass over payloads (shuffle-free);
     output is one row per asset; no pixel array crosses the driver."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "width", "height",
-                "h_energy", "v_energy", "n_h_pairs", "n_v_pairs")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_bmp24(payload)
-                gray = [299 * r + 587 * g + 114 * b for (r, g, b) in px]
-                he = ve = 0
-                for p, gv in enumerate(gray):
-                    if (p % w) < w - 1:
-                        he += abs(gray[p + 1] - gv)
-                    if (p // w) < h - 1:
-                        ve += abs(gray[p + w] - gv)
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["h_energy"].append(he)
-                out["v_energy"].append(ve)
-                out["n_h_pairs"].append((w - 1) * h)
-                out["n_v_pairs"].append(w * (h - 1))
-            yield pd.DataFrame(out)
+    def edges(aid, payload):
+        w, h, px = decode_bmp24(payload)
+        gray = [299 * r + 587 * g + 114 * b for (r, g, b) in px]
+        he = ve = 0
+        for p, gv in enumerate(gray):
+            if (p % w) < w - 1:
+                he += abs(gray[p + 1] - gv)
+            if (p // w) < h - 1:
+                ve += abs(gray[p + w] - gv)
+        yield aid, w, h, he, ve, (w - 1) * h, w * (h - 1)
 
-    return assets.mapInPandas(batches, schema=BMP_EDGE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), edges, BMP_EDGE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1577,23 +1370,12 @@ def jpeg_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction via the REAL baseline JPEG decoder:
     dimensions, exact grayscale mean (6 dp), compressed payload size."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "width", "height", "n_pixels",
-                "mean_gray", "compressed_bytes")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_gray(payload)
-                n = w * h
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                out["mean_gray"].append(round(sum(px) / n, 6) if n else 0.0)
-                out["compressed_bytes"].append(len(payload))
-            yield pd.DataFrame(out)
+    def features(aid, payload):
+        w, h, px = decode_jpeg_gray(payload)
+        n = w * h
+        yield aid, w, h, n, round(sum(px) / n, 6) if n else 0.0, len(payload)
 
-    return assets.mapInPandas(batches, schema=JPEG_FEATURE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), features, JPEG_FEATURE_SCHEMA)
 
 
 def synthesize_jpeg_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1609,24 +1391,15 @@ def synthesize_jpeg_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     edge-replicated padding (partial blocks stay constant because the pad
     replicates the block's own edge)."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            payloads = []
-            for i in ids_:
-                # w stops at 15: no reachable w·h is 2^7·5^k, the class
-                # where an odd pixel sum lands exactly on a 6-dp half
-                # boundary and Python/DuckDB round() could fork
-                w, h = 8 + i % 8, 8 + i % 5
-                px = [
-                    (3 * i + 7 * (x // 8) + 11 * (y // 8)) % 256
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(encode_jpeg_gray(w, h, px))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def synthesize(i):
+        # w stops at 15: no reachable w·h is 2^7·5^k, the class where an odd
+        # pixel sum lands exactly on a 6-dp half boundary and Python/DuckDB
+        # round() could fork
+        w, h = 8 + i % 8, 8 + i % 5
+        px = [(3 * i + 7 * (x // 8) + 11 * (y // 8)) % 256 for y in range(h) for x in range(w)]
+        yield i, encode_jpeg_gray(w, h, px)
 
-    return ids.select(id_col).mapInPandas(batches, schema="asset_id bigint, payload binary")
+    return per_row(ids.select(id_col), synthesize, ASSET_PAYLOAD_SCHEMA)
 
 # --------------------------------------------------------------------------
 # Baseline COLOR JPEG (T.81 sequential DCT, YCbCr 4:2:0) — pure stdlib+numpy
@@ -2042,30 +1815,17 @@ def jpeg_color_features(assets: DataFrame) -> DataFrame:
     collide). Per-term bound 800·1.67e7 ≈ 1.3e10, per-asset < 1e13:
     int64-safe."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "asset_id", "width", "height", "n_pixels",
-                "sum_r", "sum_g", "sum_b", "sig")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                w, h, px = decode_jpeg_color(payload)
-                sr = sg = sb = sig = 0
-                for p, (r, g, b) in enumerate(px):
-                    sr += r
-                    sg += g
-                    sb += b
-                    sig += (p + 1) * (r + 256 * g + 65536 * b)
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-                out["sig"].append(sig)
-            yield pd.DataFrame(out)
+    def features(aid, payload):
+        w, h, px = decode_jpeg_color(payload)
+        sr = sg = sb = sig = 0
+        for p, (r, g, b) in enumerate(px):
+            sr += r
+            sg += g
+            sb += b
+            sig += (p + 1) * (r + 256 * g + 65536 * b)
+        yield aid, w, h, w * h, sr, sg, sb, sig
 
-    return assets.mapInPandas(batches, schema=JPEG_COLOR_FEATURE_SCHEMA)
+    return per_row(assets.select("asset_id", "payload"), features, JPEG_COLOR_FEATURE_SCHEMA)
 
 
 def synthesize_jpeg_color_assets(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2086,23 +1846,14 @@ def synthesize_jpeg_color_assets(ids: DataFrame, id_col: str = "doc_id") -> Data
     parquet layout of the id source — output content is per-row
     deterministic, so partitioning cannot change the result."""
 
-    def batches(it: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids_ = pdf[id_col].tolist()
-            payloads = []
-            for i in ids_:
-                w, h = 16 + i % 17, 16 + i % 9
-                px = [
-                    _JPEG_COLOR_SRC[(3 * i + 5 * (x // 16) + 7 * (y // 16)) % 64]
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(encode_jpeg_color(w, h, px))
-            yield pd.DataFrame({"asset_id": ids_, "payload": payloads})
+    def synthesize(i):
+        w, h = 16 + i % 17, 16 + i % 9
+        px = [
+            _JPEG_COLOR_SRC[(3 * i + 5 * (x // 16) + 7 * (y // 16)) % 64]
+            for y in range(h)
+            for x in range(w)
+        ]
+        yield i, encode_jpeg_color(w, h, px)
 
     npart = ids.sparkSession.sparkContext.defaultParallelism
-    return (
-        ids.select(id_col)
-        .repartition(npart)
-        .mapInPandas(batches, schema="asset_id bigint, payload binary")
-    )
+    return per_row(ids.select(id_col).repartition(npart), synthesize, ASSET_PAYLOAD_SCHEMA)

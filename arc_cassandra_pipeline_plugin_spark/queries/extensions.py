@@ -651,13 +651,12 @@ FROM documents
 """,
 )
 def multimodal_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column pipeline: text → utf-8 payload → Arrow-batched
-    mapInPandas feature kernel → byte length + sha-256. Certifies the
-    binary plumbing end-to-end against the oracle."""
+    """Binary-column pipeline: text → utf-8 payload → byte length +
+    sha-256, both Spark builtins (``length``, ``sha2``), so no Python
+    worker runs. Certifies the binary plumbing end-to-end against the
+    oracle."""
     assets = M.documents_as_assets(load_table(spark, sf_dir, "documents"))
-    return M.extract_features(assets, with_feature=False).select(
-        "asset_id", "n_bytes", "checksum"
-    )
+    return M.payload_checksums(assets).select("asset_id", "n_bytes", "checksum")
 
 
 def _features_oracle(dim: int = 8) -> str:
@@ -846,7 +845,9 @@ def multimodal_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row un-padding and re-ordering), with per-asset dimensions and channel
     means certified against the oracle's direct re-derivation of the pixel
     formula. PNG has its own real decoder (multimodal_png_roundtrip);
-    JPEG remains gated on codec libs."""
+    JPEG remains gated on codec libs. Both the encode and the decode run
+    as Python kernels through ``functions.per_row``, so this query also
+    certifies the Arrow Python path: rows in, typed Arrow batches out."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     assets = M.synthesize_bmp_assets(docs)
     return M.bmp_features(assets)
@@ -2692,7 +2693,7 @@ FROM f
 """,
 )
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling through the vectorized Arrow mapInPandas kernel
+    """Frame sampling through the per-row fan-out kernel
     (operators/multimodal.sample_frames), certified byte-for-byte: the
     fixture payload is ASCII so DuckDB's substr over the text replays the
     kernel's byte slicing exactly, and md5 over the emitted frame payloads
@@ -4253,7 +4254,7 @@ def multimodal_bmp_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula re-derivation. This is the tokenization step of an image
     transformer pipeline with every reduction in exact integers.
 
-    Scale shape: synth + patchify are two shuffle-free Arrow mapInPandas
+    Scale shape: synth + patchify are two shuffle-free per-row Arrow
     passes; output fan-out is pixels/4 rows per asset."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return M.bmp_patches(M.synthesize_bmp_assets(docs), patch=2)
@@ -4302,7 +4303,7 @@ def multimodal_gif_motion(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames' indices then the same per-mil BT.601 weighting — all
     integers, no rounding anywhere).
 
-    Scale shape: synth + motion are two shuffle-free Arrow mapInPandas
+    Scale shape: synth + motion are two shuffle-free per-row Arrow
     passes; output is frames-1 rows per asset."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return M.gif_motion_energy(M.synthesize_gif_assets(docs))

@@ -185,19 +185,21 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
-def test_multimodal_resize_plumbing(spark):
+def test_extract_features_null_payload_counts_as_empty(spark):
+    import hashlib
+
     from arc_cassandra_pipeline_plugin_spark.operators import multimodal as M
 
-    docs = _docs(spark, [(1, "payload one"), (2, "payload two")])
-    assets = M.documents_as_assets(
-        docs.withColumnsRenamed({"doc_id": "doc_id", "text": "text"})
-        .withColumn("lang", F.lit("en"))
-        .select("doc_id", "text")
+    assets = spark.createDataFrame(
+        [(1, "x", None), (2, "x", bytearray(b"ab"))],
+        "asset_id bigint, media_type string, payload binary",
     )
-    resized = M.resize_images(assets, max_px=256)
-    rows = resized.collect()
-    assert all(r["resize_to"] == 256 for r in rows)
-    assert set(resized.columns) == set(assets.columns) | {"resize_to"}
+    rows = {r["asset_id"]: r for r in M.extract_features(assets).collect()}
+    assert (rows[1]["n_bytes"], rows[1]["checksum"], rows[1]["feature"]) == (
+        0, hashlib.sha256(b"").hexdigest(), [0.0] * 8
+    )
+    assert (rows[2]["n_bytes"], rows[2]["checksum"]) == (2, hashlib.sha256(b"ab").hexdigest())
+    assert rows[2]["feature"] == M._fake_feature(b"ab")
 
 
 def test_multimodal_frame_sampling(spark):

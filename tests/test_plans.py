@@ -188,6 +188,16 @@ def test_no_accidental_cartesian_anywhere(spark, name):
     assert_no_cartesian(df)
 
 
+def test_python_workers_only_where_a_codec_needs_one(spark):
+    """Byte counts and checksums are Spark builtins: ``multimodal_checksums``
+    plans no Python exec node. A codec roundtrip still runs its kernels
+    through the Arrow Python path."""
+    python_nodes = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+    plan = explain_str(REGISTRY["multimodal_checksums"].fn(spark, SF_SMALL), "simple")
+    assert not [n for n in python_nodes if n in plan], plan
+    assert has_node(REGISTRY["multimodal_bmp_roundtrip"].fn(spark, SF_SMALL), "MapInArrow")
+
+
 def test_window_topk_uses_group_limit_pushdown(spark):
     """Spark ≥3.5 pushes rn<=k through the shuffle as WindowGroupLimit."""
     df = REGISTRY["window_topk_per_group"].fn(spark, SF_SMALL)

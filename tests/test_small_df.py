@@ -1,6 +1,8 @@
 """``functions.small_df``: driver-built frames round-trip every value type
 the call sites pass, keep the type checks of ``createDataFrame``, and plan
-as a JVM ``LocalRelation`` (no Python worker, no job to collect)."""
+as a JVM ``LocalRelation`` (no Python worker, no job to collect).
+``functions.per_row``, which lays out its output batches the same way, is
+tested here too."""
 
 from __future__ import annotations
 
@@ -11,7 +13,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import types as T
 
-from arc_cassandra_pipeline_plugin_spark.functions import small_df
+from arc_cassandra_pipeline_plugin_spark.functions import per_row, small_df
 from tests.conftest import SF_SMALL, spark_jobs
 
 _DDL = (
@@ -124,6 +126,36 @@ def test_small_df_is_a_jvm_local_relation(spark):
     rows, jobs = spark_jobs(spark, df.collect)
     assert jobs == 0
     assert [r["k"] for r in rows] == list(range(25))
+
+
+@pytest.mark.parametrize(
+    "rows, want",
+    [
+        pytest.param([], [], id="empty-input"),
+        pytest.param([(0, b"x")], [], id="row-yields-nothing"),
+        pytest.param(
+            [(3, b"ab"), (1, None)],
+            [(1, 0, None), (3, 0, b"ab"), (3, 1, b"ab"), (3, 2, b"ab")],
+            id="fan-out",
+        ),
+        pytest.param([(2, b""), (-1, b"")], ValueError, id="fn-raises"),
+    ],
+)
+def test_per_row(spark, rows, want):
+    def fan_out(k, b):  # nested: the worker cannot import a test module
+        if k < 0:
+            raise ValueError(f"bad row {k}")
+        for i in range(k):
+            yield k, i, b
+
+    src = small_df(spark, rows, "k BIGINT, b BINARY")
+    out = per_row(src, fan_out, "k BIGINT, i INT, b BINARY")
+    assert out.schema == T.StructType.fromDDL("k BIGINT, i INT, b BINARY")
+    if want is ValueError:
+        with pytest.raises(Exception, match="bad row -1"):
+            out.collect()
+    else:
+        assert sorted(out.collect()) == want
 
 
 def test_events_grid_dbscan_job_count(spark):

@@ -24,9 +24,11 @@ Usage:
 With several names, one session runs them in turn and a closing
 per-query table lists the jobs of every trial and the median wall.
 
-Default fixture is the bench's split sf0.1 twin (what BENCH_r*.json
-measures). ``--plan OUT`` additionally writes ``explain('formatted')`` to
-OUT (the plans/r11 evidence files).
+The fixture directory is ``--sf-dir``, else ``$SPARK_GRAFT_SF_DIR``, else
+the raw sf0.1 fixture (one file and one row group per table, the layout
+the benchmark measures). The event log is deleted once parsed.
+``--plan OUT`` additionally writes ``explain('formatted')`` to OUT (the
+plans/r11 evidence files).
 """
 
 from __future__ import annotations
@@ -179,11 +181,10 @@ def main() -> int:
     if args.plan and (len(args.names) > 1 or args.names[0].startswith("pipeline:")):
         ap.error("--plan takes a single query name")
 
-    from bench import _split_fixture_dir  # noqa: E402
     from arc_cassandra_pipeline_plugin_spark.queries import load_all  # noqa: E402
     from arc_cassandra_pipeline_plugin_spark.sources import get_spark  # noqa: E402
 
-    sf_dir = args.sf_dir or _split_fixture_dir("/root/testdata/sf0.1")
+    sf_dir = args.sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR") or "/root/testdata/sf0.1"
     registry = load_all()
     pipelines = [n for n in args.names if n.startswith("pipeline:")]
 
@@ -249,6 +250,7 @@ def main() -> int:
     trial_jobs = {
         name: [sum(run_jobs[name, i].values()) for i in range(args.trials)] for name in walls
     }
+    shutil.rmtree(event_dir, ignore_errors=True)
 
     print(f"\nqueries={' '.join(args.names)} sf_dir={sf_dir}")
     for name in walls:
