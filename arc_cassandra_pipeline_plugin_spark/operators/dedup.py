@@ -499,19 +499,22 @@ def incremental_dedup(
     )
 
 
-def _star_replay(rows: list, max_iter: int) -> tuple[dict, bool]:
-    """Driver replay of :func:`connected_components_star`'s rounds over its
-    collected edge list (symmetric, no self-loops, no NULLs): the same
-    large-star then small-star re-links and the same ``max_iter``; the
-    fixed point is tested on the exact edge set, which the distributed
-    path detects through its (count, bit_xor) checksum of that set.
-    Returns (node -> component label, converged)."""
+def _star_replay(pairs, max_iter: int) -> dict:
+    """Driver replay of :func:`connected_components_star`'s rounds over a
+    collected pair list — the one driver CC of the star operator and of
+    the queries that replay it over their own collect. Pairs holding a
+    NULL and self-loops are dropped and the rest symmetrized, as the
+    operator's edge checkpoint does; then the same large-star then
+    small-star re-links run under the same ``max_iter``. The fixed point
+    is tested on the exact edge set, which the distributed path detects
+    through its (count, bit_xor) checksum of that set. Returns node ->
+    component label (a node of no edge is absent) and warns, as the
+    distributed rounds do, when ``max_iter`` is reached first."""
 
     def sym(es) -> set:
         return {(u, v) for u, v in es if u != v} | {(v, u) for u, v in es if u != v}
 
-    e = set(rows)
-    converged = False
+    e = sym([(u, v) for u, v in pairs if u is not None and v is not None])
     for _ in range(max_iter):
         m: dict = {}
         for u, v in e:
@@ -523,13 +526,25 @@ def _star_replay(rows: list, max_iter: int) -> tuple[dict, bool]:
                 ms[u] = min(ms[u], v) if u in ms else v
         new = sym({(v, ms[u]) for u, v in e1 if v < u} | set(ms.items()))
         if new == e:
-            converged = True
             break
         e = new
+    else:
+        _warn_star_unconverged(max_iter)
     label: dict = {}
     for u, v in e:
         label[u] = min(label.get(u, u), v)
-    return label, converged
+    return label
+
+
+def _warn_star_unconverged(max_iter: int) -> None:
+    import warnings
+
+    warnings.warn(
+        f"connected_components_star did not reach a fixed point in "
+        f"{max_iter} rounds (O(log n) expected — check for pathological input)",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def connected_components_star(
@@ -592,58 +607,47 @@ def connected_components_star(
 
     rows = driver_rows(edges, sig[0])
     if rows is not None:
-        label, converged = _star_replay(rows, max_iter)
-        out = _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
+        label = _star_replay(rows, max_iter)
+        return _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
+    for _ in range(max_iter):
+        # large-star: m(u) over the FULL neighborhood; re-link big neighbors
+        m_large = edges.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
+        )
+        large = (
+            edges.filter(F.col("v") > F.col("u"))
+            .join(m_large, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # LAZY mid-round checkpoint: the large-star output feeds the
+        # small-star half of the SAME job (one scheduler floor per
+        # round, not two), while the lazy pin keeps one RDD identity
+        # for the three small-star references so the large-star
+        # subtree is not recomputed per reference
+        edges = _symmetrize(large).localCheckpoint(eager=False)
+
+        # small-star: m over the small-side neighborhood (v <= u) plus u
+        small_side = edges.filter(F.col("v") < F.col("u"))
+        m_small = small_side.groupBy("u").agg(F.min("v").alias("m"))
+        relink = (
+            small_side.join(m_small, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(m_small.select(F.col("u"), F.col("m").alias("v")))
+        )
+        edges, new_sig = _checkpoint_signed(_symmetrize(relink))
+
+        if new_sig == sig:
+            break
+        sig = new_sig
     else:
-        converged = False
-        for _ in range(max_iter):
-            # large-star: m(u) over the FULL neighborhood; re-link big neighbors
-            m_large = edges.groupBy("u").agg(
-                F.least(F.min("v"), F.first("u")).alias("m")
-            )
-            large = (
-                edges.filter(F.col("v") > F.col("u"))
-                .join(m_large, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # LAZY mid-round checkpoint: the large-star output feeds the
-            # small-star half of the SAME job (one scheduler floor per
-            # round, not two), while the lazy pin keeps one RDD identity
-            # for the three small-star references so the large-star
-            # subtree is not recomputed per reference
-            edges = _symmetrize(large).localCheckpoint(eager=False)
-
-            # small-star: m over the small-side neighborhood (v <= u) plus u
-            small_side = edges.filter(F.col("v") < F.col("u"))
-            m_small = small_side.groupBy("u").agg(F.min("v").alias("m"))
-            relink = (
-                small_side.join(m_small, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(m_small.select(F.col("u"), F.col("m").alias("v")))
-            )
-            edges, new_sig = _checkpoint_signed(_symmetrize(relink))
-
-            if new_sig == sig:
-                converged = True
-                break
-            sig = new_sig
-        # fixed point is a star forest: every node's min neighbor IS the
-        # component min; emit center nodes too (they neighbor their satellites)
-        labels = edges.groupBy("u").agg(F.min("v").alias("m"))
-        out = labels.select(
-            F.col("u").alias("doc_id"),
-            F.least(F.col("u"), F.col("m")).alias("cluster_id"),
-        )
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star did not reach a fixed point in "
-            f"{max_iter} rounds (O(log n) expected — check for pathological input)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return out
+        _warn_star_unconverged(max_iter)
+    # fixed point is a star forest: every node's min neighbor IS the
+    # component min; emit center nodes too (they neighbor their satellites)
+    labels = edges.groupBy("u").agg(F.min("v").alias("m"))
+    return labels.select(
+        F.col("u").alias("doc_id"),
+        F.least(F.col("u"), F.col("m")).alias("cluster_id"),
+    )
 
 
 #: all-pairs bitmask verification is gated on the vocabulary fitting a

@@ -998,6 +998,28 @@ WHERE n1.n_name <> n2.n_name
 GROUP BY 1, 2
 """
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) supplier nation → customer nation, one row per
+    international lineitem: the join and filter of ``_TRADE_EDGES_SQL``
+    before its rollup, shared by the trade-graph queries (the fact joins
+    orders and customer; supplier and both nation sides broadcast)."""
+    nation = load_table(spark, sf_dir, "nation")
+    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
+    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
+        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+    )
+
 
 def _pagerank_oracle() -> str:
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank_oracle_sql
@@ -1019,31 +1041,17 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated from the same constants (see operators/graph.py)."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import pagerank
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
-        # snapshot the rolled-up edge list (<= |nations|^2 rows) BEFORE
-        # iterating: each synchronous round references the edges again, so
-        # without this the full fact join sits in the lineage once per
-        # round and the corpus is scanned three times
-        .localCheckpoint(eager=True)
     )
-    # the vertex set is the 25-nation dimension, so the three rounds replay
-    # on the driver over the collected ≤|V|² edge rollup (distributed they
-    # are ~25 local-mode jobs of ~60 ms scheduler floor for a 25-row vector)
+    # pagerank pins the rollup in its own lazy checkpoint, which its
+    # driver probe and its distributed rounds both read, so the fact join
+    # runs once. The vertex set is the 25-nation dimension, so the three
+    # rounds replay on the driver over the collected ≤|V|² edge rollup
+    # (distributed they are ~25 local-mode jobs of ~60 ms scheduler floor
+    # for a 25-row vector)
     pr = pagerank(edges, iters=3, damping=0.85)
     return pr.select(
         F.col("node").alias("nation"), F.round("rank", 8).alias("pagerank")
@@ -1071,20 +1079,8 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation)."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import bfs_levels
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .select("src", "dst")
     )
     # 25-nation dimension graph: frontier expansion replays on the driver
@@ -1112,20 +1108,8 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges whose reverse edge also exists (does country A buy from everyone
     it sells to?). One self-join on the swapped key pair — edge-keyed
     shuffle, a 1-row answer; the census sibling of the triangle count."""
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     eg = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
@@ -4005,20 +3989,8 @@ def graph_sssp_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
     member of the iterative-graph family next to BFS (unweighted hops)."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import sssp_cheapest
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
         .select(
@@ -4063,20 +4035,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     family as pagerank/SSSP/BFS; no driver-side graph state."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import label_propagation
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4158,20 +4118,8 @@ def graph_hits_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical rounds unrolled as DuckDB CTEs)."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import hits
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4203,20 +4151,8 @@ def graph_hash_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing (cur, step) instead of drawing rand()."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import hash_random_walk
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4268,20 +4204,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression — no float ever enters an aggregate. Degree tables are
     vertex-sized (broadcastable); the only corpus-scale work is the edge
     scan."""
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     e = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
@@ -4339,20 +4263,8 @@ def graph_ktruss_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     support, identical rounds unrolled as the DuckDB oracle."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import ktruss_edges
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4403,20 +4315,8 @@ def graph_kcore_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic, work shrinks monotonically."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import kcore_vertices
 
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     e0 = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4467,19 +4367,8 @@ def graph_ppr_asia(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     edges = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4547,20 +4436,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, the bounded-hop BFS census (never materializing beyond the
     horizon). All counting is exact integers; the scalar edge cut is the
     declared 1-row broadcast."""
-    nation = load_table(spark, sf_dir, "nation")
-    n1_ = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2_ = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     e0 = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1_), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2_), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4690,20 +4567,8 @@ def graph_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window over the |V|-row distinct-vertex table (dimension-bounded
     here; at web scale swap in the two-phase global rank). The 1-row
     vertex count is the declared scalar broadcast."""
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("src"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("dst"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     e = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("src") != F.col("dst"))
+        _trade_edges(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -4803,27 +4668,31 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     components of core cells) documented in place of per-point border
     assignment.
 
-    Scale shape: one map-side-combinable groupBy to |grid| cells;
-    everything after runs on the (bounded) core-cell set — neighbor
-    edges come from a +-1-offset explode + equi-join on the value
-    bucket (never an all-pairs cell join at the Spark side), and the
-    component step is the large-star/small-star CC operator — O(log n)
-    rounds on ANY diameter, so the certified labels are the true
-    transitive closure even on a long chain of adjacent core cells
-    (plain min-label propagation hit max_iter on this grid's
-    path-shaped cell graph). The core-cell edge set is bounded by the
-    grid, so the operator replays its rounds on the driver over one
-    collect of the checkpointed edges instead of one Spark job per
-    round. Point data is scanned exactly once: the cell aggregate is one
-    eager ``localCheckpoint`` whose Observation carries the point total
-    (``coalesce(sum(cnt), 0)``), and the probes, the right side and the
-    final join all read that checkpoint.
+    Scale shape: one map-side-combinable groupBy to |grid| cells, pinned
+    by a lazy ``localCheckpoint`` and probed by ``functions.driver_rows``
+    (one ``limit(cap + 1)`` collect); the point data is scanned exactly
+    once, by that aggregate. Within the cap the whole tail runs on the
+    driver over the collected cells: the point total, the core test, the
+    +-1 value-bucket / +-1 hour neighbour pairs, the components (the star
+    CC operator's own replay, ``dedup._star_replay``) and the per-cluster
+    roll-up, returned as one ``small_df`` — a few hundred rows need no
+    Spark job each. Past the cap the same steps run distributed over the
+    checkpoint: the total is one aggregate over it (an Observation on a
+    limit-collect is partial), neighbour edges come from a +-1-offset
+    explode + equi-join on the value bucket (never an all-pairs cell
+    join), and the components come from ``connected_components_star`` —
+    O(log n) rounds on ANY diameter, so the certified labels are the true
+    transitive closure even on a long chain of adjacent core cells (plain
+    min-label propagation hit max_iter on this grid's path-shaped cell
+    graph). On both paths a core cell with a NULL value bucket or hour
+    has a NULL cell id, forms no pair, and lands in the one NULL
+    ``cluster_id`` group.
 
     Determinism: floor(value/10) is an exactly-rounded IEEE op; all
     thresholds and labels are integers."""
-    from pyspark.sql import Observation
-
+    from arc_cassandra_pipeline_plugin_spark.functions import driver_rows, small_df
     from arc_cassandra_pipeline_plugin_spark.operators.dedup import (
+        _star_replay,
         connected_components_star,
     )
 
@@ -4831,14 +4700,36 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") / 10.0).cast("bigint").alias("vb"),
         F.hour("ts").cast("bigint").alias("hb"),
     )
-    obs = Observation()
     cells = (
         ev.groupBy("vb", "hb")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .observe(obs, F.coalesce(F.sum("cnt"), F.lit(0)).alias("total"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    total = obs.get["total"]
+    rows = driver_rows(cells)
+    if rows is not None:
+        total = sum(cnt for _, _, cnt in rows)
+        core = [(vb, hb, cnt) for vb, hb, cnt in rows if cnt * 600 > total]
+        grid = {(vb, hb) for vb, hb, _ in core if vb is not None and hb is not None}
+        pairs = [
+            (vb * 24 + hb, vb2 * 24 + hb2)
+            for vb, hb in grid
+            for vb2 in (vb - 1, vb, vb + 1)
+            for hb2 in (hb - 1, hb, hb + 1)
+            if (vb2, hb2) in grid and vb * 24 + hb < vb2 * 24 + hb2
+        ]
+        label = _star_replay(pairs, 30)
+        clusters: dict = {}
+        for vb, hb, cnt in core:
+            cell = vb * 24 + hb if (vb, hb) in grid else None
+            acc = clusters.setdefault(label.get(cell, cell), [0, 0])
+            acc[0] += 1
+            acc[1] += cnt
+        return small_df(
+            spark,
+            [(k, n, p) for k, (n, p) in clusters.items()],
+            "cluster_id BIGINT, n_cells BIGINT NOT NULL, n_points BIGINT",
+        )
+    total = cells.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0]
     core = cells.filter(F.col("cnt") * 600 > F.lit(total)).select(
         (F.col("vb") * 24 + F.col("hb")).alias("cell"), "vb", "hb", "cnt"
     )

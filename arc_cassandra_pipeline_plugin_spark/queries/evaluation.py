@@ -939,20 +939,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact rollup broadcasts the dimensions; the triangle
     join shuffles on vertex ids; both censuses reduce to 1 row and
     cross-join as broadcast scalars (declared scalar_broadcast)."""
-    nation = load_table(spark, sf_dir, "nation")
-    n1 = nation.select(F.col("n_nationkey").alias("sk"), F.col("n_name").alias("a"))
-    n2 = nation.select(F.col("n_nationkey").alias("ck"), F.col("n_name").alias("b"))
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    directed = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .select("a", "b")
+    from arc_cassandra_pipeline_plugin_spark.queries.analytics import _trade_edges
+
+    directed = _trade_edges(spark, sf_dir).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
     )
     und = (
         directed.union(directed.select(F.col("b").alias("a"), F.col("a").alias("b")))

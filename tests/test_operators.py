@@ -508,6 +508,23 @@ def test_cc_unconverged_run_same_on_both_paths(spark, monkeypatch):
     assert len({c for _, c in star["driver"]}) > 1  # really unconverged
 
 
+def test_star_replay_shared_helper():
+    """The one driver star-CC replay (the operator's and events_grid_dbscan's)
+    drops NULL pairs and self-loops, symmetrizes, and warns when it stops
+    at ``max_iter`` before the fixed point."""
+    import warnings
+
+    import pytest
+
+    pairs = [(i + 1, i) for i in range(200)] + [(7, None), (None, 3), (500, 500)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # converged: no warning
+        assert D._star_replay(pairs, 30) == {i: 0 for i in range(201)}
+    with pytest.warns(RuntimeWarning, match="fixed point in 2 rounds"):
+        label = D._star_replay(pairs, 2)
+    assert len(set(label.values())) > 1  # really unconverged
+
+
 def test_star_cc_bounded_graph_job_count(spark, monkeypatch):
     """Guard against the per-round job tax: one bounded
     connected_components_star call, result collected, stays within 4

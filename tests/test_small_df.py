@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.functions import per_row, small_df
-from tests.conftest import SF_SMALL, spark_jobs
+from tests.conftest import SF_SMALL, distributed, spark_jobs
 
 _DDL = (
     "i INT, b BIGINT, s STRING, d DOUBLE, m DECIMAL(12,3), dt DATE, "
@@ -159,14 +159,64 @@ def test_per_row(spark, rows, want):
 
 
 def test_events_grid_dbscan_job_count(spark):
-    """One scan of the points into a checkpoint whose Observation carries
-    the total, a driver-replayed component step, and a return leg with no
-    job: 9 jobs for build + collect (14 when a count job and three cell
-    aggregates each scanned the points and the labels came back through a
-    Python worker)."""
+    """One scan of the points into the lazily checkpointed cell grid, one
+    bounded collect of it, and a driver-built result with no job to
+    collect: 2 jobs for build + collect (9 when the core filter, the
+    neighbour join, the component step and the roll-up ran as Spark jobs
+    over the cell aggregate)."""
     from arc_cassandra_pipeline_plugin_spark.queries import load_all
 
     q = load_all()["events_grid_dbscan"]
     q.fn(spark, SF_SMALL).collect()  # schema and fixture caches warm
     _, jobs = spark_jobs(spark, lambda: q.fn(spark, SF_SMALL).collect())
-    assert jobs <= 9, jobs
+    assert jobs <= 2, jobs
+
+
+def _dbscan_paths(monkeypatch):
+    """events_grid_dbscan's driver tail, then its distributed tail (a
+    negative driver cap, with the driver CC replay raising if it runs)."""
+    from arc_cassandra_pipeline_plugin_spark.operators import dedup as D
+
+    yield "driver"
+    with distributed(monkeypatch, D, "_star_replay"):
+        yield "distributed"
+
+
+def _dbscan(spark, sf_dir):
+    from arc_cassandra_pipeline_plugin_spark.queries import load_all
+
+    df = load_all()["events_grid_dbscan"].fn(spark, sf_dir)
+    return df.schema, sorted(df.collect(), key=lambda r: (r[0] is None, r[0]))
+
+
+def test_events_grid_dbscan_past_the_cap_same_rows_and_schema(spark, monkeypatch):
+    results = {path: _dbscan(spark, SF_SMALL) for path in _dbscan_paths(monkeypatch)}
+    assert results["driver"] == results["distributed"]
+    assert len(results["driver"][1]) > 1
+
+
+def test_events_grid_dbscan_null_cells_same_on_both_paths(spark, monkeypatch, tmp_path):
+    """A NULL value or ts gives a NULL cell: it forms no pair, and every
+    such core cell lands in one NULL cluster. Hour 23 and hour 0 are not
+    neighbours (no wrap); a cell under the density threshold is dropped."""
+    from pyspark.sql import functions as F
+
+    cells = [  # (value, hour, points)
+        (5.0, 0, 3), (15.0, 1, 3),  # adjacent diagonally: one cluster
+        (5.0, 23, 3),  # hour 23 does not wrap onto hour 0
+        (55.0, 23, 3), (65.0, 0, 3),  # consecutive cell ids, not adjacent
+        (105.0, 12, 1200),
+        (205.0, 5, 1),  # 1 * 600 <= total: not core
+        (None, 1, 3), (15.0, None, 3), (None, None, 3),
+    ]
+    rows = [(v, h) for v, h, n in cells for _ in range(n)]
+    events = spark.createDataFrame(rows, "value DOUBLE, h INT").select(
+        "value", F.timestamp_seconds(F.col("h") * 3600).alias("ts")
+    )
+    events.write.parquet(str(tmp_path / "events.parquet"))
+    want = [(0, 2, 6), (23, 1, 3), (143, 1, 3), (144, 1, 3), (252, 1, 1200), (None, 3, 9)]
+    results = {}
+    for path in _dbscan_paths(monkeypatch):
+        results[path] = _dbscan(spark, str(tmp_path))
+        assert [tuple(r) for r in results[path][1]] == want, path
+    assert results["driver"][0] == results["distributed"][0]

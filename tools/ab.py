@@ -7,7 +7,10 @@ which side runs first, then prints per end-to-end metric of
 median delta and the change's win count (ties count for neither side).
 ``gain`` is ``yes`` when the change wins at least nine tenths of the
 pairs and its median beats the parent's by more than the parent's IQR —
-the rule a claimed speed-up has to meet.
+the rule a claimed speed-up has to meet. A second table gives each
+workload item's warm wall per side (the median over a run's warm passes,
+read from the ``item_walls=`` dict ``run.py`` prints before its JSON),
+so an A/B shows which item moved.
 
 Usage (from any directory):
   python tools/ab.py PARENT CHANGE --workload iterative_sf01 -n 10 --first-seed 11
@@ -19,6 +22,7 @@ the table goes to stdout at the end.
 from __future__ import annotations
 
 import argparse
+import ast
 import json
 import os
 import statistics
@@ -28,15 +32,27 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: int) -> dict:
-    """One benchmark run in ``checkout``; its metrics as name -> value."""
+def run_once(checkout: str, workload: str, seed: int, seconds: int) -> tuple[dict, dict]:
+    """One benchmark run in ``checkout``: its metrics as name -> value, and
+    each item's median warm-pass wall as item -> seconds."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
         cwd=checkout, check=True, capture_output=True, text=True,
     )
-    result = json.loads(out.stdout.strip().splitlines()[-1])
-    return {k: m["value"] for k, m in result["metrics"].items()}
+    lines = out.stdout.strip().splitlines()
+    result = json.loads(lines[-1])
+    return {k: m["value"] for k, m in result["metrics"].items()}, item_walls(lines)
+
+
+def item_walls(lines: list[str]) -> dict:
+    """item -> median warm wall from the ``perfbench workload=… item_walls=…``
+    line (each item's list starts with its cold pass, which is skipped)."""
+    for line in lines:
+        if line.startswith("perfbench workload=") and " item_walls=" in line:
+            walls = ast.literal_eval(line.split(" item_walls=", 1)[1])
+            return {k: statistics.median(v[1:]) for k, v in walls.items() if v[1:]}
+    return {}
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -75,6 +91,27 @@ def report(metrics: list[dict], workload: str, seeds: list[int], pairs: list[dic
     return "\n".join(lines)
 
 
+def item_report(pairs: list[dict]) -> str:
+    """Markdown table of each item's median warm wall per side over
+    ``pairs`` (side -> item -> seconds, one pair per seed)."""
+    lines = [
+        "| item | parent q1 / median / q3 | change q1 / median / q3 | median delta |",
+        "|---|---|---|---|",
+    ]
+    for item in sorted({i for p in pairs for i in p["parent"]}):
+        a = [p["parent"][item] for p in pairs if item in p["parent"]]
+        b = [p["change"][item] for p in pairs if item in p["change"]]
+        if not a or not b:
+            continue
+        qa, qb = quartiles(a), quartiles(b)
+        lines.append(
+            f"| `{item}` | {qa[0]:.3g} / {qa[1]:.3g} / {qa[2]:.3g} "
+            f"| {qb[0]:.3g} / {qb[1]:.3g} / {qb[2]:.3g} "
+            f"| {qb[1] - qa[1]:+.3g} ({(qb[1] - qa[1]) / qa[1]:+.1%}) |"
+        )
+    return "\n".join(lines)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent", help="checkout of the parent commit")
@@ -88,15 +125,19 @@ def main() -> int:
         bench = json.load(fh)
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     seeds = [args.first_seed + i for i in range(args.n)]
-    pairs = []
+    pairs, item_pairs = [], []
     for i, seed in enumerate(seeds):
-        pair = {}
+        pair, items = {}, {}
         for side in ("parent", "change") if i % 2 == 0 else ("change", "parent"):
-            pair[side] = run_once(sides[side], args.workload, seed, bench["run_seconds"])
-            rec = {"workload": args.workload, "seed": seed, "side": side, "metrics": pair[side]}
+            pair[side], items[side] = run_once(sides[side], args.workload, seed, bench["run_seconds"])
+            rec = {"workload": args.workload, "seed": seed, "side": side, "metrics": pair[side],
+                   "item_walls": items[side]}
             print(json.dumps(rec), file=sys.stderr, flush=True)
         pairs.append(pair)
+        item_pairs.append(items)
     print(report(bench["end_to_end"], args.workload, seeds, pairs))
+    print()
+    print(item_report(item_pairs))
     return 0
 
 
