@@ -499,7 +499,12 @@ def incremental_dedup(
     )
 
 
-def _star_replay(pairs, max_iter: int) -> dict:
+#: round cap of :func:`connected_components_star` — the operator's default
+#: and the one ``events_grid_dbscan`` replays its cell graph under
+STAR_MAX_ITER = 30
+
+
+def _star_replay(pairs, max_iter: int) -> tuple[dict, bool]:
     """Driver replay of :func:`connected_components_star`'s rounds over a
     collected pair list — the one driver CC of the star operator and of
     the queries that replay it over their own collect. Pairs holding a
@@ -507,14 +512,15 @@ def _star_replay(pairs, max_iter: int) -> dict:
     operator's edge checkpoint does; then the same large-star then
     small-star re-links run under the same ``max_iter``. The fixed point
     is tested on the exact edge set, which the distributed path detects
-    through its (count, bit_xor) checksum of that set. Returns node ->
-    component label (a node of no edge is absent) and warns, as the
-    distributed rounds do, when ``max_iter`` is reached first."""
+    through its (count, bit_xor) checksum of that set. Returns (node ->
+    component label, converged); a node of no edge is absent. A caller
+    that is not converged warns through :func:`_warn_star_unconverged`."""
 
     def sym(es) -> set:
         return {(u, v) for u, v in es if u != v} | {(v, u) for u, v in es if u != v}
 
     e = sym([(u, v) for u, v in pairs if u is not None and v is not None])
+    converged = False
     for _ in range(max_iter):
         m: dict = {}
         for u, v in e:
@@ -526,17 +532,18 @@ def _star_replay(pairs, max_iter: int) -> dict:
                 ms[u] = min(ms[u], v) if u in ms else v
         new = sym({(v, ms[u]) for u, v in e1 if v < u} | set(ms.items()))
         if new == e:
+            converged = True
             break
         e = new
-    else:
-        _warn_star_unconverged(max_iter)
     label: dict = {}
     for u, v in e:
         label[u] = min(label.get(u, u), v)
-    return label
+    return label, converged
 
 
 def _warn_star_unconverged(max_iter: int) -> None:
+    """Called from the body of the function whose caller the warning
+    should name: the operator or the query that ran the rounds."""
     import warnings
 
     warnings.warn(
@@ -551,7 +558,7 @@ def connected_components_star(
     pairs: DataFrame,
     col_a: str = "doc_a",
     col_b: str = "doc_b",
-    max_iter: int = 30,
+    max_iter: int = STAR_MAX_ITER,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -607,7 +614,9 @@ def connected_components_star(
 
     rows = driver_rows(edges, sig[0])
     if rows is not None:
-        label = _star_replay(rows, max_iter)
+        label, converged = _star_replay(rows, max_iter)
+        if not converged:
+            _warn_star_unconverged(max_iter)
         return _labels_df(pairs.sparkSession, label, edges.schema[0].dataType)
     for _ in range(max_iter):
         # large-star: m(u) over the FULL neighborhood; re-link big neighbors

@@ -1079,10 +1079,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation)."""
     from arc_cassandra_pipeline_plugin_spark.operators.graph import bfs_levels
 
-    edges = (
-        _trade_edges(spark, sf_dir)
-        .select("src", "dst")
-    )
+    edges = _trade_edges(spark, sf_dir)
     # 25-nation dimension graph: frontier expansion replays on the driver
     # over the collected distinct edge set
     lv = bfs_levels(edges, rounds=3)
@@ -1110,7 +1107,6 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, a 1-row answer; the census sibling of the triangle count."""
     eg = (
         _trade_edges(spark, sf_dir)
-        .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -4206,7 +4202,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan."""
     e = (
         _trade_edges(spark, sf_dir)
-        .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -4669,31 +4664,28 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment.
 
     Scale shape: one map-side-combinable groupBy to |grid| cells, pinned
-    by a lazy ``localCheckpoint`` and probed by ``functions.driver_rows``
-    (one ``limit(cap + 1)`` collect); the point data is scanned exactly
-    once, by that aggregate. Within the cap the whole tail runs on the
-    driver over the collected cells: the point total, the core test, the
-    +-1 value-bucket / +-1 hour neighbour pairs, the components (the star
-    CC operator's own replay, ``dedup._star_replay``) and the per-cluster
-    roll-up, returned as one ``small_df`` — a few hundred rows need no
-    Spark job each. Past the cap the same steps run distributed over the
-    checkpoint: the total is one aggregate over it (an Observation on a
-    limit-collect is partial), neighbour edges come from a +-1-offset
-    explode + equi-join on the value bucket (never an all-pairs cell
-    join), and the components come from ``connected_components_star`` —
-    O(log n) rounds on ANY diameter, so the certified labels are the true
-    transitive closure even on a long chain of adjacent core cells (plain
+    by a lazy ``localCheckpoint``; the point data is scanned exactly once,
+    by that aggregate. The core cells then come to the driver. Within the
+    cap, the one ``limit(cap + 1)`` collect of ``functions.driver_rows``
+    brings the whole grid, and the point total and core test run over it.
+    Past the cap, one aggregate over the checkpoint gives the total and
+    one collect brings the core cells: fewer than 600 of them, since each
+    holds more than 1/600 of a total they sum to at most. The tail
+    runs on the driver either way: the +-1 value-bucket / +-1 hour
+    neighbour pairs, the components (the star CC operator's own replay,
+    ``dedup._star_replay``, O(log n) rounds on ANY diameter — plain
     min-label propagation hit max_iter on this grid's path-shaped cell
-    graph). On both paths a core cell with a NULL value bucket or hour
-    has a NULL cell id, forms no pair, and lands in the one NULL
-    ``cluster_id`` group.
+    graph) and the per-cluster roll-up, returned as one ``small_df``. A
+    core cell with a NULL value bucket or hour has a NULL cell id, forms
+    no pair, and lands in the one NULL ``cluster_id`` group.
 
     Determinism: floor(value/10) is an exactly-rounded IEEE op; all
     thresholds and labels are integers."""
     from arc_cassandra_pipeline_plugin_spark.functions import driver_rows, small_df
     from arc_cassandra_pipeline_plugin_spark.operators.dedup import (
+        STAR_MAX_ITER,
         _star_replay,
-        connected_components_star,
+        _warn_star_unconverged,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -4709,51 +4701,30 @@ def events_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if rows is not None:
         total = sum(cnt for _, _, cnt in rows)
         core = [(vb, hb, cnt) for vb, hb, cnt in rows if cnt * 600 > total]
-        grid = {(vb, hb) for vb, hb, _ in core if vb is not None and hb is not None}
-        pairs = [
-            (vb * 24 + hb, vb2 * 24 + hb2)
-            for vb, hb in grid
-            for vb2 in (vb - 1, vb, vb + 1)
-            for hb2 in (hb - 1, hb, hb + 1)
-            if (vb2, hb2) in grid and vb * 24 + hb < vb2 * 24 + hb2
-        ]
-        label = _star_replay(pairs, 30)
-        clusters: dict = {}
-        for vb, hb, cnt in core:
-            cell = vb * 24 + hb if (vb, hb) in grid else None
-            acc = clusters.setdefault(label.get(cell, cell), [0, 0])
-            acc[0] += 1
-            acc[1] += cnt
-        return small_df(
-            spark,
-            [(k, n, p) for k, (n, p) in clusters.items()],
-            "cluster_id BIGINT, n_cells BIGINT NOT NULL, n_points BIGINT",
-        )
-    total = cells.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0]
-    core = cells.filter(F.col("cnt") * 600 > F.lit(total)).select(
-        (F.col("vb") * 24 + F.col("hb")).alias("cell"), "vb", "hb", "cnt"
-    )
-    probes = core.select(
-        "cell", "hb", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("d"),
-        (F.col("vb") + F.col("d")).alias("vb2"),
-    ).drop("d")
-    right = core.select(
-        F.col("vb").alias("vb2"), F.col("hb").alias("hb2"), F.col("cell").alias("cell2")
-    )
-    pairs = (
-        probes.join(right, "vb2")
-        .filter((F.abs(F.col("hb") - F.col("hb2")) <= 1) & (F.col("cell") < F.col("cell2")))
-        .select("cell", "cell2")
-    )
-    labels = connected_components_star(pairs, "cell", "cell2").select(
-        F.col("doc_id").alias("cell"), "cluster_id"
-    )
-    labeled = core.join(labels, "cell", "left").select(
-        "cnt", F.coalesce(F.col("cluster_id"), F.col("cell")).alias("cluster_id")
-    )
-    return labeled.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.sum("cnt").cast("bigint").alias("n_points"),
+    else:
+        total = cells.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0]
+        core = [tuple(r) for r in cells.filter(F.col("cnt") * 600 > F.lit(total)).collect()]
+    grid = {(vb, hb) for vb, hb, _ in core if vb is not None and hb is not None}
+    pairs = [
+        (vb * 24 + hb, vb2 * 24 + hb2)
+        for vb, hb in grid
+        for vb2 in (vb - 1, vb, vb + 1)
+        for hb2 in (hb - 1, hb, hb + 1)
+        if (vb2, hb2) in grid and vb * 24 + hb < vb2 * 24 + hb2
+    ]
+    label, converged = _star_replay(pairs, STAR_MAX_ITER)
+    if not converged:
+        _warn_star_unconverged(STAR_MAX_ITER)
+    clusters: dict = {}
+    for vb, hb, cnt in core:
+        cell = vb * 24 + hb if (vb, hb) in grid else None
+        acc = clusters.setdefault(label.get(cell, cell), [0, 0])
+        acc[0] += 1
+        acc[1] += cnt
+    return small_df(
+        spark,
+        [(k, n, p) for k, (n, p) in clusters.items()],
+        "cluster_id BIGINT, n_cells BIGINT NOT NULL, n_points BIGINT",
     )
 
 

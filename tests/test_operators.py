@@ -499,29 +499,31 @@ def test_cc_unconverged_run_same_on_both_paths(spark, monkeypatch):
     want = [(i, max(0, i - 25)) for i in range(201)]
     star = {}
     for path in _cc_paths(monkeypatch):
-        with pytest.warns(RuntimeWarning, match="max_iter=25"):
+        with pytest.warns(RuntimeWarning, match="max_iter=25") as plain:
             out = D.connected_components(pairs, max_iter=25)
         assert _cc_rows(out) == want, path
-        with pytest.warns(RuntimeWarning, match="fixed point in 2 rounds"):
+        with pytest.warns(RuntimeWarning, match="fixed point in 2 rounds") as rec:
             star[path] = _cc_rows(D.connected_components_star(pairs, max_iter=2))
+        # both paths name the operator's caller: one location, one warning
+        # under the default once-per-location filter
+        where = [w.filename for w in plain.list + rec.list if w.category is RuntimeWarning]
+        assert where == [__file__] * 2, path
     assert star["driver"] == star["distributed"]
     assert len({c for _, c in star["driver"]}) > 1  # really unconverged
 
 
 def test_star_replay_shared_helper():
     """The one driver star-CC replay (the operator's and events_grid_dbscan's)
-    drops NULL pairs and self-loops, symmetrizes, and warns when it stops
-    at ``max_iter`` before the fixed point."""
+    drops NULL pairs and self-loops, symmetrizes, and reports whether it
+    reached the fixed point within ``max_iter``; the caller warns."""
     import warnings
-
-    import pytest
 
     pairs = [(i + 1, i) for i in range(200)] + [(7, None), (None, 3), (500, 500)]
     with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)  # converged: no warning
-        assert D._star_replay(pairs, 30) == {i: 0 for i in range(201)}
-    with pytest.warns(RuntimeWarning, match="fixed point in 2 rounds"):
-        label = D._star_replay(pairs, 2)
+        warnings.simplefilter("error", RuntimeWarning)
+        assert D._star_replay(pairs, 30) == ({i: 0 for i in range(201)}, True)
+        label, converged = D._star_replay(pairs, 2)
+    assert not converged
     assert len(set(label.values())) > 1  # really unconverged
 
 

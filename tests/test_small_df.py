@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import types as T
 
 from arc_cassandra_pipeline_plugin_spark.functions import per_row, small_df
-from tests.conftest import SF_SMALL, distributed, spark_jobs
+from tests.conftest import SF_SMALL, spark_jobs
 
 _DDL = (
     "i INT, b BIGINT, s STRING, d DOUBLE, m DECIMAL(12,3), dt DATE, "
@@ -173,13 +173,15 @@ def test_events_grid_dbscan_job_count(spark):
 
 
 def _dbscan_paths(monkeypatch):
-    """events_grid_dbscan's driver tail, then its distributed tail (a
-    negative driver cap, with the driver CC replay raising if it runs)."""
-    from arc_cassandra_pipeline_plugin_spark.operators import dedup as D
+    """events_grid_dbscan with its whole cell grid collected, then past the
+    driver cap (a negative one: every grid is past it), where one total
+    aggregate and one collect of the core cells feed the same driver tail."""
+    from arc_cassandra_pipeline_plugin_spark import functions
 
     yield "driver"
-    with distributed(monkeypatch, D, "_star_replay"):
-        yield "distributed"
+    with monkeypatch.context() as m:
+        m.setattr(functions, "_DRIVER_EDGE_CAP", -1)
+        yield "past the cap"
 
 
 def _dbscan(spark, sf_dir):
@@ -191,7 +193,7 @@ def _dbscan(spark, sf_dir):
 
 def test_events_grid_dbscan_past_the_cap_same_rows_and_schema(spark, monkeypatch):
     results = {path: _dbscan(spark, SF_SMALL) for path in _dbscan_paths(monkeypatch)}
-    assert results["driver"] == results["distributed"]
+    assert results["driver"] == results["past the cap"]
     assert len(results["driver"][1]) > 1
 
 
@@ -219,4 +221,4 @@ def test_events_grid_dbscan_null_cells_same_on_both_paths(spark, monkeypatch, tm
     for path in _dbscan_paths(monkeypatch):
         results[path] = _dbscan(spark, str(tmp_path))
         assert [tuple(r) for r in results[path][1]] == want, path
-    assert results["driver"][0] == results["distributed"][0]
+    assert results["driver"][0] == results["past the cap"][0]
